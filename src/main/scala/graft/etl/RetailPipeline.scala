@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.format.GraftTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
@@ -251,16 +252,18 @@ object RetailPipeline {
         Seq("affiliate", "purchase_year", "purchase_month")
           .map(fact.col): _*),
       products, custZip)
-    spark.sparkContext.setJobDescription("retail-inc: silver write")
-    Sinks.writePartitioned(silverDf,
-      s"$warehouseDir/silver/purchase_all_info",
-      Seq("affiliate", "purchase_year", "purchase_month"),
-      prePartitioned = true)
+    labelled(spark, "retail-inc: silver write") {
+      Sinks.writePartitioned(silverDf,
+        s"$warehouseDir/silver/purchase_all_info",
+        Seq("affiliate", "purchase_year", "purchase_month"),
+        prePartitioned = true)
+    }
     val bronzeWrite = Future {
-      spark.sparkContext.setJobDescription("retail-inc: bronze write")
-      Sinks.writePartitioned(purchase,
-        s"$warehouseDir/bronze/purchase",
-        Seq("affiliate", "purchase_year", "purchase_month"))
+      labelled(spark, "retail-inc: bronze write") {
+        Sinks.writePartitioned(purchase,
+          s"$warehouseDir/bronze/purchase",
+          Seq("affiliate", "purchase_year", "purchase_month"))
+      }
     }
 
     try {
@@ -274,10 +277,11 @@ object RetailPipeline {
       Await.result(Future.sequence(
         marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
           Future {
-            spark.sparkContext.setJobDescription(s"retail-inc: $name")
-            Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
-              Seq("affiliate", "purchase_year", "purchase_month"))
-            name -> df.count()
+            labelled(spark, s"retail-inc: $name") {
+              Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
+                Seq("affiliate", "purchase_year", "purchase_month"))
+              name -> df.count()
+            }
           }
         }), Duration.Inf).toMap
     } finally Await.result(bronzeWrite, Duration.Inf)
@@ -291,10 +295,10 @@ object RetailPipeline {
     * what changes is the storage contract (manifests + snapshots +
     * time travel instead of directory listings), so benchmarking this
     * next to [[run]] tracks the format's write amplification at the
-    * reference's full 28.6M-row volume. */
+    * reference's full 28.6M-row volume. Returns each mart's row count
+    * as its overwrite recorded it (`output_rows`), not by a re-scan. */
   def runLake(spark: SparkSession, dataDir: String, warehouseDir: String,
       nPurchaseRows: Long): Map[String, Long] = {
-    import graft.format.GraftTable
     val products = productsInfo(spark, dataDir)
     val purchase = synthPurchase(spark, products, nPurchaseRows)
     val stats = Seq("purchase_year", "purchase_month")
@@ -313,8 +317,9 @@ object RetailPipeline {
     // partition-type cast — same multiset of rows as bronze.read()
     implicit val ec: ExecutionContext = ExecutionContext.global
     val bronzeWrite = Future {
-      spark.sparkContext.setJobDescription("retail-lake: bronze write")
-      bronze.overwrite(clustered(purchase, 32), numFiles = 0)
+      labelled(spark, "retail-lake: bronze write") {
+        bronze.overwrite(clustered(purchase, 32), numFiles = 0)
+      }
     }
 
     val custZip = customerWithZipcode(
@@ -336,8 +341,7 @@ object RetailPipeline {
     // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
     // throwing silver stage must not leave it writing under a caller
     // that unwinds and deletes the warehouse)
-    try {
-      spark.sparkContext.setJobDescription("retail-lake: silver write")
+    try labelled(spark, "retail-lake: silver write") {
       silverT.overwrite(silverDf, numFiles = 0)
     } finally Await.result(bronzeWrite, Duration.Inf)
 
@@ -347,13 +351,33 @@ object RetailPipeline {
     Await.result(Future.sequence(
       marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
         Future {
-          spark.sparkContext.setJobDescription(s"retail-lake: $name")
-          val t = GraftTable.openOrCreate(
-            spark, s"$warehouseDir/gold_$name", stats)
-          t.overwrite(clustered(df, 8), numFiles = 0)
-          name -> t.read().count()
+          labelled(spark, s"retail-lake: $name") {
+            val t = GraftTable.openOrCreate(
+              spark, s"$warehouseDir/gold_$name", stats)
+            name -> outputRowsOf(t, t.overwrite(clustered(df, 8), numFiles = 0))
+          }
         }
       }), Duration.Inf).toMap
+  }
+
+  /** Rows commit `v` of `t` wrote from its caller's frame — the
+    * `output_rows` overwrite and replaceWhere record — so a mart's
+    * count costs no recompute or re-scan job. */
+  private def outputRowsOf(t: GraftTable, v: Long): Long =
+    t.outputRows(v).getOrElse(throw new IllegalStateException(
+      s"${t.root} v$v recorded no output_rows"))
+
+  private val JobDescription = "spark.job.description"
+
+  /** Run `f` under the job-description `label`, then restore the
+    * thread's previous label (or none). A label set and never cleared
+    * stays on the thread: later stages and calls ran under it, and
+    * pool threads created meanwhile inherited it. */
+  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try f finally sc.setLocalProperty(JobDescription, prev)
   }
 
   /** The directory pipeline reads its partition keys back through
@@ -374,11 +398,12 @@ object RetailPipeline {
     * one atomic snapshot per table, zone maps confining the COW audit
     * to the window's files. The format-native restatement of the
     * reference's dynamic partition overwrite
-    * (`jb_de_enhancement_t0_fact_d2s.py:23`). */
+    * (`jb_de_enhancement_t0_fact_d2s.py:23`). Returns each mart's
+    * window row count as its replaceWhere recorded it (`output_rows`),
+    * not by recomputing the mart. */
   def runIncrementalLake(spark: SparkSession, dataDir: String,
       warehouseDir: String, nPurchaseRows: Long,
       year: String, month: String): Map[String, Long] = {
-    import graft.format.GraftTable
     val window = col("purchase_year") === year &&
       col("purchase_month") === month
     val products = productsInfo(spark, dataDir)
@@ -391,8 +416,9 @@ object RetailPipeline {
     // cast — the same rows the pruned re-read returns
     implicit val ec: ExecutionContext = ExecutionContext.global
     val bronzeWrite = Future {
-      spark.sparkContext.setJobDescription("retail-lake-inc: bronze")
-      bronze.replaceWhere(window, purchase, numFiles = 8)
+      labelled(spark, "retail-lake-inc: bronze") {
+        bronze.replaceWhere(window, purchase, numFiles = 8)
+      }
     }
 
     val custZip = customerWithZipcode(
@@ -402,8 +428,7 @@ object RetailPipeline {
     val silverT = GraftTable
       .forPath(spark, s"$warehouseDir/silver_purchase_all_info")
     // always await the in-flight bronze write (ADVICE r15)
-    try {
-      spark.sparkContext.setJobDescription("retail-lake-inc: silver")
+    try labelled(spark, "retail-lake-inc: silver") {
       silverT.replaceWhere(window, silverDf, numFiles = 8)
     } finally Await.result(bronzeWrite, Duration.Inf)
 
@@ -412,9 +437,10 @@ object RetailPipeline {
     Await.result(Future.sequence(
       marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
         Future {
-          val t = GraftTable.forPath(spark, s"$warehouseDir/gold_$name")
-          t.replaceWhere(window, df, numFiles = 4)
-          name -> df.count()
+          labelled(spark, s"retail-lake-inc: $name") {
+            val t = GraftTable.forPath(spark, s"$warehouseDir/gold_$name")
+            name -> outputRowsOf(t, t.replaceWhere(window, df, numFiles = 4))
+          }
         }
       }), Duration.Inf).toMap
   }
@@ -459,16 +485,18 @@ object RetailPipeline {
         Seq("affiliate", "purchase_year", "purchase_month")
           .map(fact.col): _*),
       products, custZip)
-    spark.sparkContext.setJobDescription("retail: silver write")
-    Sinks.writePartitioned(silverDf,
-      s"$warehouseDir/silver/purchase_all_info",
-      Seq("affiliate", "purchase_year", "purchase_month"),
-      prePartitioned = true)
+    labelled(spark, "retail: silver write") {
+      Sinks.writePartitioned(silverDf,
+        s"$warehouseDir/silver/purchase_all_info",
+        Seq("affiliate", "purchase_year", "purchase_month"),
+        prePartitioned = true)
+    }
     val bronzeWrite = Future {
-      spark.sparkContext.setJobDescription("retail: bronze write")
-      Sinks.writePartitioned(purchase,
-        s"$warehouseDir/bronze/purchase",
-        Seq("affiliate", "purchase_year", "purchase_month"))
+      labelled(spark, "retail: bronze write") {
+        Sinks.writePartitioned(purchase,
+          s"$warehouseDir/bronze/purchase",
+          Seq("affiliate", "purchase_year", "purchase_month"))
+      }
     }
     // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
     // throwing gold stage must not leave it running on a global-pool
@@ -493,10 +521,11 @@ object RetailPipeline {
     val written = Await.result(Future.sequence(
       marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
         Future {
-          spark.sparkContext.setJobDescription(s"retail: $name")
-          Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
-            Seq("affiliate", "purchase_year", "purchase_month"))
-          name -> spark.read.parquet(s"$warehouseDir/gold/$name").count()
+          labelled(spark, s"retail: $name") {
+            Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
+              Seq("affiliate", "purchase_year", "purchase_month"))
+            name -> spark.read.parquet(s"$warehouseDir/gold/$name").count()
+          }
         }
       }), Duration.Inf).toMap
     written.keys.foreach { name =>

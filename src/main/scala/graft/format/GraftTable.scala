@@ -163,7 +163,8 @@ final class GraftTable private (
         addedEntries = kv.get("added_entries").map(_.toLong),
         addedBytes = kv.get("added_bytes").map(_.toLong),
         foldDir = kv.get("fold_dir").filter(_.nonEmpty),
-        tsMillis = kv.get("ts").map(_.toLong))
+        tsMillis = kv.get("ts").map(_.toLong),
+        outputRows = kv.get("output_rows").map(_.toLong))
     }
 
   /** The table schema RECORDED AT COMMIT TIME (Delta's metadata
@@ -421,20 +422,26 @@ final class GraftTable private (
     }
   }
 
-  /** Raw data-file read. Evolved tables read under an EXPLICIT
-    * physical schema (physical names, recorded/WIDE types): files
-    * missing a column null-fill, files keeping a narrow pre-widening
-    * type promote in the vectorized reader, and extra (dropped)
-    * columns are ignored — `mergeSchema` can do none of that (it
-    * refuses int-vs-long merges outright). */
+  /** Raw data-file read under the snapshot's RECORDED schema, every
+    * field nullable — the connector's rule ([[graft.sources
+    * .GraftTableSource]] `resolve`), so both read paths agree on names,
+    * types and order, and no read opens a footer to plan (inference
+    * costs one Spark job per read). Files missing a column
+    * null-fill. Evolved tables read under PHYSICAL names with the
+    * recorded/WIDE types: files keeping a narrow pre-widening type
+    * promote in the vectorized reader, and extra (dropped) columns are
+    * ignored — `mergeSchema` can do none of that (it refuses
+    * int-vs-long merges outright). Only records that predate schema
+    * recording infer, by merging the files' footers. */
   private def readRaw(paths: Seq[String], version: Long): DataFrame =
-    if (!isEvolved(version)) spark.read.parquet(paths: _*)
-    else recordedSchema(version) match {
+    recordedSchema(version) match {
       case Some(s) =>
-        val phys = org.apache.spark.sql.types.StructType(s.fields.map(
-          f => org.apache.spark.sql.types.StructField(
-            GraftTable.physName(f), f.dataType, nullable = true)))
-        spark.read.schema(phys).parquet(paths: _*)
+        val evolved = isEvolved(version)
+        val read = org.apache.spark.sql.types.StructType(s.fields.map(f =>
+          if (evolved) org.apache.spark.sql.types.StructField(
+            GraftTable.physName(f), f.dataType, nullable = true)
+          else f.copy(nullable = true)))
+        spark.read.schema(read).parquet(paths: _*)
       case None =>
         spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
@@ -727,19 +734,10 @@ final class GraftTable private (
 
   /** The table with schemas MERGED across commits (schema evolution:
     * files written before a column existed surface it as null —
-    * q185's mergeSchema mechanics, owned by the format layer). */
-  def readMerged(version: Long = currentVersion): DataFrame = {
-    val paths = filePaths(version)
-    if (paths.isEmpty) spark.emptyDataFrame
-    // evolved tables must NOT mergeSchema (it refuses the int-vs-long
-    // merges widening creates) — readRaw's explicit physical schema
-    // already delivers merge semantics there
-    else if (isEvolved(version))
-      reconcile(applyDv(readRaw(paths, version), version), version)
-    else reconcile(applyDv(
-      spark.read.option("mergeSchema", "true").parquet(paths: _*),
-      version), version)
-  }
+    * q185's mergeSchema mechanics, owned by the format layer). Every
+    * [[read]] does this now: it reads under the recorded schema, which
+    * is that merge (or merges footers on records older than it). */
+  def readMerged(version: Long = currentVersion): DataFrame = read(version)
 
   /** Versions in `(fromVersion, toVersion]` a change-data reader must
     * materialize. Reorganization commits (`data_change=0` — compact/
@@ -1200,22 +1198,37 @@ final class GraftTable private (
     logStore.delete(s"${logDir(root)}/tag-$name.txt")
 
   /** Commit history, newest first: one row per snapshot still on
-    * disk (vacuum removes records behind its horizon). */
+    * disk (vacuum removes records behind its horizon). Columns:
+    *  - `version`, `op`, `parent`;
+    *  - `n_files`, `n_rows`: the live table after the commit (physical
+    *    rows; deletion vectors not subtracted);
+    *  - `commit_ts`: the RECORDED commit wall-clock — the timeline
+    *    `timestampAsOf` resolves against, surfaced so users pick
+    *    cutoffs from it (DESCRIBE HISTORY's contract); null on records
+    *    that predate it;
+    *  - `output_rows`: rows the commit wrote from the caller's frame
+    *    (Delta's `operationMetrics.numOutputRows`), recorded by
+    *    [[overwrite]] and [[replaceWhere]] — survivors a COW rewrite
+    *    carries over are not counted; null for other ops and older
+    *    records. */
   def history(): DataFrame = {
     import spark.implicits._
     (1L to currentVersion).flatMap { v =>
       try {
         val s = snapshot(v)
-        // commit_ts = the RECORDED commit wall-clock (r14) — the
-        // timeline `timestampAsOf` resolves against, surfaced so
-        // users pick cutoffs from it (DESCRIBE HISTORY's contract);
-        // null on pre-r14 records
         Some((s.version, s.op, s.parent, s.nFiles, s.nRows,
-          s.tsMillis.map(m => new java.sql.Timestamp(m))))
+          s.tsMillis.map(m => new java.sql.Timestamp(m)), s.outputRows))
       } catch { case _: java.nio.file.NoSuchFileException => None }
-    }.toDF("version", "op", "parent", "n_files", "n_rows", "commit_ts")
+    }.toDF("version", "op", "parent", "n_files", "n_rows", "commit_ts",
+      "output_rows")
       .orderBy(col("version").desc)
   }
+
+  /** Rows commit `version` wrote from the caller's frame — the
+    * `output_rows` of [[history]], a snapshot-record read. None for
+    * ops that do not record it. */
+  def outputRows(version: Long = currentVersion): Option[Long] =
+    if (version == 0) None else snapshot(version).outputRows
 
   // ---- writes --------------------------------------------------------
 
@@ -1305,7 +1318,8 @@ final class GraftTable private (
     val stats = writeData(df, numFiles, translate = false)
     commitWithRetry("overwrite", newSchema = Some(df.schema),
       evolvedOverride = Some(false),
-      deadColsOverride = Some(Set.empty))(_ => ReplaceAll(stats))
+      deadColsOverride = Some(Set.empty))(_ =>
+      ReplaceAll(stats, callerRows = true))
   }
 
   /** Copy-on-write delete of rows where `cond` IS TRUE: files with no
@@ -1471,13 +1485,46 @@ final class GraftTable private (
   def replaceWhere(cond: Column, df: DataFrame,
       numFiles: Int = 4): Long = {
     val replacement = writeData(df, numFiles)
-    commitWithRetry("replace", newSchema = Some(df.schema)) { parent =>
+    commitWithRetry("replace", newSchema = Some(df.schema),
+        outputRows = Some(entryRows(replacement))) { parent =>
       val d = cowSurvivors(parent, cond, numFiles)
-      d.copy(added = Some(d.added match {
-        case Some(a) => a.unionByName(replacement,
-          allowMissingColumns = true)
-        case None => replacement
-      }))
+      d.copy(added = Some(d.added.fold(replacement)(
+        concatEntries(_, replacement))))
+    }
+  }
+
+  /** Rows listed by manifest entries — driver arithmetic when they are
+    * a LocalRelation ([[writeData]]'s one-pass and small-commit
+    * results); one aggregate job otherwise (the two-pass write of a
+    * bloom-indexed or scheme'd table past [[GraftTable
+    * .SmallCommitFiles]]). */
+  private def entryRows(entries: DataFrame): Long =
+    entries.queryExecution.logical match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val i = lr.output.indexWhere(_.name == "row_count")
+        lr.data.map(_.getLong(i)).sum
+      case _ =>
+        entries.agg(coalesce(sum(col("row_count")), lit(0L))).head().getLong(0)
+    }
+
+  /** Two manifest-entry frames as one (`unionByName`, columns one side
+    * lacks null-filled). Two driver-local entry sets of one layout —
+    * what [[writeData]] returns for a replaceWhere's survivors and its
+    * replacement — become ONE LocalRelation: a Union is not a
+    * LocalRelation, so [[writeManifestDir]] would send it down its
+    * distributed path, a write job plus a read-back aggregate for a few
+    * dozen rows. */
+  private def concatEntries(a: DataFrame, b: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    (a.queryExecution.logical, b.queryExecution.logical) match {
+      case (la: LocalRelation, lb: LocalRelation)
+          if la.output.map(x => (x.name, x.dataType)) ==
+            lb.output.map(x => (x.name, x.dataType)) =>
+        org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, LocalRelation(
+          la.output.zip(lb.output).map { case (x, y) =>
+            x.withNullability(x.nullable || y.nullable) },
+          la.data ++ lb.data))
+      case _ => a.unionByName(b, allowMissingColumns = true)
     }
   }
 
@@ -2061,11 +2108,7 @@ final class GraftTable private (
     * locality, and stage the AddRemove delta. */
   private def rewriteSlice(parent: Long, paths: Array[String],
       numFiles: Int, clusterBy: Seq[String]): Delta = {
-    val raw =
-      if (isEvolved(parent))
-        readRaw(paths.toIndexedSeq.map(p => s"$root/$p"), parent)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(paths.toIndexedSeq.map(p => s"$root/$p"): _*)
+    val raw = readRaw(paths.toIndexedSeq.map(p => s"$root/$p"), parent)
     val rec = reconcile(minusDv(withRowId(raw), parent), parent)
     val dataCols = rec.columns.toIndexedSeq
       .filterNot(_.startsWith("_gt_"))
@@ -2384,7 +2427,8 @@ final class GraftTable private (
   private sealed trait Delta
   private case class AddRemove(added: Option[DataFrame] = None,
       removedPaths: Seq[String] = Nil) extends Delta
-  private case class ReplaceAll(entries: DataFrame) extends Delta
+  private case class ReplaceAll(entries: DataFrame,
+      callerRows: Boolean = false) extends Delta
   private case class UseList(version: Long) extends Delta
 
   /** Write `entries` as one immutable manifest dir for version `next`
@@ -2496,7 +2540,9 @@ final class GraftTable private (
           bytes = if (sbIdx < 0) -1L
             else lr.data.map(r =>
               if (r.isNullAt(sbIdx)) 0L else r.getLong(sbIdx)).sum)
-      case _ =>
+      // distributed entries: a write job plus a read-back aggregate,
+      // profiled apart so a commit that falls here is attributable
+      case _ => CommitProfile.time("manifest_job") {
         finalDf.write.parquet(s"${logDir(root)}/$dir")
         val truncCols = finalDf.columns.filter(_.startsWith("trunc_"))
         val truncAgg: Column =
@@ -2515,6 +2561,7 @@ final class GraftTable private (
           trunc = !t.isNullAt(2) && t.getInt(2) == 1,
           truncKnown = true,
           bytes = if (!hasBytes || t.isNullAt(3)) -1L else t.getLong(3))
+      }
     }
   }
 
@@ -2614,7 +2661,8 @@ final class GraftTable private (
       evolvedOverride: Option[Boolean] = None,
       deadColsOverride: Option[Set[String]] = None,
       addDeadCols: Set[String] = Set.empty,
-      extraKvs: Seq[String] = Nil)
+      extraKvs: Seq[String] = Nil,
+      outputRows: Option[Long] = None)
       (buildDelta: Long => Delta): Long = {
     import spark.implicits._
     var attempts = 0
@@ -2653,13 +2701,18 @@ final class GraftTable private (
       // addedBytesAt sees no new dir and charged the version ZERO
       // bytes, so a maxBytesPerTrigger stream admitted it for free)
       var addedBytesRec: Option[Long] = None
+      // rows written from the CALLER's frame (`output_rows=`, Delta's
+      // numOutputRows): a replaceWhere passes its replacement's count;
+      // an overwrite's is its one fresh dir's exact row count
+      var outputRowsRec = outputRows
       var list: Seq[ManifestRef] = buildDelta(parent) match {
-        case ReplaceAll(entries) =>
+        case ReplaceAll(entries, callerRows) =>
           fileSetChanged = true
           droppedLive = parentHadFiles
           val ref = writeManifestDir(entries, next)
           addedEntriesRec = Some(ref.entries)
           if (ref.bytes >= 0) addedBytesRec = Some(ref.bytes)
+          if (callerRows) outputRowsRec = Some(ref.rows)
           Seq(ref)
         case UseList(v) =>
           fileSetChanged = true
@@ -2959,6 +3012,7 @@ final class GraftTable private (
         (if (snapTrunc) Seq("stats_truncated=1") else Nil) ++
         addedEntriesRec.map(n => s"added_entries=$n").toSeq ++
         addedBytesRec.map(n => s"added_bytes=$n").toSeq ++
+        outputRowsRec.map(n => s"output_rows=$n").toSeq ++
         foldDirRec.map(d => s"fold_dir=$d").toSeq ++
         (if (evolvedFlag) Seq("evolved=1") else Nil) ++
         (if (deadCols.nonEmpty)
@@ -3220,7 +3274,10 @@ object GraftTable {
     // commit wall-clock (epoch millis), recorded since r14 — lets
     // timestamp travel binary-search records instead of LISTing the
     // whole log dir for mtimes; None on older records
-    tsMillis: Option[Long] = None)
+    tsMillis: Option[Long] = None,
+    // rows written from the caller's frame (overwrite/replaceWhere);
+    // None for other ops and older records
+    outputRows: Option[Long] = None)
 
   /** Ops whose commits REORGANIZE files without changing the table's
     * logical content (Delta's `dataChange=false`): a change-data-feed
@@ -3293,8 +3350,10 @@ object GraftTable {
   }
 
   /** Drop every cached entry for `root` — called by vacuum (snapshots
-    * behind the horizon stop being readable and their files go) and
-    * the catalog's DROP/RENAME TABLE (the root may be reused). */
+    * behind the horizon stop being readable and their files go), the
+    * catalog's DROP/RENAME TABLE (the root may be reused), and
+    * [[create]]/[[openOrCreate]] on a root with no commits (it may
+    * have been deleted and re-created). */
   private[graft] def invalidate(root: String): Unit = {
     snapCache.keySet.removeIf(_._1 == root)
     pathsCache.keySet.removeIf(_._1 == root)
@@ -3378,18 +3437,25 @@ object GraftTable {
       throw new IllegalStateException(
         s"GraftTable.create: $root already has commits " +
           s"(v${t.currentVersion}); use forPath/openOrCreate")
+    // a root with no commits may be a RE-CREATED one (deleted, then
+    // written again in this process): its v1 is a new table, so no
+    // snapshot, file list or schema cached for the old v1 may serve it
+    invalidate(root)
     t.append(df, numFiles)
     t
   }
 
   /** Open a table that may not have its first commit yet (streaming
-    * sinks start empty); declares the stats columns for writes. */
+    * sinks start empty); declares the stats columns for writes. A
+    * root with no commits drops its cached entries, as in [[create]]. */
   def openOrCreate(spark: SparkSession, root: String,
       statsCols: Seq[String], bloomCols: Seq[String] = Nil,
       bloomBits: Int = graft.functions.BloomFilterIndex.DefaultBits)
       : GraftTable = {
     LogStore.forRoot(root).mkdirs(logDir(root))
-    new GraftTable(spark, root, statsCols, bloomCols, bloomBits)
+    val t = new GraftTable(spark, root, statsCols, bloomCols, bloomBits)
+    if (t.currentVersion == 0) invalidate(root)
+    t
   }
 
   /** CHEAP metadata-only handle: no manifest probe, no directory

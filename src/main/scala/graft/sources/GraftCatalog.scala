@@ -652,7 +652,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             .fromString(t.message)))
         .toArray
     },
-    // commit log as a result set: version/op/parent/n_files/n_rows,
+    // commit log as a result set: GraftTable.history()'s columns,
     // newest first — `CALL cat.system.history('db.t')`
     "history" -> proc("history", StructType(Seq(
       StructField("version", DataTypes.LongType),
@@ -662,7 +662,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       StructField("n_rows", DataTypes.LongType),
       // the recorded commit wall-clock (r14) — what TIMESTAMP AS OF
       // resolves against; null on pre-r14 records
-      StructField("commit_ts", DataTypes.TimestampType))), Seq(
+      StructField("commit_ts", DataTypes.TimestampType),
+      // rows written from the caller's frame; null where not recorded
+      StructField("output_rows", DataTypes.LongType))), Seq(
       inParam("table", DataTypes.StringType))) { in =>
       tableForName(in.getUTF8String(0).toString).history()
         .collect().map(r => InternalRow(r.getLong(0),
@@ -670,7 +672,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             .fromString(r.getString(1)),
           r.getLong(2), r.getLong(3), r.getLong(4),
           if (r.isNullAt(5)) null
-          else r.getTimestamp(5).getTime * 1000L))
+          else r.getTimestamp(5).getTime * 1000L,
+          if (r.isNullAt(6)) null else r.getLong(6)))
     })
 
   override def loadProcedure(ident: Identifier): UnboundProcedure = {

@@ -422,6 +422,34 @@ class GraftTableSpec extends AnyFunSuite {
       GraftTable.create(spark, root, (1L to 10L).toDF("k"), Seq("k")))
   }
 
+  test("a table deleted and re-created at the same root in one process " +
+      "reads its own files and schema, not the cached ones") {
+    def rmRoot(root: String): Unit = {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(root)).deleteRecursively(); ()
+    }
+    val root = tmp()
+    GraftTable.create(spark, root, (1L to 10L).toDF("k"), Seq("k"),
+      numFiles = 1)
+    assert(GraftTable.forPath(spark, root).read().count() == 10L)
+    rmRoot(root)
+    GraftTable.create(spark, root,
+      (1L to 5L).map(k => (k, s"s$k")).toDF("k", "s"), Seq("k"),
+      numFiles = 1)
+    val again = GraftTable.forPath(spark, root).read()
+    assert(again.columns.toSeq == Seq("k", "s"))
+    assert(again.count() == 5L)
+    // the same through openOrCreate + overwrite (the lake tiers' path)
+    rmRoot(root)
+    val t = GraftTable.openOrCreate(spark, root, Seq("k"))
+    t.overwrite((1L to 3L).map(k => (k, k * 2.0)).toDF("k", "d"),
+      numFiles = 1)
+    val third = GraftTable.forPath(spark, root).read()
+    assert(third.columns.toSeq == Seq("k", "d"))
+    assert(third.as[(Long, Double)].collect().toSet ==
+      Set((1L, 2.0), (2L, 4.0), (3L, 6.0)))
+  }
+
   test("two writers racing the same parent both land: put-if-absent " +
       "picks one winner, the loser rebases onto it, no rows lost") {
     import scala.concurrent.{Await, Future}

@@ -113,6 +113,14 @@ class GtableSourceSpec extends AnyFunSuite {
       "the pre-column half must surface extra as null")
     assert(df.agg(sum(col("extra"))).head().getLong(0) ==
       (51L to 80L).map(_ * 2).sum)
+    // the native read takes the same recorded schema: same names,
+    // types and order as the connector, and the same rows
+    val api = t.read()
+    def shape(d: org.apache.spark.sql.DataFrame) =
+      d.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(shape(api) == shape(df))
+    assert(shape(api).map(_._1) == Seq("k", "name", "extra"))
+    assert(api.collect().toSet == df.collect().toSet)
   }
 
   test("runtime filtering: a broadcast join against a narrow dim " +
