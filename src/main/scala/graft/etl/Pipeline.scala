@@ -204,6 +204,19 @@ object Pipeline {
 
   // ---- Orchestration (D1–D4) ----------------------------------------
 
+  private val JobDescription = "spark.job.description"
+
+  /** Run `f` under the job-description `label`, then restore the
+    * thread's previous label (or none). A label set and never cleared
+    * stays on the thread: later stages and calls ran under it, and
+    * pool threads created meanwhile inherited it. */
+  private[etl] def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try f finally sc.setLocalProperty(JobDescription, prev)
+  }
+
   /** Full DAG: T0(fact ∥ dims) → T1 → T2(∥×4). Returns mart row counts
     * as a tiny run report. */
   def run(spark: SparkSession, cfg: Config): Map[String, Long] =
@@ -261,8 +274,8 @@ object Pipeline {
       .cache()
     try {
       val dims = Future(t0Dimensions(spark, cfg))
-      spark.sparkContext.setJobDescription("etl: fact cache")
-      fact.count() // materialize once before concurrent consumers
+      // materialize once before concurrent consumers
+      labelled(spark, "etl: fact cache")(fact.count())
       Await.result(dims, Duration.Inf) // T1 broadcasts the written dims
 
       // Same rows t1Silver computes for this window; partition-column
@@ -273,8 +286,7 @@ object Pipeline {
         .withColumn("ship_month", col("ship_month").cast("int"))
         .cache()
       try {
-        spark.sparkContext.setJobDescription("etl: silver cache")
-        silver.count()
+        labelled(spark, "etl: silver cache")(silver.count())
         // Overlapped writes are submitted ONLY once the silver cache
         // (the stage everything downstream reads) is materialized, and
         // the CRITICAL-path write (silver — registration waits on it)
@@ -288,15 +300,17 @@ object Pipeline {
         // the cache straight into the sink — one full-width exchange
         // per tier, not two.
         val silverWrite = Future {
-          spark.sparkContext.setJobDescription("etl: silver write")
-          Sinks.writePartitioned(silver,
-            s"${cfg.warehouseDir}/silver/fact_all_info", factPartitions)
+          labelled(spark, "etl: silver write") {
+            Sinks.writePartitioned(silver,
+              s"${cfg.warehouseDir}/silver/fact_all_info", factPartitions)
+          }
         }
         val bronzeWrite = Future {
-          spark.sparkContext.setJobDescription("etl: bronze write")
-          Sinks.writePartitioned(fact,
-            s"${cfg.warehouseDir}/bronze/fact", factPartitions,
-            prePartitioned = true)
+          labelled(spark, "etl: bronze write") {
+            Sinks.writePartitioned(fact,
+              s"${cfg.warehouseDir}/bronze/fact", factPartitions,
+              prePartitioned = true)
+          }
         }
         // every in-flight write is drained even when a stage throws
         // (ADVICE r15): the caller deletes the temp warehouse on
@@ -326,10 +340,11 @@ object Pipeline {
         // repartition on the partition columns (not coalesce(1)): same
         // one-file-per-dir layout, but the ~250 dirs are written by
         // parallel tasks instead of one sequential task.
-        spark.sparkContext.setJobDescription(s"etl: $name")
-        Sinks.writePartitioned(df, s"${cfg.warehouseDir}/gold/$name",
-          Seq("l_returnflag", "ship_year", "ship_month"))
-        name -> spark.read.parquet(s"${cfg.warehouseDir}/gold/$name").count()
+        labelled(spark, s"etl: $name") {
+          Sinks.writePartitioned(df, s"${cfg.warehouseDir}/gold/$name",
+            Seq("l_returnflag", "ship_year", "ship_month"))
+          name -> spark.read.parquet(s"${cfg.warehouseDir}/gold/$name").count()
+        }
       }
     })
     val res = Await.result(written, Duration.Inf).toMap

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.format.GraftTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
   StructType}
@@ -216,6 +216,15 @@ object RetailPipeline {
         .drop(custZip("customer_id"))
     })
 
+  /** Full golden DAG into a warehouse dir: bronze fact (partitioned,
+    * dynamic overwrite) → silver purchase_all_info → four gold marts,
+    * each registered persistently (`spark.table(mart)` in any session
+    * of the same catalog). Returns each mart's row count as its write
+    * counted it. */
+  def run(spark: SparkSession, dataDir: String, warehouseDir: String,
+      nPurchaseRows: Long): Map[String, Long] =
+    runDag(spark, dataDir, nPurchaseRows, Full, DirTier(warehouseDir))
+
   /** The reference's MONTHLY INCREMENTAL job shape over its own
     * schema: re-ingest ONE month of the fact, dynamic-overwrite only
     * that month's bronze/silver/gold partitions, recompute the marts
@@ -225,67 +234,12 @@ object RetailPipeline {
     * through partition-pruned scans; untouched months are never
     * rewritten or read. Mirrors the reference's EventBridge monthly
     * re-run (document/eventbridge.md:12, stepfunction.json DAG).
-    * Returns per-mart window row counts. */
+    * Returns each mart's window row count as its write counted it. */
   def runIncremental(spark: SparkSession, dataDir: String,
       warehouseDir: String, nPurchaseRows: Long,
-      year: String, month: String): Map[String, Long] = {
-    val window = col("purchase_year") === year &&
-      col("purchase_month") === month
-    val products = productsInfo(spark, dataDir)
-    // T0: the month's slice of the (deterministic) fact — in the
-    // reference this is the JDBC pushdown query's date window
-    val purchase = synthPurchase(spark, products, nPurchaseRows)
-      .where(window)
-    // silver first, bronze overlapping the small gold stage — the
-    // same contention-bounding order as [[run]] (one full-width
-    // partitioned write in flight at a time); the month's fact is
-    // recomputed with the read-back's inferred partition types
-    // instead of waiting for write + pruned re-read
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val custZip = customerWithZipcode(
-      customer(spark, dataDir), zipcode(spark, dataDir))
-    val fact = inferPartTypes(purchase)
-    // narrow-fact exchange before the broadcast joins, write
-    // pre-partitioned — same §2.3 shape as [[run]]
-    val silverDf = silver(
-      fact.repartition(spark.sparkContext.defaultParallelism,
-        Seq("affiliate", "purchase_year", "purchase_month")
-          .map(fact.col): _*),
-      products, custZip)
-    labelled(spark, "retail-inc: silver write") {
-      Sinks.writePartitioned(silverDf,
-        s"$warehouseDir/silver/purchase_all_info",
-        Seq("affiliate", "purchase_year", "purchase_month"),
-        prePartitioned = true)
-    }
-    val bronzeWrite = Future {
-      labelled(spark, "retail-inc: bronze write") {
-        Sinks.writePartitioned(purchase,
-          s"$warehouseDir/bronze/purchase",
-          Seq("affiliate", "purchase_year", "purchase_month"))
-      }
-    }
-
-    try {
-      val silverBack = spark.read
-        .parquet(s"$warehouseDir/silver/purchase_all_info")
-        .where(window)
-      // The four mart writes are independent outputs — run them as
-      // parallel jobs (guide §2.6: back-fill the tail; same D1 fan-out
-      // Pipeline.writeMarts has always used). Output files, rows, and
-      // dirs are identical to the serial loop.
-      Await.result(Future.sequence(
-        marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
-          Future {
-            labelled(spark, s"retail-inc: $name") {
-              Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
-                Seq("affiliate", "purchase_year", "purchase_month"))
-              name -> df.count()
-            }
-          }
-        }), Duration.Inf).toMap
-    } finally Await.result(bronzeWrite, Duration.Inf)
-  }
+      year: String, month: String): Map[String, Long] =
+    runDag(spark, dataDir, nPurchaseRows, Month(year, month),
+      DirTier(warehouseDir))
 
   /** The LAKEHOUSE-TIER variant of the full DAG (VERDICT r9 #8): every
     * tier lands as a [[graft.format.GraftTable]] instead of raw
@@ -298,67 +252,173 @@ object RetailPipeline {
     * reference's full 28.6M-row volume. Returns each mart's row count
     * as its overwrite recorded it (`output_rows`), not by a re-scan. */
   def runLake(spark: SparkSession, dataDir: String, warehouseDir: String,
-      nPurchaseRows: Long): Map[String, Long] = {
-    val products = productsInfo(spark, dataDir)
-    val purchase = synthPurchase(spark, products, nPurchaseRows)
-    val stats = Seq("purchase_year", "purchase_month")
-    // RANGE-cluster every tier on the window key (numFiles = 0
-    // preserves the clustering through writeData): per-file (year,
-    // month) envelopes stay disjoint, so the monthly replaceWhere's
-    // stats-pruned audit reads ONLY the window's files. A hash
-    // repartition here spreads every month across every file and
-    // turns each incremental into a full-table rewrite.
-    def clustered(df: DataFrame, n: Int) = df.repartitionByRange(
-      n, col("purchase_year"), col("purchase_month"))
-    val bronze = GraftTable.openOrCreate(
-      spark, s"$warehouseDir/bronze_purchase", stats)
-    // bronze commit overlaps the silver stage (see [[run]]): the fact
-    // is recomputed from the deterministic synth with the read-back's
-    // partition-type cast — same multiset of rows as bronze.read()
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val bronzeWrite = Future {
-      labelled(spark, "retail-lake: bronze write") {
-        bronze.overwrite(clustered(purchase, 32), numFiles = 0)
+      nPurchaseRows: Long): Map[String, Long] =
+    runDag(spark, dataDir, nPurchaseRows, Full, LakeTier(warehouseDir))
+
+  /** Monthly incremental through the lakehouse tier: ONE month of the
+    * fact is re-synthesized and [[graft.format.GraftTable
+    * .replaceWhere]]'d into each tier — delete-the-window + insert in
+    * one atomic snapshot per table, zone maps confining the COW audit
+    * to the window's files. The format-native restatement of the
+    * reference's dynamic partition overwrite
+    * (`jb_de_enhancement_t0_fact_d2s.py:23`). Returns each mart's
+    * window row count as its replaceWhere recorded it (`output_rows`),
+    * not by recomputing the mart. */
+  def runIncrementalLake(spark: SparkSession, dataDir: String,
+      warehouseDir: String, nPurchaseRows: Long,
+      year: String, month: String): Map[String, Long] =
+    runDag(spark, dataDir, nPurchaseRows, Month(year, month),
+      LakeTier(warehouseDir))
+
+  /** The slice of the fact a run loads: all of it, or one month. */
+  private sealed trait Window {
+    def slice(df: DataFrame): DataFrame = this match {
+      case Full => df
+      case m: Month => df.where(m.cond)
+    }
+  }
+  private case object Full extends Window
+  private final case class Month(year: String, month: String)
+      extends Window {
+    def cond: Column =
+      col("purchase_year") === year && col("purchase_month") === month
+  }
+
+  private val PartCols = Seq("affiliate", "purchase_year", "purchase_month")
+  private val Bronze = "bronze/purchase"
+  private val Silver = "silver/purchase_all_info"
+
+  /** One table of one run, opened once: silver is written and then
+    * read back through the same handle. */
+  private trait Table {
+    /** Writes `df`; returns the rows written. */
+    def write(df: DataFrame): Long
+    def readBack(): DataFrame
+  }
+
+  /** A storage tier: where the chain's tables land and every decision
+    * in which the tiers differ. Tables are named by their
+    * warehouse-relative directory ([[Bronze]], [[Silver]],
+    * `gold/<mart>`). */
+  private sealed trait Tier {
+    /** Job-description prefix of the run's stages. */
+    def label: String
+    /** Overlap order: bronze starts before the silver write and is
+      * awaited before gold (true), or starts after the silver write
+      * and is awaited after gold (false). */
+    def bronzeWithSilver: Boolean
+    /** The narrow fact laid out for the silver write. */
+    def silverInput(fact: DataFrame, window: Window): DataFrame
+    def table(spark: SparkSession, rel: String, window: Window): Table
+    def registerMarts(spark: SparkSession, marts: Iterable[String],
+        window: Window): Unit = ()
+  }
+
+  /** Hive-partitioned parquet directories, dynamic overwrite. */
+  private final case class DirTier(warehouseDir: String) extends Tier {
+    val label = "retail"
+    // STAGE ORDER (r16, VERDICT r15 #1): the silver write — the leg's
+    // critical path (gold reads it back) and its biggest single job —
+    // runs FIRST at full cluster width; the bronze write (an
+    // independent output) overlaps the SMALL gold aggregates instead
+    // of the silver encode. r15 overlapped bronze with silver, which
+    // under local FIFO scheduling queued the 28.6M-row silver job
+    // behind the 28.6M-row bronze job and doubled the concurrent
+    // partitioned-write demand (64 writer tasks on 32 cores) — the
+    // driver's independent run measured 171 s at 32 cores vs 120 s at
+    // 8, i.e. the overlap was net-negative exactly where write
+    // throughput, not idle cores, was the limit (guide §2.6: overlap
+    // fills idle capacity; it must not fight the critical path for
+    // it).
+    val bronzeWithSilver = false
+    // Exchange the NARROW fact on the sink's partition columns BEFORE
+    // the silver joins (guide §2.3 — shuffle fewer bytes): the dims
+    // broadcast (see [[silver]]), so the joined frame keeps this
+    // clustering and the write needs no second exchange — the old
+    // shape shuffled the POST-join rows, paying the category/customer
+    // description strings through the wire for the same final layout.
+    def silverInput(fact: DataFrame, window: Window): DataFrame =
+      fact.repartition(fact.sparkSession.sparkContext.defaultParallelism,
+        PartCols.map(fact.col): _*)
+    def table(spark: SparkSession, rel: String, window: Window): Table =
+      new Table {
+        private val path = s"$warehouseDir/$rel"
+        def write(df: DataFrame): Long = Sinks.writePartitioned(df, path,
+          PartCols, prePartitioned = rel == Silver)
+        def readBack(): DataFrame = window.slice(spark.read.parquet(path))
+      }
+    // Registration stays serial after the parallel mart writes: the
+    // embedded metastore serializes DDL anyway, and registration must
+    // see the finished directory. A re-run rewrites partitions of
+    // already-registered tables, so only the initial load registers.
+    override def registerMarts(spark: SparkSession,
+        marts: Iterable[String], window: Window): Unit =
+      if (window == Full) marts.foreach { m =>
+        // persistent (crawler-equivalent) registration: any OTHER
+        // session on the same metastore reads the mart by name, like
+        // the reference's Glue-catalog marts feeding Athena (SURVEY
+        // §2.13)
+        Sinks.registerPersistent(spark, m, s"$warehouseDir/gold/$m")
+      }
+  }
+
+  /** Every table a [[graft.format.GraftTable]]: an initial load is one
+    * atomic `overwrite` per table, a month one `replaceWhere`. */
+  private final case class LakeTier(warehouseDir: String) extends Tier {
+    val label = "retail-lake"
+    // the bronze commit overlaps the silver stage (the directory
+    // tier's opposite order; both were measured in r16)
+    val bronzeWithSilver = true
+    // Range-cluster the NARROW fact BEFORE the broadcast dim joins
+    // (the lake twin of the directory tier's narrow-fact exchange):
+    // broadcast joins preserve the child's partitioning, so the silver
+    // write inherits the clustering and needs no second exchange.
+    // Clustering the post-join frame instead re-executed the whole
+    // synth+join pipeline TWICE at this width — repartitionByRange's
+    // bounds sampler runs the full child, and with both dims broadcast
+    // there is no shuffle boundary below it to reuse — and shipped the
+    // wide joined rows (category/customer description strings) through
+    // the wire for the same final layout. A month's slice holds one
+    // (year, month), so its files' envelopes are disjoint from every
+    // other month's without clustering.
+    def silverInput(fact: DataFrame, window: Window): DataFrame =
+      window match {
+        case Full => clustered(fact, 32)
+        case _: Month => fact
+      }
+    def table(spark: SparkSession, rel: String, window: Window): Table = {
+      val root = s"$warehouseDir/${rel.replace('/', '_')}"
+      val gold = rel.startsWith("gold/")
+      val t = window match {
+        case Full => GraftTable.openOrCreate(spark, root,
+          Seq("purchase_year", "purchase_month"))
+        case _: Month => GraftTable.forPath(spark, root)
+      }
+      new Table {
+        def write(df: DataFrame): Long = outputRowsOf(t, window match {
+          // silver arrives range-clustered from silverInput
+          case Full => t.overwrite(
+            if (rel == Silver) df else clustered(df, if (gold) 8 else 32),
+            numFiles = 0)
+          case m: Month =>
+            t.replaceWhere(m.cond, df, numFiles = if (gold) 4 else 8)
+        })
+        def readBack(): DataFrame = window match {
+          case Full => t.read()
+          case m: Month => t.prunedWhere(m.cond)._1.where(m.cond)
+        }
       }
     }
-
-    val custZip = customerWithZipcode(
-      customer(spark, dataDir), zipcode(spark, dataDir))
-    val fact = inferPartTypes(purchase)
-    // Range-cluster the NARROW fact BEFORE the broadcast dim joins
-    // (the lake twin of [[run]]'s narrow-fact exchange): broadcast
-    // joins preserve the child's partitioning, so the silver write
-    // inherits the clustering and needs no second exchange. Clustering
-    // the post-join frame instead re-executed the whole synth+join
-    // pipeline TWICE at this width — repartitionByRange's bounds
-    // sampler runs the full child, and with both dims broadcast there
-    // is no shuffle boundary below it to reuse — and shipped the wide
-    // joined rows (category/customer description strings) through the
-    // wire for the same final layout.
-    val silverDf = silver(clustered(fact, 32), products, custZip)
-    val silverT = GraftTable.openOrCreate(
-      spark, s"$warehouseDir/silver_purchase_all_info", stats)
-    // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
-    // throwing silver stage must not leave it writing under a caller
-    // that unwinds and deletes the warehouse)
-    try labelled(spark, "retail-lake: silver write") {
-      silverT.overwrite(silverDf, numFiles = 0)
-    } finally Await.result(bronzeWrite, Duration.Inf)
-
-    val silverBack = silverT.read()
-    // parallel mart fan-out (guide §2.6) — four independent tables,
-    // each commit its own atomic snapshot; same rows either way
-    Await.result(Future.sequence(
-      marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
-        Future {
-          labelled(spark, s"retail-lake: $name") {
-            val t = GraftTable.openOrCreate(
-              spark, s"$warehouseDir/gold_$name", stats)
-            name -> outputRowsOf(t, t.overwrite(clustered(df, 8), numFiles = 0))
-          }
-        }
-      }), Duration.Inf).toMap
   }
+
+  /** RANGE-cluster on the window key (numFiles = 0 preserves the
+    * clustering through writeData): per-file (year, month) envelopes
+    * stay disjoint, so the monthly replaceWhere's stats-pruned audit
+    * reads ONLY the window's files. A hash repartition here spreads
+    * every month across every file and turns each incremental into a
+    * full-table rewrite. */
+  private def clustered(df: DataFrame, n: Int): DataFrame =
+    df.repartitionByRange(n, col("purchase_year"), col("purchase_month"))
 
   /** Rows commit `v` of `t` wrote from its caller's frame — the
     * `output_rows` overwrite and replaceWhere record — so a mart's
@@ -367,17 +427,66 @@ object RetailPipeline {
     t.outputRows(v).getOrElse(throw new IllegalStateException(
       s"${t.root} v$v recorded no output_rows"))
 
-  private val JobDescription = "spark.job.description"
-
-  /** Run `f` under the job-description `label`, then restore the
-    * thread's previous label (or none). A label set and never cleared
-    * stays on the thread: later stages and calls ran under it, and
-    * pool threads created meanwhile inherited it. */
-  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(label)
-    try f finally sc.setLocalProperty(JobDescription, prev)
+  /** The one bronze → silver → gold chain (stepfunction.json: T0 →
+    * T1 → T2 ∥×4) behind all four entry points. */
+  private def runDag(spark: SparkSession, dataDir: String, nRows: Long,
+      window: Window, tier: Tier): Map[String, Long] = {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val label = tier.label + (if (window == Full) "" else "-inc")
+    val products = productsInfo(spark, dataDir)
+    // T0: on a re-run, the month's slice of the (deterministic) fact —
+    // in the reference this is the JDBC pushdown query's date window
+    val purchase = window.slice(synthPurchase(spark, products, nRows))
+    // The frames below are built, and silver opened, on first use in
+    // the silver stage: on the lake tier the bronze write is already
+    // running while the driver analyzes them.
+    lazy val custZip = customerWithZipcode(
+      customer(spark, dataDir), zipcode(spark, dataDir))
+    // The fact is a deterministic hash synthesis, recomputed per
+    // writer instead of waiting for the bronze write and re-reading
+    // it. (Measured and REJECTED in r15: caching the synth — 115 s vs
+    // 84–89 s.) inferPartTypes reproduces the read-back's
+    // partition-type inference ("08" → 8), semantically load-bearing
+    // for the weekday UDF (see [[inferPartTypes]]); marts are
+    // byte-identical (RetailGoldenSpec pins them).
+    lazy val fact = inferPartTypes(purchase)
+    lazy val silverT = tier.table(spark, Silver, window)
+    def writeSilver(): Unit =
+      Pipeline.labelled(spark, s"$label: silver write") {
+        silverT.write(
+          silver(tier.silverInput(fact, window), products, custZip))
+        ()
+      }
+    // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
+    // throwing stage must not leave it writing on a global-pool thread
+    // while the caller unwinds and deletes the warehouse)
+    def overlappingBronze[T](stage: => T): T = {
+      val bronzeWrite = Future {
+        Pipeline.labelled(spark, s"$label: bronze write") {
+          tier.table(spark, Bronze, window).write(purchase)
+        }
+      }
+      try stage finally Await.result(bronzeWrite, Duration.Inf)
+    }
+    def gold(): Map[String, Long] = {
+      val silverBack = silverT.readBack()
+      // The four mart writes are independent outputs — run them as
+      // parallel jobs (guide §2.6; the D1 fan-out Pipeline.writeMarts
+      // has always used). Output files, rows, and dirs are identical
+      // to a serial loop, and each write returns the rows it wrote.
+      val counts = Await.result(Future.sequence(
+        marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
+          Future {
+            Pipeline.labelled(spark, s"$label: $name") {
+              name -> tier.table(spark, s"gold/$name", window).write(df)
+            }
+          }
+        }), Duration.Inf).toMap
+      tier.registerMarts(spark, counts.keys, window)
+      counts
+    }
+    if (tier.bronzeWithSilver) { overlappingBronze(writeSilver()); gold() }
+    else { writeSilver(); overlappingBronze(gold()) }
   }
 
   /** The directory pipeline reads its partition keys back through
@@ -391,149 +500,4 @@ object RetailPipeline {
   private def inferPartTypes(df: DataFrame): DataFrame = df
     .withColumn("purchase_year", col("purchase_year").cast("int"))
     .withColumn("purchase_month", col("purchase_month").cast("int"))
-
-  /** Monthly incremental through the lakehouse tier: ONE month of the
-    * fact is re-synthesized and [[graft.format.GraftTable
-    * .replaceWhere]]'d into each tier — delete-the-window + insert in
-    * one atomic snapshot per table, zone maps confining the COW audit
-    * to the window's files. The format-native restatement of the
-    * reference's dynamic partition overwrite
-    * (`jb_de_enhancement_t0_fact_d2s.py:23`). Returns each mart's
-    * window row count as its replaceWhere recorded it (`output_rows`),
-    * not by recomputing the mart. */
-  def runIncrementalLake(spark: SparkSession, dataDir: String,
-      warehouseDir: String, nPurchaseRows: Long,
-      year: String, month: String): Map[String, Long] = {
-    val window = col("purchase_year") === year &&
-      col("purchase_month") === month
-    val products = productsInfo(spark, dataDir)
-    val purchase = synthPurchase(spark, products, nPurchaseRows)
-      .where(window)
-    val bronze = GraftTable
-      .forPath(spark, s"$warehouseDir/bronze_purchase")
-    // bronze month-replace overlaps the silver stage (see [[run]]);
-    // the window's fact is recomputed with the read-back's partition
-    // cast — the same rows the pruned re-read returns
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val bronzeWrite = Future {
-      labelled(spark, "retail-lake-inc: bronze") {
-        bronze.replaceWhere(window, purchase, numFiles = 8)
-      }
-    }
-
-    val custZip = customerWithZipcode(
-      customer(spark, dataDir), zipcode(spark, dataDir))
-    val fact = inferPartTypes(purchase)
-    val silverDf = silver(fact, products, custZip)
-    val silverT = GraftTable
-      .forPath(spark, s"$warehouseDir/silver_purchase_all_info")
-    // always await the in-flight bronze write (ADVICE r15)
-    try labelled(spark, "retail-lake-inc: silver") {
-      silverT.replaceWhere(window, silverDf, numFiles = 8)
-    } finally Await.result(bronzeWrite, Duration.Inf)
-
-    val silverBack = silverT.prunedWhere(window)._1.where(window)
-    // parallel mart fan-out (guide §2.6) — independent tables
-    Await.result(Future.sequence(
-      marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
-        Future {
-          labelled(spark, s"retail-lake-inc: $name") {
-            val t = GraftTable.forPath(spark, s"$warehouseDir/gold_$name")
-            name -> outputRowsOf(t, t.replaceWhere(window, df, numFiles = 4))
-          }
-        }
-      }), Duration.Inf).toMap
-  }
-
-  /** Full golden DAG into a warehouse dir: bronze fact (partitioned,
-    * dynamic overwrite) → silver purchase_all_info → four gold marts,
-    * each registered. Returns mart row counts. */
-  def run(spark: SparkSession, dataDir: String, warehouseDir: String,
-      nPurchaseRows: Long): Map[String, Long] = {
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val products = productsInfo(spark, dataDir)
-    // STAGE ORDER (r16, VERDICT r15 #1): the silver write — the leg's
-    // critical path (gold reads it back) and its biggest single job —
-    // runs FIRST at full cluster width; the bronze write (an
-    // independent output) overlaps the SMALL gold aggregates instead
-    // of the silver encode. r15 overlapped bronze with silver, which
-    // under local FIFO scheduling queued the 28.6M-row silver job
-    // behind the 28.6M-row bronze job and doubled the concurrent
-    // partitioned-write demand (64 writer tasks on 32 cores) — the
-    // driver's independent run measured 171 s at 32 cores vs 120 s at
-    // 8, i.e. the overlap was net-negative exactly where write
-    // throughput, not idle cores, was the limit (guide §2.6: overlap
-    // fills idle capacity; it must not fight the critical path for
-    // it). The fact is a deterministic hash synthesis, recomputed per
-    // writer. (Measured and REJECTED in r15: caching the synth —
-    // 115 s vs 84–89 s.) inferPartTypes reproduces the read-back's
-    // partition-type inference ("08" → 8), semantically load-bearing
-    // for the weekday UDF (see [[inferPartTypes]]); marts are
-    // byte-identical (RetailGoldenSpec pins them).
-    val purchase = synthPurchase(spark, products, nPurchaseRows)
-    val custZip = customerWithZipcode(
-      customer(spark, dataDir), zipcode(spark, dataDir))
-    val fact = inferPartTypes(purchase)
-    // Exchange the NARROW fact on the sink's partition columns BEFORE
-    // the silver joins (guide §2.3 — shuffle fewer bytes): the dims
-    // broadcast (see [[silver]]), so the joined frame keeps this
-    // clustering and the write needs no second exchange — the old
-    // shape shuffled the POST-join rows, paying the category/customer
-    // description strings through the wire for the same final layout.
-    val silverDf = silver(
-      fact.repartition(spark.sparkContext.defaultParallelism,
-        Seq("affiliate", "purchase_year", "purchase_month")
-          .map(fact.col): _*),
-      products, custZip)
-    labelled(spark, "retail: silver write") {
-      Sinks.writePartitioned(silverDf,
-        s"$warehouseDir/silver/purchase_all_info",
-        Seq("affiliate", "purchase_year", "purchase_month"),
-        prePartitioned = true)
-    }
-    val bronzeWrite = Future {
-      labelled(spark, "retail: bronze write") {
-        Sinks.writePartitioned(purchase,
-          s"$warehouseDir/bronze/purchase",
-          Seq("affiliate", "purchase_year", "purchase_month"))
-      }
-    }
-    // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
-    // throwing gold stage must not leave it running on a global-pool
-    // thread while the caller unwinds and deletes the warehouse)
-    try runGold(spark, warehouseDir, fact, custZip)
-    finally Await.result(bronzeWrite, Duration.Inf)
-  }
-
-  /** Gold tier of [[run]]: read silver back, write + register the four
-    * marts (split out so [[run]]'s fact cache scopes cleanly). */
-  private def runGold(spark: SparkSession, warehouseDir: String,
-      fact: DataFrame, custZip: DataFrame): Map[String, Long] = {
-    implicit val ec: ExecutionContext = ExecutionContext.global
-
-    val silverBack =
-      spark.read.parquet(s"$warehouseDir/silver/purchase_all_info")
-    // The four mart writes are independent outputs — run them as
-    // parallel jobs (guide §2.6; the D1 fan-out Pipeline.writeMarts
-    // has always used). Registration stays serial afterwards: the
-    // embedded metastore serializes DDL anyway, and registration must
-    // see the finished directory.
-    val written = Await.result(Future.sequence(
-      marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
-        Future {
-          labelled(spark, s"retail: $name") {
-            Sinks.writePartitioned(df, s"$warehouseDir/gold/$name",
-              Seq("affiliate", "purchase_year", "purchase_month"))
-            name -> spark.read.parquet(s"$warehouseDir/gold/$name").count()
-          }
-        }
-      }), Duration.Inf).toMap
-    written.keys.foreach { name =>
-      // persistent (crawler-equivalent) registration: any OTHER session
-      // on the same metastore reads the mart by name, like the
-      // reference's Glue-catalog marts feeding Athena (SURVEY §2.13)
-      Sinks.registerPersistent(spark, name, s"$warehouseDir/gold/$name")
-    }
-    written
-  }
 }

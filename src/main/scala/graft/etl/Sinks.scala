@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Partitioned parquet sinks with the reference's write semantics
   * (SURVEY §2.1-S6/S7/S8).
@@ -25,10 +26,16 @@ object Sinks {
     * then creates all ~250 partition dirs SEQUENTIALLY, turning a
     * parallel write into a file-creation crawl. Pinning keeps dir
     * creation spread across the cluster while each dir still gets
-    * exactly one file (dirs are hash-owned by one task either way). */
+    * exactly one file (dirs are hash-owned by one task either way).
+    *
+    * Returns the rows written, counted by an observation on the frame
+    * the sink writes: no count job, no re-read. It sits ABOVE the
+    * sink's exchange because an observation below it would keep a
+    * sort the exchange otherwise drops (a mart's `.sort`), changing
+    * the written files. */
   def writePartitioned(
       df: DataFrame, path: String, partitionCols: Seq[String],
-      numFiles: Int = 0, prePartitioned: Boolean = false): Unit = {
+      numFiles: Int = 0, prePartitioned: Boolean = false): Long = {
     val spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // Suppress _SUCCESS markers (the reference's committer tuning, S8).
@@ -42,9 +49,12 @@ object Sinks {
       else if (numFiles > 0) df.coalesce(numFiles)
       else df.repartition(spark.sparkContext.defaultParallelism,
         partitionCols.map(df.col): _*)
-    out.write.mode("overwrite")
+    val written = Observation()
+    out.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Unpartitioned overwrite (dimension tables, S6). */

@@ -8,11 +8,13 @@ import graft.etl.RetailPipeline
 import graft.format.GraftTable
 
 /** The retail DAG's four entry points over tiny inline dimension CSVs
-  * (no reference data needed): the lake tier's returned counts are
-  * the rows its commits recorded and equal recounts of every mart;
-  * the monthly re-run reproduces the initial marts; the lake marts
-  * equal the directory marts; and no entry point leaves its stage
-  * labels on the caller's thread. */
+  * (no reference data needed): both tiers' returned counts are the
+  * rows they wrote and equal recounts of every mart; the directory
+  * marts are registered for other sessions; a monthly re-run rewrites
+  * only its month (one file per silver partition directory, one
+  * `replace` snapshot per lake table) and reproduces the initial
+  * marts; the lake marts equal the directory marts; and no entry
+  * point leaves its stage labels on the caller's thread. */
 class RetailLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark.spark
 
@@ -82,19 +84,58 @@ class RetailLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val lakeInitial: Map[String, Long] = call("runLake")(
     RetailPipeline.runLake(spark, dims, s"$base/lake", NPurchase))
+  private val lakeTables = Seq("bronze_purchase",
+    "silver_purchase_all_info") ++ marts.map("gold_" + _)
+
+  /** Each lake table's snapshot ops, oldest first. */
+  private def lakeOps(): Map[String, Seq[String]] = lakeTables.map(t =>
+    t -> GraftTable.forPath(spark, s"$base/lake/$t").history()
+      .orderBy("version").select("op").collect().map(_.getString(0))
+      .toSeq).toMap
+
   private lazy val lakeInitialRows: Map[String, Seq[String]] = {
     lakeInitial
     marts.map(m => m -> rows(lakeMart(m))).toMap
   }
-  private lazy val lakeWindow: Map[String, Long] = {
+  private lazy val lakeOpsAfterRun: Map[String, Seq[String]] = {
     lakeInitialRows
+    lakeOps()
+  }
+  private lazy val lakeWindow: Map[String, Long] = {
+    lakeOpsAfterRun
     call("runIncrementalLake")(RetailPipeline.runIncrementalLake(
       spark, dims, s"$base/lake", NPurchase, year, month))
   }
   private lazy val dirInitial: Map[String, Long] = call("run")(
     RetailPipeline.run(spark, dims, s"$base/dir", NPurchase))
-  private lazy val dirWindow: Map[String, Long] = {
+
+  /** Every parquet file under `dir`, with its size and mtime. */
+  private def parquetFiles(dir: String): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
+      .asScala.filter(p => p.toString.endsWith(".parquet") &&
+        java.nio.file.Files.isRegularFile(p))
+      .map(p => p.toString -> (p.toFile.length(), p.toFile.lastModified()))
+      .toMap
+  }
+  private def outsideMonth(files: Map[String, (Long, Long)]) =
+    files.filter { case (p, _) =>
+      !p.contains(s"purchase_year=$year/purchase_month=$month/") }
+
+  private def dirMart(m: String): DataFrame =
+    spark.read.parquet(s"$base/dir/gold/$m")
+
+  /** The directory warehouse right after `run`: its files outside the
+    * re-run month, each mart's recount, and each mart's count as a
+    * fresh session reads it through the catalog. */
+  private lazy val dirAfterRun = {
     dirInitial
+    (outsideMonth(parquetFiles(s"$base/dir")),
+      marts.map(m => m -> dirMart(m).count()).toMap,
+      marts.map(m => m -> spark.newSession().table(m).count()).toMap)
+  }
+  private lazy val dirWindow: Map[String, Long] = {
+    dirAfterRun
     call("runIncremental")(RetailPipeline.runIncremental(
       spark, dims, s"$base/dir", NPurchase, year, month))
   }
@@ -123,6 +164,39 @@ class RetailLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
         .history().where(col("op") === "replace")
         .select("output_rows").head().getLong(0) == lakeWindow(m))
     }
+  }
+
+  test("the directory tier returns the rows it wrote: equal to " +
+      "recounts, initial and window, and to the registered marts") {
+    val (_, recounts, registered) = dirAfterRun
+    assert(dirInitial.keySet == marts.toSet)
+    assert(recounts == dirInitial)
+    assert(registered == dirInitial)
+    marts.foreach { m =>
+      assert(dirWindow(m) > 0L, m)
+      assert(dirWindow(m) == dirMart(m).where(window).count(), s"window $m")
+    }
+  }
+
+  test("the directory re-run rewrites only its month and keeps one " +
+      "file per silver partition directory") {
+    dirWindow
+    val (filesBefore, _, _) = dirAfterRun
+    assert(filesBefore.nonEmpty)
+    assert(outsideMonth(parquetFiles(s"$base/dir")) == filesBefore,
+      "files outside the re-run month must not be rewritten")
+    val perDir = parquetFiles(s"$base/dir/silver/purchase_all_info").keys
+      .groupBy(p => java.nio.file.Paths.get(p).getParent.toString)
+    assert(perDir.size > 1)
+    assert(perDir.values.forall(_.size == 1), perDir)
+  }
+
+  test("the lake re-run adds exactly one replace snapshot to each of " +
+      "the six tables") {
+    lakeWindow
+    val after = lakeOps()
+    lakeTables.foreach(t =>
+      assert(after(t) == lakeOpsAfterRun(t) :+ "replace", t))
   }
 
   test("the lake re-run of a month reproduces the initial marts") {

@@ -265,19 +265,7 @@ class Round2Spec extends AnyFunSuite {
       "price bands cover [0, 500k) so every order lands in exactly one")
   }
 
-  test("compaction preserves rows and hits the target file count") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact_").toString + "/t"
-    val docs = Tables.load(spark, sfDir, "documents")
-    docs.repartition(37).write.parquet(dir) // fragment into 37 files
-    val rows = docs.count()
-    val (before, after) = graft.etl.Compact.compact(spark, dir)
-    assert(before === 37)
-    assert(after < before)
-    assert(spark.read.parquet(dir).count() === rows)
-  }
-
-  // ---- Stratified sample / grouped arrays / upsert ----------------------
+  // ---- Stratified sample / grouped arrays -----------------------------
 
   test("q49 hash-bucket sample is repartition-stable and ~20% per segment") {
     val base = Analytics.q49StratifiedSample(spark, sfDir)
@@ -294,23 +282,6 @@ class Round2Spec extends AnyFunSuite {
       .select("top_parts").as[String].collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.split(",").length <= 3))
-  }
-
-  test("upsert replaces matched keys, appends new, keeps the rest") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_upsert_").toString + "/t"
-    val v1 = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
-      .toDF("k", "name", "v")
-    v1.write.parquet(dir)
-    val updates = Seq((2L, "b2", 20.0), (4L, "d", 4.0)).toDF("k", "name", "v")
-    graft.etl.Upsert.upsertByKey(spark, dir, updates, Seq("k"))
-    val got = spark.read.parquet(dir).as[(Long, String, Double)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === Seq((1L, "a", 1.0), (2L, "b2", 20.0), (3L, "c", 3.0),
-      (4L, "d", 4.0)))
-    // idempotent: same upsert again changes nothing
-    graft.etl.Upsert.upsertByKey(spark, dir, updates, Seq("k"))
-    assert(spark.read.parquet(dir).count() === 4)
   }
 
   test("q53 trained-IVF keeps >=80% recall vs brute-force ground truth") {
