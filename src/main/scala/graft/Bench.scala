@@ -14,56 +14,15 @@ import graft.etl.Pipeline
 object Bench {
 
   private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Local-FS write tuning: skip .crc checksum sidecars (halves FS
-      // ops on many-small-file partitioned writes) and commit task
-      // output in parallel from tasks (v2) instead of a serial driver
-      // rename pass. On a real cluster the equivalents are the
-      // cloud-store committers (magic/S3A), not these two knobs.
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      // 55 queries × several codegen stages blow through the 100-entry
-      // default and cause steady Janino recompilation in later passes
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
-    // SPARK_GRAFT_PROFILE_JOBS=1: per-job wall time + description to
-    // stderr (dev-only attribution; mirrors PlanProf's listener)
-    if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val starts = new java.util.concurrent
-            .ConcurrentHashMap[Int, (Long, String)]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart)
-              : Unit = {
-            val d = Option(js.properties)
-              .flatMap(p =>
-                Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            starts.put(js.jobId,
-              (System.nanoTime(),
-                s"stages=${js.stageInfos.size} " +
-                  s"tasks=${js.stageInfos.map(_.numTasks).sum} $d"))
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd)
-              : Unit =
-            Option(starts.remove(je.jobId)).foreach { case (t0, d) =>
-              System.err.println(
-                f"JOB ${je.jobId}%5d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $d")
-            }
-        })
     spark
+  }
+
+  private def stop(spark: SparkSession): Unit = {
+    spark.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
   }
 
   /** One `/proc/loadavg` sample ("1m 5m 15m" fields), "" off-Linux.
@@ -99,6 +58,19 @@ object Bench {
     val loadOk = load1m() <= maxLoad
     val loadStart = loadavg()
     val spark = newSession(cpus)
+
+    /** Runs one leg in its own fresh session and always stops it: a
+      * leg that throws prints `BENCH FAIL <leg>` and reports `failed`,
+      * its -1 sentinels. */
+    def inSession[T](leg: String, failed: T)(body: SparkSession => T): T = {
+      val sp = newSession(cpus)
+      try body(sp)
+      catch {
+        case e: Throwable =>
+          System.err.println(s"BENCH FAIL $leg: $e")
+          failed
+      } finally stop(sp)
+    }
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -451,9 +423,7 @@ object Bench {
     // from the passes above. On a real cluster this is simply "each
     // pipeline run is its own application", which is how the reference
     // runs its Glue jobs too.
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    stop(spark)
 
     // Full pipeline pair, mirroring BASELINE.md's published numbers:
     // initial load (full history) then an incremental re-run of one
@@ -462,33 +432,23 @@ object Bench {
     // min-merged — the etl numbers were the only un-replicated samples
     // in the report, so a single ambient-load spike could triple them.
     // Each attempt gets its own fresh SparkContext (see above).
-    def etlPair(): (Double, Double) = {
-      val sp = newSession(cpus)
-      try {
-        val wh = java.nio.file.Files
-          .createTempDirectory("graft_bench_wh_").toString
-        val initial = timed {
-          Pipeline.run(sp,
-            Pipeline.Config(sfDir, wh, "19920101", "20021231"))
-        }
-        settle() // initial's writeback must not bill the incremental
-        val incremental = timed {
-          Pipeline.run(sp,
-            Pipeline.Config(sfDir, wh, "19950101", "19951231"))
-        }
-        // best-effort cleanup of the temp warehouse
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(wh)).deleteRecursively()
-        (initial, incremental)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL etl_pipeline: $e")
-          (-1.0, -1.0)
-      } finally {
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
+    def etlPair(): (Double, Double) =
+      inSession("etl_pipeline", (-1.0, -1.0)) { sp =>
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_bench_wh_").toString
+      val initial = timed {
+        Pipeline.run(sp,
+          Pipeline.Config(sfDir, wh, "19920101", "20021231"))
       }
+      settle() // initial's writeback must not bill the incremental
+      val incremental = timed {
+        Pipeline.run(sp,
+          Pipeline.Config(sfDir, wh, "19950101", "19951231"))
+      }
+      // best-effort cleanup of the temp warehouse
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(wh)).deleteRecursively()
+      (initial, incremental)
     }
     // dev filter: naming etl_pipeline in SPARK_GRAFT_ONLY keeps the pair
     val runEtl = only.forall(_.contains("etl_pipeline"))
@@ -515,8 +475,8 @@ object Bench {
     // full-load volume (sf0.1's 600 K lineitem × 48 ≈ 28.8 M rows vs
     // BASELINE.md's 28.6 M) — recorded in SURVEY.md, not per-round.
     val etlX = sys.env.getOrElse("SPARK_GRAFT_ETL_X", "10").toInt
-    def etl10x(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def etl10x(): (Double, Double) =
+      inSession(s"etl_pipeline_${etlX}x", (-1.0, -1.0)) { sp =>
       // the replicated source is ~10× the sf dir on disk — clean it up
       // on EVERY exit path, or a failing 10x leg fills /tmp run over run
       var base: String = null
@@ -551,17 +511,10 @@ object Bench {
           Pipeline.run(sp, Pipeline.Config(base, wh, "19950101", "19951231"))
         }
         (tInit, tInc)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL etl_pipeline_${etlX}x: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         Seq(wh, base).filter(_ != null).foreach(d =>
           new Directory(new java.io.File(d)).deleteRecursively())
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val (etl10xTime, etl10xIncTime) =
@@ -576,8 +529,7 @@ object Bench {
     // corpus AND a dense candidate structure — so superlinear blowup in
     // band buckets, candidate joins, or verification would surface here
     // long before 100 TB. Single attempt, reported per-query only.
-    def dedup10x(): Double = {
-      val sp = newSession(cpus)
+    def dedup10x(): Double = inSession("dedup_10x", -1.0) { sp =>
       var base: String = null
       try {
         base = java.nio.file.Files
@@ -594,17 +546,10 @@ object Bench {
         }.reduce(_ unionByName _)
           .write.parquet(s"$base/documents.parquet")
         timed { graft.operators.Dedup.q21LshPairs(sp, base).count(); () }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL dedup_10x: $e")
-          -1.0
       } finally {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val dedup10xTime =
@@ -618,8 +563,7 @@ object Bench {
     // probed-cells-shaped) would blow up superlinearly in this leg.
     // Replicas are exact copies (vec_id-shifted): the smoke measures
     // plan scaling, not recall.
-    def ann50x(): Double = {
-      val sp = newSession(cpus)
+    def ann50x(): Double = inSession("ann_50x", -1.0) { sp =>
       var base: String = null
       try {
         base = java.nio.file.Files
@@ -633,17 +577,10 @@ object Bench {
           .reduce(_ unionByName _)
           .write.parquet(s"$base/embeddings.parquet")
         timed { graft.operators.Similarity.q34AnnIvf(sp, base).count(); () }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL ann_50x: $e")
-          -1.0
       } finally {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val ann50xTime =
@@ -657,8 +594,7 @@ object Bench {
     // only the files it must — the file-granularity claim under
     // load), and a zone-map pruned read. Superlinear blowup in the
     // audit join, manifest handling, or pruning would surface here.
-    def gtable10x(): Double = {
-      val sp = newSession(cpus)
+    def gtable10x(): Double = inSession("gtable_10x", -1.0) { sp =>
       var root: String = null
       try {
         root = java.nio.file.Files
@@ -691,18 +627,11 @@ object Bench {
           rows2.count()
           ()
         }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL gtable_10x: $e")
-          -1.0
       } finally {
         import scala.reflect.io.Directory
         if (root != null)
           new Directory(new java.io.File(root).getParentFile)
             .deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val gtable10xTime =
@@ -715,8 +644,7 @@ object Bench {
     // followed by a full live read. The pair quantifies the
     // write-amplification gap the MOR tier closes AND charges MOR its
     // read-side DV price honestly.
-    def mor10x(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def mor10x(): (Double, Double) = inSession("mor_10x", (-1.0, -1.0)) { sp =>
       var root: String = null
       try {
         root = java.nio.file.Files
@@ -743,18 +671,11 @@ object Bench {
           ()
         }
         (cow, mor)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL mor_10x: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (root != null)
           new Directory(new java.io.File(root).getParentFile)
             .deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val (cowDel10xTime, morDel10xTime) =
@@ -772,8 +693,8 @@ object Bench {
     // "open a million". (At 10× the fixed planning jobs still rival
     // the saved read; 50× is where the asymptotics show even on one
     // node.)
-    def bloom50x(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def bloom50x(): (Double, Double) =
+      inSession("bloom_50x", (-1.0, -1.0)) { sp =>
       var base: String = null
       try {
         base = java.nio.file.Files
@@ -807,17 +728,10 @@ object Bench {
           require(lookup(s"$base/plain") == expected); ()
         }
         (withBloom, without)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL bloom_50x: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val (bloomProbe50xTime, fullscanProbe50xTime) =
@@ -834,8 +748,8 @@ object Bench {
     // single attempt, reported per-query only.
     val retailRows =
       sys.env.getOrElse("SPARK_GRAFT_RETAIL_ROWS", "28593030").toLong
-    def retailFullscale(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def retailFullscale(): (Double, Double) =
+      inSession("retail_fullscale", (-1.0, -1.0)) { sp =>
       var wh: String = null
       try {
         wh = java.nio.file.Files
@@ -850,17 +764,10 @@ object Bench {
             sp, dataDir, wh, retailRows, "2014", "11")
         }
         (tInit, tInc)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL retail_fullscale: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (wh != null)
           new Directory(new java.io.File(wh)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     // sampledPair, not sampled-on-initial (VERDICT r12 #2): r12's
@@ -899,8 +806,8 @@ object Bench {
     // (every tier a GraftTable, incremental via atomic replaceWhere) —
     // tracks the format's write amplification vs raw partition dirs
     // (VERDICT r9 #8).
-    def retailLakeAt(rows: Long, leg: String): (Double, Double) = {
-      val sp = newSession(cpus)
+    def retailLakeAt(rows: Long, leg: String): (Double, Double) =
+      inSession(leg, (-1.0, -1.0)) { sp =>
       var wh: String = null
       try {
         wh = java.nio.file.Files
@@ -915,17 +822,10 @@ object Bench {
             sp, dataDir, wh, rows, "2014", "11")
         }
         (tInit, tInc)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL $leg: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (wh != null)
           new Directory(new java.io.File(wh)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     def retailFullscaleLake(): (Double, Double) =
@@ -974,8 +874,8 @@ object Bench {
     // attributable to the commit path or the host, not guessed.
     // Reports (total seconds, metadata KB per commit); commits/s =
     // 201 / seconds, derivable from the artifact.
-    def commitMicro(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def commitMicro(): (Double, Double) =
+      inSession("commit_micro", (-1.0, -1.0)) { sp =>
       var root: String = null
       try {
         root = java.nio.file.Files
@@ -1002,18 +902,11 @@ object Bench {
         val metaKbPerCommit =
           dirSize(new java.io.File(s"$root/_log")) / 1024.0 / (n + 1)
         (secs, metaKbPerCommit)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL commit_micro: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (root != null)
           new Directory(new java.io.File(root).getParentFile)
             .deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     // dev filter: SPARK_GRAFT_ONLY=commit_micro runs just this leg
@@ -1027,8 +920,8 @@ object Bench {
     // the same 3-scan aggregate loop under bin-packed planning (~32
     // tasks) and under the kill-switch (2048 tasks, the pre-round-13
     // plan) — the delta is the per-task fixed cost packing removes.
-    def packedScan(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def packedScan(): (Double, Double) =
+      inSession("packed_scan", (-1.0, -1.0)) { sp =>
       var root: String = null
       try {
         root = java.nio.file.Files
@@ -1050,18 +943,11 @@ object Bench {
           timed((1 to 3).foreach(_ => scanOnce()))
         } finally sp.conf.unset("graft.scan.pack.enabled")
         (packed, perFile)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL packed_scan: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (root != null)
           new Directory(new java.io.File(root).getParentFile)
             .deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val runPackedScan = only.forall(_.contains("packed_scan"))
@@ -1079,8 +965,8 @@ object Bench {
     // the win is attributable (tasks, not cache luck).
     var packedTasks20k = -1.0
     var perFileTasks20k = -1.0
-    def packedScan20k(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def packedScan20k(): (Double, Double) =
+      inSession("packed_scan_20k", (-1.0, -1.0)) { sp =>
       var base: String = null
       try {
         base = java.nio.file.Files
@@ -1104,17 +990,10 @@ object Bench {
           timed((1 to 2).foreach(_ => scanOnce()))
         } finally sp.conf.unset("graft.scan.pack.enabled")
         (packed, perFile)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL packed_scan_20k: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val runPacked20k = only.forall(_.contains("packed_scan_20k"))
@@ -1136,8 +1015,7 @@ object Bench {
     val planStreamMb =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     def manifestPlanning(nEntries: Long, leg: String)
-        : (Double, Double) = {
-      val sp = newSession(cpus)
+        : (Double, Double) = inSession(leg, (-1.0, -1.0)) { sp =>
       var base: String = null
       val prevLimit = graft.format.GraftTable.PlanCollectLimit
       try {
@@ -1196,18 +1074,11 @@ object Bench {
         planStreamMb(leg) =
           math.max(planStreamMb.getOrElse(leg, -1.0), sMb)
         (cSec, sSec)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL $leg: $e")
-          (-1.0, -1.0)
       } finally {
         graft.format.GraftTable.PlanCollectLimit = prevLimit
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val runPlanMem = only.forall(_.contains("manifest_plan_200k"))
@@ -1239,8 +1110,8 @@ object Bench {
     // full per-batch series of every sample rides the artifact as
     // `curation_batches`.
     var curationSeries = List.empty[String]
-    def curationHistory(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def curationHistory(): (Double, Double) =
+      inSession("curation_history", (-1.0, -1.0)) { sp =>
       var base: String = null
       try {
         base = java.nio.file.Files
@@ -1255,17 +1126,10 @@ object Bench {
           times.map(t => f"$t%.2f").mkString("[", ",", "]")
         if (times.exists(_ < 0)) (-1.0, -1.0)
         else (times.head, times.last)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL curation_history: $e")
-          (-1.0, -1.0)
       } finally {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val runCuration = only.forall(_.contains("curation_history"))
@@ -1285,8 +1149,8 @@ object Bench {
     // the jittered-backoff claim measured, not asserted. Any
     // ConcurrentCommitException fails the leg to -1.
     var commitTputHist = "[]"
-    def commitThroughput(): (Double, Double) = {
-      val sp = newSession(cpus)
+    def commitThroughput(): (Double, Double) =
+      inSession("commit_throughput", (-1.0, -1.0)) { sp =>
       var fake: graft.format.S3FakeServer = null
       var base: String = null
       val prevProvider = graft.format.LogStore.provider
@@ -1340,10 +1204,6 @@ object Bench {
             .mkString("[", ",", "]")
           (secs, attempts.sum.toDouble / attempts.size)
         }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL commit_throughput: $e")
-          (-1.0, -1.0)
       } finally {
         graft.format.LogStore.provider = prevProvider
         graft.format.CommitProfile.on.set(false)
@@ -1351,9 +1211,6 @@ object Bench {
         import scala.reflect.io.Directory
         if (base != null)
           new Directory(new java.io.File(base)).deleteRecursively()
-        sp.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
       }
     }
     val runCommitTput = only.forall(_.contains("commit_throughput"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1): for each named
   * registry query, dump `.explain("formatted")` to a file and time the
   * computation against the NOOP sink (guide §1.4 — eagerly computes
@@ -21,51 +19,9 @@ object PlanProf {
     val reps = if (args.length > 2) args(2).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", "graft-planprof")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-
-    // SPARK_GRAFT_PROFILE_JOBS=1: print every Spark job's wall time +
-    // description to stderr — attributes a query's cost across its
-    // micro-jobs (guide §1.1 empirical loop; the UI is disabled here).
-    if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val starts = new java.util.concurrent
-            .ConcurrentHashMap[Int, (Long, String)]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart)
-              : Unit = {
-            val d = Option(js.properties)
-              .flatMap(p =>
-                Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            starts.put(js.jobId,
-              (System.nanoTime(),
-                s"stages=${js.stageInfos.size} " +
-                  s"tasks=${js.stageInfos.map(_.numTasks).sum} $d"))
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd)
-              : Unit =
-            Option(starts.remove(je.jobId)).foreach { case (t0, d) =>
-              System.err.println(
-                f"JOB ${je.jobId}%5d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $d")
-            }
-        })
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc CLI: run any named query from [[SparkEntry.queries]] against
   * a testdata dir, print the first rows, and optionally the physical
   * plan and the [[Metrics]] cost summary — the library's "try one
@@ -27,10 +25,7 @@ object Run {
 
     val spark = GraftSession.build(
       master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
-      appName = s"graft-run-$name",
-      extraConf = Map("spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
-        "spark.ui.enabled" -> "false"))
+      appName = s"graft-run-$name")
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val df = fn(spark, dir)

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Cross-PROCESS catalog durability probe (S9's strongest claim): the
@@ -25,20 +24,15 @@ object CatalogProbe {
 
   def main(args: Array[String]): Unit = {
     val (mode, metaDir, wh) = (args(0), args(1), args(2))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-catalog-probe-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$metaDir/warehouse")
-      // derby metastore at a caller-chosen path: the durable artifact
-      // both processes share (a cluster swaps this one URL for its
-      // Hive/Glue metastore endpoint; nothing else changes)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$metaDir/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
+    val spark = graft.GraftSession.build("local[4]",
+      s"graft-catalog-probe-$mode", Map(
+        "spark.sql.warehouse.dir" -> s"$metaDir/warehouse",
+        // derby metastore at a caller-chosen path: the durable artifact
+        // both processes share (a cluster swaps this one URL for its
+        // Hive/Glue metastore endpoint; nothing else changes)
+        "javax.jdo.option.ConnectionURL" ->
+          s"jdbc:derby:;databaseName=$metaDir/metastore_db;create=true",
+        "spark.sql.catalogImplementation" -> "hive"))
     try {
       mode match {
         case "write" =>

@@ -14,6 +14,16 @@ import org.apache.spark.sql.functions.{count, lit}
   */
 object Sinks {
 
+  /** An overwriting parquet writer with the reference's write semantics
+    * as per-write options, so the caller's session and the shared
+    * Hadoop conf stay untouched: dynamic partition overwrite, and no
+    * `_SUCCESS` marker (the reference's committer tuning, S8). The
+    * write command puts the committer key into its own job's Hadoop
+    * conf. */
+  private def overwrite(df: DataFrame) = df.write.mode("overwrite")
+    .option("partitionOverwriteMode", "dynamic")
+    .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+
   /** Hive-partitioned parquet write, replacing only touched partitions.
     * `numFiles` caps files per partition dir (the reference's
     * `coalesce(1)` small-files control, glue_t1.md:82) — at cluster
@@ -37,10 +47,6 @@ object Sinks {
       df: DataFrame, path: String, partitionCols: Seq[String],
       numFiles: Int = 0, prePartitioned: Boolean = false): Long = {
     val spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // Suppress _SUCCESS markers (the reference's committer tuning, S8).
-    spark.sparkContext.hadoopConfiguration
-      .set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     val out =
       if (prePartitioned) df // caller guarantees the frame is already
         // hash-grouped by partitionCols (e.g. a cache built through this
@@ -50,8 +56,7 @@ object Sinks {
       else df.repartition(spark.sparkContext.defaultParallelism,
         partitionCols.map(df.col): _*)
     val written = Observation()
-    out.observe(written, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
+    overwrite(out.observe(written, count(lit(1)).as("rows")))
       .partitionBy(partitionCols: _*)
       .parquet(path)
     written.get("rows").asInstanceOf[Long]
@@ -59,7 +64,7 @@ object Sinks {
 
   /** Unpartitioned overwrite (dimension tables, S6). */
   def writeTable(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    overwrite(df).parquet(path)
 
   /** Crawler replacement (S9): (re)register an output directory as a
     * session-catalog table; partition columns are rediscovered from the

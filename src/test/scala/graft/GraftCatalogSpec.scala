@@ -74,7 +74,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // connector declines it with Spark's standard clean error rather
     // than guessing (gtables carry no directory partitions, so
     // dynamic mode buys nothing here anyway). Pin both, explicitly —
-    // other suites leave the shared session in dynamic mode.
+    // the shared session starts in dynamic mode (GraftSession.defaults).
     val prevMode = spark.conf
       .getOption("spark.sql.sources.partitionOverwriteMode")
     try {

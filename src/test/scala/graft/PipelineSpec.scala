@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.Pipeline
+import graft.etl.{Pipeline, Sinks}
 import java.nio.file.Files
 
 class PipelineSpec extends AnyFunSuite {
@@ -70,5 +70,48 @@ class PipelineSpec extends AnyFunSuite {
       .where(col("ship_year") === "1995")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(ship_year"))
+  }
+
+  test("run reports the rows it wrote to each mart: the whole mart on " +
+      "a first run, the window's rows on a re-run") {
+    val wh = freshDir()
+    def mart(m: String) = spark.read.parquet(s"$wh/gold/$m")
+    val full = Pipeline.run(spark,
+      Pipeline.Config(sfDir, wh, "19940101", "19961231"))
+    full.foreach { case (m, n) => assert(n === mart(m).count(), m) }
+    val rerun = Pipeline.run(spark,
+      Pipeline.Config(sfDir, wh, "19950101", "19951231"))
+    assert(rerun.keySet === full.keySet)
+    rerun.foreach { case (m, n) =>
+      val rows1995 = mart(m).where(col("ship_year") === 1995).count()
+      assert(rows1995 > 0 && rows1995 < mart(m).count(), m)
+      assert(n === rows1995, m)
+    }
+  }
+
+  test("writePartitioned leaves the caller's session and Hadoop conf " +
+      "alone, yet replaces only touched partitions and writes no _SUCCESS") {
+    import spark.implicits._
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val markerKey = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val (prevMode, prevMarker) = (spark.conf.get(modeKey), hconf.get(markerKey))
+    val path = s"${freshDir()}/t"
+    try {
+      spark.conf.set(modeKey, "static")
+      hconf.set(markerKey, "true")
+      assert(Sinks.writePartitioned(
+        Seq((1, "a"), (2, "b")).toDF("p", "v"), path, Seq("p")) === 2L)
+      assert(Sinks.writePartitioned(
+        Seq((2, "c")).toDF("p", "v"), path, Seq("p")) === 1L)
+      assert(spark.read.parquet(path).as[(String, Int)].collect().toSet ===
+        Set(("a", 1), ("c", 2)), "p=1 kept, p=2 replaced")
+      assert(!new java.io.File(s"$path/_SUCCESS").exists())
+      assert(spark.conf.get(modeKey) === "static")
+      assert(hconf.get(markerKey) === "true")
+    } finally {
+      spark.conf.set(modeKey, prevMode)
+      hconf.set(markerKey, prevMarker)
+    }
   }
 }

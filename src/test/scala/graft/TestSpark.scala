@@ -2,16 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites. */
+/** One shared local SparkSession for all suites, built by the engine's
+  * own factory: every suite sees its confs from the first use. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("local[8]", "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }
