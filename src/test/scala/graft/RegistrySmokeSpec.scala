@@ -13,19 +13,44 @@ import org.scalatest.funsuite.AnyFunSuite
 class RegistrySmokeSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
 
-  test("every registered query plans against the sf0.001 testdata") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          // force full analysis + optimization + physical planning
-          fn(spark, sfDir).queryExecution.executedPlan
-          None
-        } catch {
-          case e: Throwable => Some(s"$name: ${e.getClass.getSimpleName} " +
-            s"${Option(e.getMessage).getOrElse("").linesIterator
-              .take(2).mkString(" ")}")
-        }
+  /** q164–q167 ignore `sfDir`: they stage the reference's seed CSVs
+    * (RetailQueries), so they are planned by their own test. */
+  private val seedCsvQueries = Set("q164_retail_datetime",
+    "q165_retail_ageproducts", "q166_retail_residence",
+    "q167_retail_customer")
+
+  /** Plans each named query; one line per query that failed to. */
+  private def planFailures(names: Iterable[String]): Seq[String] =
+    names.toSeq.sorted.flatMap { name =>
+      try {
+        // force full analysis + optimization + physical planning
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+        None
+      } catch {
+        case e: Throwable => Some(s"$name: ${e.getClass.getSimpleName} " +
+          s"${Option(e.getMessage).getOrElse("").linesIterator
+            .take(2).mkString(" ")}")
+      }
     }
+
+  test("every registered query plans against the sf0.001 testdata") {
+    val registered = SparkEntry.queries.keySet
+    // the excluded set is pinned: a rename or a new retail query fails
+    // here instead of leaving the loop unnoticed
+    assert(registered.filter(_.contains("_retail_")) === seedCsvQueries,
+      "the queries planned apart from the sf0.001 loop must be " +
+        "exactly the four registered retail queries")
+    val planned = registered -- seedCsvQueries
+    info(s"planned ${planned.size} of ${registered.size} registered queries")
+    val failures = planFailures(planned)
+    assert(failures.isEmpty,
+      s"queries failed to plan:\n  ${failures.mkString("\n  ")}")
+    spark.catalog.clearCache()
+  }
+
+  test("the retail queries q164–q167 plan against the reference seed CSVs") {
+    TestSpark.assumeRetailSeedCsvs()
+    val failures = planFailures(seedCsvQueries)
     assert(failures.isEmpty,
       s"queries failed to plan:\n  ${failures.mkString("\n  ")}")
     spark.catalog.clearCache()

@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.etl.RetailPipeline
 
 /** Golden end-to-end over the reference's OWN seed data
-  * (the CSVs under /root/reference/data) + the FIXTURES.md-contract purchase
-  * fact — SURVEY §5.2.2. The retail-specific traps (zipcode fan-out,
-  * nullable customer_id, null-residence customers, product-key misses,
-  * weekday naming) are asserted on the real reference rows, not by
-  * analogy on the TPC-H-ish testdata. */
+  * (the CSVs under [[graft.operators.RetailQueries.DataDir]]) + the
+  * FIXTURES.md-contract purchase fact — SURVEY §5.2.2. The
+  * retail-specific traps (zipcode fan-out, nullable customer_id,
+  * null-residence customers, product-key misses, weekday naming) are
+  * asserted on the real reference rows, not by analogy on the
+  * TPC-H-ish testdata. Each test cancels where those CSVs are absent. */
 class RetailGoldenSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, assumeRetailSeedCsvs}
 
-  private val dataDir = "/root/reference/data"
+  private val dataDir = graft.operators.RetailQueries.DataDir
   private val NPurchase = 100000L
 
   private lazy val cust = RetailPipeline.customer(spark, dataDir).cache()
@@ -26,6 +27,7 @@ class RetailGoldenSpec extends AnyFunSuite {
     RetailPipeline.synthPurchase(spark, products, NPurchase).cache()
 
   test("seed CSVs load with the documented profiles") {
+    assumeRetailSeedCsvs()
     assert(cust.count() === 19383L)
     assert(cust.where(col("residence").isNull).count() === 178L,
       "empty residence strings must read as NULL")
@@ -40,6 +42,7 @@ class RetailGoldenSpec extends AnyFunSuite {
 
   test("customer ⟕ zipcode fans out exactly as the reference: " +
       "19,383 customers → 20,239 joined rows") {
+    assumeRetailSeedCsvs()
     assert(custZip.count() === 20239L)
     // every customer survives the left join; null-residence rows keep
     // null geography
@@ -51,6 +54,7 @@ class RetailGoldenSpec extends AnyFunSuite {
   test("T1 silver preserves left-join row semantics: fan-out rows from " +
       "duplicated zipcodes, null dims for product misses and " +
       "anonymous purchases") {
+    assumeRetailSeedCsvs()
     val silverDf =
       RetailPipeline.silver(purchase, products, custZip).cache()
     // expected rows = purchases + one extra per purchase whose customer
@@ -77,6 +81,7 @@ class RetailGoldenSpec extends AnyFunSuite {
   test("monthly incremental re-run rebuilds exactly the window's " +
       "partitions — idempotent results, untouched months' files " +
       "never rewritten") {
+    assumeRetailSeedCsvs()
     val wh = java.nio.file.Files
       .createTempDirectory("graft_retail_inc_").toString
     try {
@@ -124,6 +129,7 @@ class RetailGoldenSpec extends AnyFunSuite {
 
   test("full DAG writes the four marts with the reference's shapes " +
       "and the weekday UDF's exact naming") {
+    assumeRetailSeedCsvs()
     val wh = java.nio.file.Files
       .createTempDirectory("graft_retail_wh_").toString
     try {
@@ -197,6 +203,7 @@ class RetailGoldenSpec extends AnyFunSuite {
   test("the LAKEHOUSE-tier DAG (every tier a GraftTable) lands marts " +
       "row-identical to the directory DAG, and the monthly " +
       "incremental replaceWhere matches the dynamic-overwrite rerun") {
+    assumeRetailSeedCsvs()
     val whDir = java.nio.file.Files
       .createTempDirectory("retail_dirs_").toString
     val whLake = java.nio.file.Files

@@ -12,9 +12,11 @@ import scala.jdk.CollectionConverters._
 class SilverLayoutSpec extends AnyFunSuite {
   import TestSpark.spark
   test("silver write keeps one file per partition dir") {
+    TestSpark.assumeRetailSeedCsvs()
     val wh = java.nio.file.Files.createTempDirectory("retail_layout_").toString
     try {
-      graft.etl.RetailPipeline.run(spark, "/root/reference/data", wh, 200000L)
+      graft.etl.RetailPipeline.run(spark,
+        graft.operators.RetailQueries.DataDir, wh, 200000L)
       val root = java.nio.file.Paths.get(s"$wh/silver/purchase_all_info")
       val dirs = java.nio.file.Files.walk(root).iterator().asScala
         .filter(p => p.toString.endsWith(".parquet") &&
