@@ -6,7 +6,7 @@ import graft.operators.{Analytics, AsofJoin, Cluster, CoreQueries, CorpusOps,
   KpiQueries, NeardupGate, Profiling, RangeJoin, RetailQueries, ScaleOps,
   SemdedupGate, Similarity, Skew, Stats, TextQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry and its entry points — see SURVEY.md §7.
   *
   * Each `queries` key has a DuckDB-runnable oracle in [[OracleSql]]
   * (omitted only for ops whose semantics aren't SQL-expressible; the

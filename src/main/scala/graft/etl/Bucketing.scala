@@ -92,20 +92,17 @@ object Bucketing {
     // The two bucketed writes are independent outputs and each uses
     // only `buckets` (8) write tasks — run them as parallel jobs so
     // the setup overlaps instead of serializing two mostly-idle
-    // stages (guide §2.6; same pattern as Pipeline.t0Dimensions).
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.sequence(Seq(
-        Future(writeBucketedAt(graft.Tables.load(s, dir, "lineitem")
+    // stages (guide §2.6).
+    Medallion.fanOut(s)(Seq(
+      "q142: bucket lineitem" -> (() =>
+        writeBucketedAt(graft.Tables.load(s, dir, "lineitem")
             .select(col("l_orderkey"), col("l_extendedprice"),
               col("l_quantity")),
           tl, "l_orderkey", 8, s"$base/lineitem")),
-        Future(writeBucketedAt(graft.Tables.load(s, dir, "orders")
+      "q142: bucket orders" -> (() =>
+        writeBucketedAt(graft.Tables.load(s, dir, "orders")
             .select(col("o_orderkey"), col("o_orderpriority")),
-          to, "o_orderkey", 8, s"$base/orders")))), Duration.Inf)
-    }
+          to, "o_orderkey", 8, s"$base/orders"))))
     bucketedJoin(s, tl, to,
         "l_orderkey", "o_orderkey")
       .groupBy(col("o_orderpriority"))

@@ -36,8 +36,10 @@ object CatalogProbe {
     try {
       mode match {
         case "write" =>
-          val cfg = Pipeline.Config(args(3), wh, "19950101", "19961231")
-          Pipeline.t0Fact(spark, cfg)
+          val tpch = Pipeline.Tpch(spark, args(3))
+          Sinks.writePartitioned(
+            tpch.fact(Medallion.Span("1995", "01", "1996", "12")),
+            s"$wh/bronze/fact", tpch.partCols)
           Sinks.registerPersistent(spark, TableName, s"$wh/bronze/fact")
           println(s"PROBE WROTE ${spark.table(TableName).count()}")
         case "read" =>

@@ -1,17 +1,15 @@
 package graft.etl
 
-import graft.format.GraftTable
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.etl.Medallion.{DirTier, Full, LakeTier, Month, Star, Window,
+  runDag}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
   StructType}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
-/** The reference's medallion DAG over its OWN retail star schema — the
-  * golden end-to-end path (SURVEY §5.2.2), as opposed to [[Pipeline]],
-  * which re-expresses the same operator chain over the TPC-H-ish
-  * testdata for oracle checking.
+/** The reference's OWN retail star schema on the [[Medallion]] chain —
+  * the golden end-to-end path (SURVEY §5.2.2); [[Pipeline]] runs the
+  * same chain over the TPC-H-ish testdata for oracle checking.
   *
   * Sources are the reference's seed CSVs (customer / products_info /
   * zipcode; README.md:224-314 DDL) plus a synthesized purchase fact —
@@ -37,7 +35,7 @@ import scala.concurrent.duration.Duration
   *    (functions.Udfs, U1).
   *
   * One deliberate upgrade: `sum(amount)` runs through DECIMAL(18,4)
-  * and rounds once (Pipeline.moneySum's pattern) instead of a raw
+  * and rounds once (the pattern every TPC-H mart uses) instead of a raw
   * double sum — a double Σ is shuffle-order-dependent, which at 100 TB
   * means two runs of the same mart can differ in the last ulp.
   */
@@ -168,7 +166,8 @@ object RetailPipeline {
     // vs the 28.6M-row fact: broadcast them EXPLICITLY (guide §3.1) so
     // the silver join never re-exchanges the fact — which also makes
     // the fact's partitioning a provable invariant of the silver frame
-    // (the prePartitioned silver writes below depend on it).
+    // (the chain's prePartitioned silver write depends on it:
+    // [[Medallion.Star.silverKeepsFactLayout]]).
     withProduct.join(broadcast(custZip),
         withProduct("customer_id") === custZip("customer_id"), "left")
       .drop(custZip("customer_id"))
@@ -216,288 +215,66 @@ object RetailPipeline {
         .drop(custZip("customer_id"))
     })
 
-  /** Full golden DAG into a warehouse dir: bronze fact (partitioned,
-    * dynamic overwrite) → silver purchase_all_info → four gold marts,
-    * each registered persistently (`spark.table(mart)` in any session
-    * of the same catalog). Returns each mart's row count as its write
-    * counted it. */
+  /** The initial load into hive-partitioned directories: bronze →
+    * silver purchase_all_info → four gold marts, each mart registered
+    * persistently (`spark.table(mart)` in any session of the same
+    * catalog). Returns each mart's rows as its write counted them. */
   def run(spark: SparkSession, dataDir: String, warehouseDir: String,
       nPurchaseRows: Long): Map[String, Long] =
-    runDag(spark, dataDir, nPurchaseRows, Full, DirTier(warehouseDir))
+    runDag(spark, new Retail(spark, dataDir, nPurchaseRows), Full,
+      DirTier(warehouseDir))
 
-  /** The reference's MONTHLY INCREMENTAL job shape over its own
-    * schema: re-ingest ONE month of the fact, dynamic-overwrite only
-    * that month's bronze/silver/gold partitions, recompute the marts
-    * for the window alone (their grouping keys all carry
-    * year/month, so a window recompute IS the mart delta — the same
-    * property Pipeline's incremental leg exploits). Reads back
-    * through partition-pruned scans; untouched months are never
-    * rewritten or read. Mirrors the reference's EventBridge monthly
-    * re-run (document/eventbridge.md:12, stepfunction.json DAG).
-    * Returns each mart's window row count as its write counted it. */
+  /** The reference's monthly re-run (document/eventbridge.md:12): ONE
+    * month of the fact re-ingested, only that month's partitions
+    * overwritten in each tier, and the marts recomputed for the month
+    * alone — every mart groups by year/month, so that IS the mart
+    * delta. Untouched months are never rewritten or read. Returns each
+    * mart's rows for the month as its write counted them. */
   def runIncremental(spark: SparkSession, dataDir: String,
       warehouseDir: String, nPurchaseRows: Long,
       year: String, month: String): Map[String, Long] =
-    runDag(spark, dataDir, nPurchaseRows, Month(year, month),
-      DirTier(warehouseDir))
+    runDag(spark, new Retail(spark, dataDir, nPurchaseRows),
+      Month(year, month), DirTier(warehouseDir))
 
-  /** The LAKEHOUSE-TIER variant of the full DAG (VERDICT r9 #8): every
-    * tier lands as a [[graft.format.GraftTable]] instead of raw
-    * partition directories — bronze fact, silver purchase_all_info,
-    * and the four gold marts each commit as ONE atomic snapshot with
-    * zone-map stats on the month key. Same dataflow, same row counts;
-    * what changes is the storage contract (manifests + snapshots +
-    * time travel instead of directory listings), so benchmarking this
-    * next to [[run]] tracks the format's write amplification at the
-    * reference's full 28.6M-row volume. Returns each mart's row count
-    * as its overwrite recorded it (`output_rows`), not by a re-scan. */
+  /** [[run]] with every table a [[graft.format.GraftTable]] (VERDICT
+    * r9 #8): one atomic overwrite per table, zone-map stats on the
+    * month key — same dataflow and rows, the storage contract is what
+    * changes. Returns each mart's rows as its commit recorded them
+    * (`output_rows`), not by a re-scan. */
   def runLake(spark: SparkSession, dataDir: String, warehouseDir: String,
       nPurchaseRows: Long): Map[String, Long] =
-    runDag(spark, dataDir, nPurchaseRows, Full, LakeTier(warehouseDir))
+    runDag(spark, new Retail(spark, dataDir, nPurchaseRows), Full,
+      LakeTier(warehouseDir))
 
-  /** Monthly incremental through the lakehouse tier: ONE month of the
-    * fact is re-synthesized and [[graft.format.GraftTable
-    * .replaceWhere]]'d into each tier — delete-the-window + insert in
-    * one atomic snapshot per table, zone maps confining the COW audit
-    * to the window's files. The format-native restatement of the
-    * reference's dynamic partition overwrite
-    * (`jb_de_enhancement_t0_fact_d2s.py:23`). Returns each mart's
-    * window row count as its replaceWhere recorded it (`output_rows`),
-    * not by recomputing the mart. */
+  /** [[runIncremental]] on the lake tier: one atomic
+    * [[graft.format.GraftTable.replaceWhere]] per table — the
+    * format-native restatement of the reference's dynamic partition
+    * overwrite (`jb_de_enhancement_t0_fact_d2s.py:23`), zone maps
+    * confining the COW audit to the month's files. Returns each mart's
+    * rows for the month as its commit recorded them. */
   def runIncrementalLake(spark: SparkSession, dataDir: String,
       warehouseDir: String, nPurchaseRows: Long,
       year: String, month: String): Map[String, Long] =
-    runDag(spark, dataDir, nPurchaseRows, Month(year, month),
-      LakeTier(warehouseDir))
+    runDag(spark, new Retail(spark, dataDir, nPurchaseRows),
+      Month(year, month), LakeTier(warehouseDir))
 
-  /** The slice of the fact a run loads: all of it, or one month. */
-  private sealed trait Window {
-    def slice(df: DataFrame): DataFrame = this match {
-      case Full => df
-      case m: Month => df.where(m.cond)
-    }
-  }
-  private case object Full extends Window
-  private final case class Month(year: String, month: String)
-      extends Window {
-    def cond: Column =
-      col("purchase_year") === year && col("purchase_month") === month
-  }
-
-  private val PartCols = Seq("affiliate", "purchase_year", "purchase_month")
-  private val Bronze = "bronze/purchase"
-  private val Silver = "silver/purchase_all_info"
-
-  /** One table of one run, opened once: silver is written and then
-    * read back through the same handle. */
-  private trait Table {
-    /** Writes `df`; returns the rows written. */
-    def write(df: DataFrame): Long
-    def readBack(): DataFrame
-  }
-
-  /** A storage tier: where the chain's tables land and every decision
-    * in which the tiers differ. Tables are named by their
-    * warehouse-relative directory ([[Bronze]], [[Silver]],
-    * `gold/<mart>`). */
-  private sealed trait Tier {
-    /** Job-description prefix of the run's stages. */
-    def label: String
-    /** Overlap order: bronze starts before the silver write and is
-      * awaited before gold (true), or starts after the silver write
-      * and is awaited after gold (false). */
-    def bronzeWithSilver: Boolean
-    /** The narrow fact laid out for the silver write. */
-    def silverInput(fact: DataFrame, window: Window): DataFrame
-    def table(spark: SparkSession, rel: String, window: Window): Table
-    def registerMarts(spark: SparkSession, marts: Iterable[String],
-        window: Window): Unit = ()
-  }
-
-  /** Hive-partitioned parquet directories, dynamic overwrite. */
-  private final case class DirTier(warehouseDir: String) extends Tier {
+  /** The retail star on the [[Medallion]] chain: the synthesized
+    * purchase fact over the seed CSVs under `dataDir`, both dimensions
+    * broadcast into silver. */
+  private final class Retail(spark: SparkSession, dataDir: String,
+      nRows: Long) extends Star {
     val label = "retail"
-    // STAGE ORDER (r16, VERDICT r15 #1): the silver write — the leg's
-    // critical path (gold reads it back) and its biggest single job —
-    // runs FIRST at full cluster width; the bronze write (an
-    // independent output) overlaps the SMALL gold aggregates instead
-    // of the silver encode. r15 overlapped bronze with silver, which
-    // under local FIFO scheduling queued the 28.6M-row silver job
-    // behind the 28.6M-row bronze job and doubled the concurrent
-    // partitioned-write demand (64 writer tasks on 32 cores) — the
-    // driver's independent run measured 171 s at 32 cores vs 120 s at
-    // 8, i.e. the overlap was net-negative exactly where write
-    // throughput, not idle cores, was the limit (guide §2.6: overlap
-    // fills idle capacity; it must not fight the critical path for
-    // it).
-    val bronzeWithSilver = false
-    // Exchange the NARROW fact on the sink's partition columns BEFORE
-    // the silver joins (guide §2.3 — shuffle fewer bytes): the dims
-    // broadcast (see [[silver]]), so the joined frame keeps this
-    // clustering and the write needs no second exchange — the old
-    // shape shuffled the POST-join rows, paying the category/customer
-    // description strings through the wire for the same final layout.
-    def silverInput(fact: DataFrame, window: Window): DataFrame =
-      fact.repartition(fact.sparkSession.sparkContext.defaultParallelism,
-        PartCols.map(fact.col): _*)
-    def table(spark: SparkSession, rel: String, window: Window): Table =
-      new Table {
-        private val path = s"$warehouseDir/$rel"
-        def write(df: DataFrame): Long = Sinks.writePartitioned(df, path,
-          PartCols, prePartitioned = rel == Silver)
-        def readBack(): DataFrame = window.slice(spark.read.parquet(path))
-      }
-    // Registration stays serial after the parallel mart writes: the
-    // embedded metastore serializes DDL anyway, and registration must
-    // see the finished directory. A re-run rewrites partitions of
-    // already-registered tables, so only the initial load registers.
-    override def registerMarts(spark: SparkSession,
-        marts: Iterable[String], window: Window): Unit =
-      if (window == Full) marts.foreach { m =>
-        // persistent (crawler-equivalent) registration: any OTHER
-        // session on the same metastore reads the mart by name, like
-        // the reference's Glue-catalog marts feeding Athena (SURVEY
-        // §2.13)
-        Sinks.registerPersistent(spark, m, s"$warehouseDir/gold/$m")
-      }
-  }
-
-  /** Every table a [[graft.format.GraftTable]]: an initial load is one
-    * atomic `overwrite` per table, a month one `replaceWhere`. */
-  private final case class LakeTier(warehouseDir: String) extends Tier {
-    val label = "retail-lake"
-    // the bronze commit overlaps the silver stage (the directory
-    // tier's opposite order; both were measured in r16)
-    val bronzeWithSilver = true
-    // Range-cluster the NARROW fact BEFORE the broadcast dim joins
-    // (the lake twin of the directory tier's narrow-fact exchange):
-    // broadcast joins preserve the child's partitioning, so the silver
-    // write inherits the clustering and needs no second exchange.
-    // Clustering the post-join frame instead re-executed the whole
-    // synth+join pipeline TWICE at this width — repartitionByRange's
-    // bounds sampler runs the full child, and with both dims broadcast
-    // there is no shuffle boundary below it to reuse — and shipped the
-    // wide joined rows (category/customer description strings) through
-    // the wire for the same final layout. A month's slice holds one
-    // (year, month), so its files' envelopes are disjoint from every
-    // other month's without clustering.
-    def silverInput(fact: DataFrame, window: Window): DataFrame =
-      window match {
-        case Full => clustered(fact, 32)
-        case _: Month => fact
-      }
-    def table(spark: SparkSession, rel: String, window: Window): Table = {
-      val root = s"$warehouseDir/${rel.replace('/', '_')}"
-      val gold = rel.startsWith("gold/")
-      val t = window match {
-        case Full => GraftTable.openOrCreate(spark, root,
-          Seq("purchase_year", "purchase_month"))
-        case _: Month => GraftTable.forPath(spark, root)
-      }
-      new Table {
-        def write(df: DataFrame): Long = outputRowsOf(t, window match {
-          // silver arrives range-clustered from silverInput
-          case Full => t.overwrite(
-            if (rel == Silver) df else clustered(df, if (gold) 8 else 32),
-            numFiles = 0)
-          case m: Month =>
-            t.replaceWhere(m.cond, df, numFiles = if (gold) 4 else 8)
-        })
-        def readBack(): DataFrame = window match {
-          case Full => t.read()
-          case m: Month => t.prunedWhere(m.cond)._1.where(m.cond)
-        }
-      }
-    }
-  }
-
-  /** RANGE-cluster on the window key (numFiles = 0 preserves the
-    * clustering through writeData): per-file (year, month) envelopes
-    * stay disjoint, so the monthly replaceWhere's stats-pruned audit
-    * reads ONLY the window's files. A hash repartition here spreads
-    * every month across every file and turns each incremental into a
-    * full-table rewrite. */
-  private def clustered(df: DataFrame, n: Int): DataFrame =
-    df.repartitionByRange(n, col("purchase_year"), col("purchase_month"))
-
-  /** Rows commit `v` of `t` wrote from its caller's frame — the
-    * `output_rows` overwrite and replaceWhere record — so a mart's
-    * count costs no recompute or re-scan job. */
-  private def outputRowsOf(t: GraftTable, v: Long): Long =
-    t.outputRows(v).getOrElse(throw new IllegalStateException(
-      s"${t.root} v$v recorded no output_rows"))
-
-  /** The one bronze → silver → gold chain (stepfunction.json: T0 →
-    * T1 → T2 ∥×4) behind all four entry points. */
-  private def runDag(spark: SparkSession, dataDir: String, nRows: Long,
-      window: Window, tier: Tier): Map[String, Long] = {
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val label = tier.label + (if (window == Full) "" else "-inc")
-    val products = productsInfo(spark, dataDir)
-    // T0: on a re-run, the month's slice of the (deterministic) fact —
-    // in the reference this is the JDBC pushdown query's date window
-    val purchase = window.slice(synthPurchase(spark, products, nRows))
-    // The frames below are built, and silver opened, on first use in
-    // the silver stage: on the lake tier the bronze write is already
-    // running while the driver analyzes them.
-    lazy val custZip = customerWithZipcode(
+    val factName = "purchase"
+    val partCols = Seq("affiliate", "purchase_year", "purchase_month")
+    val silverKeepsFactLayout = true
+    private val products = productsInfo(spark, dataDir)
+    private lazy val custZip = customerWithZipcode(
       customer(spark, dataDir), zipcode(spark, dataDir))
-    // The fact is a deterministic hash synthesis, recomputed per
-    // writer instead of waiting for the bronze write and re-reading
-    // it. (Measured and REJECTED in r15: caching the synth — 115 s vs
-    // 84–89 s.) inferPartTypes reproduces the read-back's
-    // partition-type inference ("08" → 8), semantically load-bearing
-    // for the weekday UDF (see [[inferPartTypes]]); marts are
-    // byte-identical (RetailGoldenSpec pins them).
-    lazy val fact = inferPartTypes(purchase)
-    lazy val silverT = tier.table(spark, Silver, window)
-    def writeSilver(): Unit =
-      Pipeline.labelled(spark, s"$label: silver write") {
-        silverT.write(
-          silver(tier.silverInput(fact, window), products, custZip))
-        ()
-      }
-    // the in-flight bronze write is ALWAYS awaited (ADVICE r15: a
-    // throwing stage must not leave it writing on a global-pool thread
-    // while the caller unwinds and deletes the warehouse)
-    def overlappingBronze[T](stage: => T): T = {
-      val bronzeWrite = Future {
-        Pipeline.labelled(spark, s"$label: bronze write") {
-          tier.table(spark, Bronze, window).write(purchase)
-        }
-      }
-      try stage finally Await.result(bronzeWrite, Duration.Inf)
-    }
-    def gold(): Map[String, Long] = {
-      val silverBack = silverT.readBack()
-      // The four mart writes are independent outputs — run them as
-      // parallel jobs (guide §2.6; the D1 fan-out Pipeline.writeMarts
-      // has always used). Output files, rows, and dirs are identical
-      // to a serial loop, and each write returns the rows it wrote.
-      val counts = Await.result(Future.sequence(
-        marts(fact, silverBack, custZip).toSeq.map { case (name, df) =>
-          Future {
-            Pipeline.labelled(spark, s"$label: $name") {
-              name -> tier.table(spark, s"gold/$name", window).write(df)
-            }
-          }
-        }), Duration.Inf).toMap
-      tier.registerMarts(spark, counts.keys, window)
-      counts
-    }
-    if (tier.bronzeWithSilver) { overlappingBronze(writeSilver()); gold() }
-    else { writeSilver(); overlappingBronze(gold()) }
+    def fact(window: Window): DataFrame =
+      slice(synthPurchase(spark, products, nRows), window)
+    def silver(fact: DataFrame): DataFrame =
+      RetailPipeline.silver(fact, products, custZip)
+    def marts(fact: DataFrame, silver: DataFrame): Map[String, DataFrame] =
+      RetailPipeline.marts(fact, silver, custZip)
   }
-
-  /** The directory pipeline reads its partition keys back through
-    * hive-style partition-type INFERENCE ("08" → 8) — and that
-    * inference is semantically load-bearing: the re-formatted month
-    * feeds the weekday UDF exactly the malformed date the reference's
-    * own jobs feed it (the pinned `"Invalid date format. Please"`
-    * rows, `jb_de_enhancement_t2_salesbydatetime_s2s.py`). The lake
-    * tier preserves written strings, so it applies the same cast
-    * explicitly — byte-identical marts either way. */
-  private def inferPartTypes(df: DataFrame): DataFrame = df
-    .withColumn("purchase_year", col("purchase_year").cast("int"))
-    .withColumn("purchase_month", col("purchase_month").cast("int"))
 }

@@ -66,17 +66,10 @@ object Sinks {
   def writeTable(df: DataFrame, path: String): Unit =
     overwrite(df).parquet(path)
 
-  /** Crawler replacement (S9): (re)register an output directory as a
-    * session-catalog table; partition columns are rediscovered from the
-    * Hive-style directory layout by the parquet source. */
-  def register(spark: SparkSession, name: String, path: String): Unit =
-    spark.read.parquet(path).createOrReplaceTempView(name)
-
-  /** Persistent crawler registration (S9's cross-job half): the
-    * reference's crawler writes partitioned table metadata into the
-    * Glue Data Catalog, where EVERY subsequent job/session sees it
-    * (document/glue_t0.md:95-117) — a temp view only lives in one
-    * session. This variant registers an EXTERNAL datasource table in
+  /** Persistent crawler registration (S9): the reference's crawler
+    * writes partitioned table metadata into the Glue Data Catalog,
+    * where EVERY subsequent job/session sees it
+    * (document/glue_t0.md:95-117). This registers an EXTERNAL datasource table in
     * the shared catalog and recovers Hive-layout partitions, so any
     * other session on the same metastore reads it by name with
     * partition pruning intact (PersistentCatalogSpec proves a fresh

@@ -279,66 +279,61 @@ object FormatQueries {
       .orderBy(col("order_year"))
   }
 
-  /** q218 — the T1 SILVER JOIN through the LAKEHOUSE BRONZE: the fact
-    * lands in a GraftTable (one atomic snapshot), T1 reads it back
-    * through predicate-driven zone maps, and the reference's 3-way
-    * left-join denormalization runs unchanged on top. Hash-equal to
-    * the flat join chain over the originals ⟺ the storage contract
-    * swap (directories → manifests) changed nothing semantically.
-    * count(r_name) pins the left-join nullability through the chain. */
-  def q218LakehouseSilver(s: SparkSession, dir: String): DataFrame = {
+  /** The TPC-H star's medallion chain on the lake tier, shared by
+    * q218 and q220 and built once per (session, sf dir): the initial
+    * load (one atomic overwrite per table), then a 1996 re-run (one
+    * replaceWhere snapshot per table). The re-run re-ingests the same
+    * source rows, so every table must come out row-identical to the
+    * initial load. Returns the warehouse. */
+  private def lakeChain(s: SparkSession, dir: String): String = {
     val wh = graft.Scratch.dir(s, "lakewh")
-    val cfg = graft.etl.Pipeline.Config(dir, wh, "19920101", "20021231")
-    buildOnce(graft.etl.LakehousePipeline.bronzePath(wh)) {
-      graft.etl.Pipeline.t0Dimensions(s, cfg)
-      graft.etl.LakehousePipeline.t0FactLake(s, cfg)
+    buildOnce(wh) {
+      graft.etl.Pipeline.runLake(s, dir, wh, graft.etl.Medallion.Full)
+      graft.etl.Pipeline.runLake(s, dir, wh,
+        graft.etl.Medallion.Span("1996", "01", "1996", "12"))
     }
-    graft.etl.LakehousePipeline.silverLake(s, cfg)
+    wh
+  }
+
+  /** q218 — the T1 SILVER JOIN on the LAKEHOUSE tier: the silver
+    * table the chain committed as a GraftTable (initial load plus the
+    * 1996 re-run), read back through its manifest. Hash-equal to the
+    * flat join chain over the originals ⟺ the storage contract swap
+    * (directories → manifests) and the window re-run changed nothing
+    * semantically. count(r_name) pins the left-join nullability
+    * through the chain. */
+  def q218LakehouseSilver(s: SparkSession, dir: String): DataFrame =
+    GraftTable.forPath(s, s"${lakeChain(s, dir)}/silver_fact_all_info")
+      .read()
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         round(sum(col("l_extendedprice").cast("decimal(18,4)"))
           .cast("double"), 2).as("revenue"),
         count(col("r_name")).as("n_with_region"))
       .orderBy(col("l_returnflag"))
-  }
 
-  /** q220 — the medallion DAG lakehouse END-TO-END: bronze fact in a
-    * GraftTable (q218's build), T1 silver through zone-map pruned
-    * reads, and the four T2 gold marts THEMSELVES GraftTables —
-    * first load as one atomic append each, then a 1996 window
-    * re-run lands as one atomic [[graft.format.GraftTable
-    * .replaceWhere]] snapshot per mart (the incremental-mart
-    * primitive; idempotent by construction, so the hash pins that
-    * the window swap neither lost nor duplicated a single mart
-    * row). The gate result is the full `sales_by_region` mart read
-    * back from its table, compared to a DuckDB restatement of the
-    * whole chain over the ORIGINAL parquet. */
-  def q220LakehouseGold(s: SparkSession, dir: String): DataFrame = {
-    val wh = graft.Scratch.dir(s, "lakewh")
-    val cfgFull = graft.etl.Pipeline.Config(dir, wh, "19920101", "20021231")
-    buildOnce(graft.etl.LakehousePipeline.bronzePath(wh)) {
-      graft.etl.Pipeline.t0Dimensions(s, cfgFull)
-      graft.etl.LakehousePipeline.t0FactLake(s, cfgFull)
-    }
-    buildOnce(s"$wh/gold_lake") {
-      graft.etl.LakehousePipeline.t2MartsLake(s, cfgFull)
-      // incremental month-window re-run: bronze replaceWhere + one
-      // replaceWhere snapshot per mart (same source rows → the marts
-      // must come out bit-identical to the initial load)
-      val cfg1996 = graft.etl.Pipeline.Config(dir, wh,
-        "19960101", "19961231")
-      graft.etl.LakehousePipeline.t0FactLake(s, cfg1996)
-      graft.etl.LakehousePipeline.t2MartsLake(s, cfg1996)
-    }
-    GraftTable.forPath(s,
-        graft.etl.LakehousePipeline.goldPath(wh, "sales_by_region"))
+  /** q220 — the medallion DAG lakehouse END-TO-END: bronze, silver and
+    * the four T2 gold marts all GraftTables, first loaded as one
+    * atomic overwrite each, then a 1996 window re-run lands as one
+    * atomic [[graft.format.GraftTable.replaceWhere]] snapshot per
+    * table (the incremental-mart primitive; idempotent by
+    * construction, so the hash pins that the window swap neither lost
+    * nor duplicated a single mart row). The gate result is the full
+    * `sales_by_region` mart read back from its table, compared to a
+    * DuckDB restatement of the whole chain over the ORIGINAL parquet.
+    * The mart keeps the int year and month the chain writes on both
+    * tiers; the projection formats them as the oracle's `strftime`
+    * does ("1996", "01"). */
+  def q220LakehouseGold(s: SparkSession, dir: String): DataFrame =
+    GraftTable.forPath(s, s"${lakeChain(s, dir)}/gold_sales_by_region")
       .read()
-      .select(col("l_returnflag"), col("ship_year"), col("ship_month"),
+      .select(col("l_returnflag"),
+        format_string("%04d", col("ship_year")).as("ship_year"),
+        format_string("%02d", col("ship_month")).as("ship_month"),
         col("r_name"), col("n_name"), col("total_purchase_amount"),
         col("count_of_purchase"))
       .orderBy(col("l_returnflag"), col("ship_year"), col("ship_month"),
         col("r_name"), col("n_name"))
-  }
 
   /** q214 — CDC-MAINTAINED VIEW: a per-status aggregate view seeded
     * from snapshot 1 and then maintained by folding each version's

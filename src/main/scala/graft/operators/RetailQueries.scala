@@ -37,10 +37,13 @@ object RetailQueries {
   /** Reference seed CSVs (read-only). */
   val DataDir = "/root/reference/data"
 
-  /** Where the oracle-visible parquet copies land. Single source of
-    * truth: [[graft.OracleSql]] interpolates this constant into the
-    * q164–q167 oracle SQL at dump time. */
-  val StageDir = "/root/repo/target/retail_stage"
+  /** Where the oracle-visible parquet copies land: `target/retail_stage`
+    * under the process's working directory, so each checkout stages
+    * into itself. Single source of truth: [[graft.OracleSql]]
+    * interpolates this constant into the q164–q167 oracle SQL at dump
+    * time. */
+  val StageDir: String = java.nio.file.Paths.get("target", "retail_stage")
+    .toAbsolutePath.toString
 
   /** Same fact size RetailGoldenSpec exercises. */
   val NPurchase = 100000L

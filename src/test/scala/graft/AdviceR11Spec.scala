@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,14 +16,29 @@ import graft.sources.GraftTableSource
   * silently skipping their values, (3) the connector write path
   * refuses dead-physical-name collisions like the V1 path, and
   * (4) a multi-change ALTER is one atomic commit. */
-class AdviceR11Spec extends AnyFunSuite {
+class AdviceR11Spec extends AnyFunSuite with BeforeAndAfterEach {
   import TestSpark.spark
   import spark.implicits._
 
   private val fmt = classOf[GraftTableSource].getName
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_advice11_").toString + "/t"
+  private val dirs = scala.collection.mutable.Buffer.empty[String]
+
+  /** A table root in a temp dir of its own, deleted after the test. */
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_advice11_")
+      .toString
+    dirs += dir
+    dir + "/t"
+  }
+
+  override def afterEach(): Unit =
+    try super.afterEach()
+    finally {
+      dirs.foreach(d => new scala.reflect.io.Directory(new java.io.File(d))
+        .deleteRecursively())
+      dirs.clear()
+    }
 
   /** A table whose FIRST dir predates the `k` stats column: created
     * with no stats, then re-opened declaring stats on `k` and

@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.{LakehousePipeline, Pipeline}
+import graft.etl.Medallion.{Full, Span}
+import graft.etl.Pipeline
 import graft.format.GraftTable
 
-/** The T0-on-table-format path: silver row-identity with the classic
-  * pipeline, snapshot-per-load accounting, and file-granular COW on
-  * the incremental reload. */
+/** The TPC-H chain on the table format: silver row-identity with the
+  * directory tier, snapshot-per-load accounting, and file-granular
+  * COW on the re-run. */
 class LakehousePipelineSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
@@ -19,19 +20,18 @@ class LakehousePipelineSpec extends AnyFunSuite {
       .createTempDirectory("graft_lake_classic_").toString
     val whLake = java.nio.file.Files
       .createTempDirectory("graft_lake_fmt_").toString
-    val full = Pipeline.Config(sfDir, whClassic, "19920101", "20021231")
-    val fullLake = full.copy(warehouseDir = whLake)
     try {
-      // classic: T0 fact + dims, then silver off the bronze dirs
-      Pipeline.t0Fact(spark, full)
-      Pipeline.t0Dimensions(spark, full)
+      // classic: the directory tier over every ship date
+      Pipeline.run(spark,
+        Pipeline.Config(sfDir, whClassic, "19920101", "20021231"))
       val classicFact = spark.read.parquet(s"$whClassic/bronze/fact")
-      val classicSilver = Pipeline.silverJoin(spark, full, classicFact)
+      val classicSilver =
+        spark.read.parquet(s"$whClassic/silver/fact_all_info")
 
-      // lakehouse: same dims, fact through the table format
-      Pipeline.t0Dimensions(spark, fullLake)
-      assert(LakehousePipeline.t0FactLake(spark, fullLake) == 1)
-      val lakeSilver = LakehousePipeline.silverLake(spark, fullLake)
+      // lakehouse: the same chain, every table through the format
+      Pipeline.runLake(spark, sfDir, whLake, Full)
+      def table(name: String) = GraftTable.forPath(spark, s"$whLake/$name")
+      val lakeSilver = table("silver_fact_all_info").read()
 
       assert(lakeSilver.count() == classicSilver.count())
       val cols = classicSilver.columns.map(col).toSeq
@@ -40,22 +40,27 @@ class LakehousePipelineSpec extends AnyFunSuite {
         classicSilver.exceptAll(lakeSilver.select(cols: _*)).isEmpty,
         "silver must be row-identical across storage contracts")
 
-      // incremental reload of ONE year = exactly one new snapshot,
-      // with every out-of-window file carried forward by reference
-      val t0 = GraftTable.forPath(spark, LakehousePipeline
-        .bronzePath(whLake))
-      val before = t0.manifest().select("path").as[String].collect().toSet
-      val inc = fullLake.copy(fromDate = "19960101", toDate = "19961231")
-      assert(LakehousePipeline.t0FactLake(spark, inc) == 2)
-      val t1 = GraftTable.forPath(spark,
-        LakehousePipeline.bronzePath(whLake))
+      // incremental reload of ONE year = exactly one new snapshot per
+      // table, with every out-of-window file carried forward by
+      // reference
+      val tables = Seq("bronze_fact", "silver_fact_all_info",
+        "gold_sales_by_datetime", "gold_sales_by_category",
+        "gold_sales_by_region", "gold_sales_by_customer")
+      val before = table("bronze_fact").manifest().select("path")
+        .as[String].collect().toSet
+      Pipeline.runLake(spark, sfDir, whLake,
+        Span("1996", "01", "1996", "12"))
+      val t1 = table("bronze_fact")
       val after = t1.manifest().select("path").as[String].collect().toSet
       assert(before.intersect(after).nonEmpty,
         "files outside the reloaded window must carry forward")
       // content unchanged: the reload re-ingested the same source year
       assert(t1.read().count() == classicFact.count())
-      val h = t1.history().collect().map(r => (r.getLong(0), r.getString(1)))
-      assert(h.toSeq == Seq((2L, "replace"), (1L, "append")))
+      tables.foreach { name =>
+        val h = table(name).history().collect()
+          .map(r => (r.getLong(0), r.getString(1)))
+        assert(h.toSeq == Seq((2L, "replace"), (1L, "overwrite")), name)
+      }
     } finally {
       import scala.reflect.io.Directory
       Seq(whClassic, whLake).foreach(d =>

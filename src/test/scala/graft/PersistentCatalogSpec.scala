@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.{Pipeline, Sinks}
+import graft.etl.{Medallion, Pipeline, Sinks}
 
 /** S9's cross-job half: the reference's crawler registers partitioned
   * tables in a shared catalog that OTHER jobs then read by name
@@ -16,8 +16,10 @@ class PersistentCatalogSpec extends AnyFunSuite {
       "table, with its partitions recovered and prunable") {
     val wh = java.nio.file.Files
       .createTempDirectory("graft_catalog_wh_").toString
-    val cfg = Pipeline.Config(sfDir, wh, "19950101", "19961231")
-    Pipeline.t0Fact(spark, cfg)
+    val tpch = Pipeline.Tpch(spark, sfDir)
+    Sinks.writePartitioned(
+      tpch.fact(Medallion.Span("1995", "01", "1996", "12")),
+      s"$wh/bronze/fact", tpch.partCols)
 
     Sinks.registerPersistent(spark, "fact_persist", s"$wh/bronze/fact")
     try {

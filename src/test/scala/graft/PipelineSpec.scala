@@ -48,19 +48,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(fact.where(col("ship_year") === "1996").count() > 0)
   }
 
-  test("run leaves the caller's job-description label unchanged, " +
-      "pipelined and staged") {
+  test("run leaves the caller's job-description label unchanged") {
     val sc = spark.sparkContext
-    Seq(true, false).foreach { pipelined =>
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription("pipeline-spec: caller")
-      try {
-        Pipeline.run(spark, Pipeline.Config(sfDir, freshDir(), "19950101",
-          "19951231", pipelined))
-        assert(sc.getLocalProperty("spark.job.description") ==
-          "pipeline-spec: caller", s"pipelined = $pipelined")
-      } finally sc.setLocalProperty("spark.job.description", prev)
-    }
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("pipeline-spec: caller")
+    try {
+      Pipeline.run(spark, Pipeline.Config(sfDir, freshDir(), "19950101",
+        "19951231"))
+      assert(sc.getLocalProperty("spark.job.description") ==
+        "pipeline-spec: caller")
+    } finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   test("silver read prunes partitions (plan shows PartitionFilters)") {

@@ -63,9 +63,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("T0 fact ingest pushes its date window into the parquet scan " +
       "(native timestamp range, not the derived yyyyMMdd string)") {
-    val cfg = graft.etl.Pipeline.Config(sfDir, "/tmp/graft_unused_wh",
-      "19940101", "19941231")
-    val p = plan(graft.etl.Pipeline.t0FactPlan(spark, cfg))
+    val p = plan(graft.etl.Pipeline.Tpch(spark, sfDir)
+      .fact(graft.etl.Medallion.Span("1994", "01", "1994", "12")))
     assert(p.contains("GreaterThanOrEqual(l_shipdate"),
       s"T0 window lower bound must reach PushedFilters:\n$p")
     assert(p.contains("LessThan(l_shipdate"),
@@ -368,18 +367,14 @@ class PlanShapeSpec extends AnyFunSuite {
   test("silver join survives a 100× scale-up: orders/customer/part fall " +
       "back to shuffle joins when they exceed the broadcast threshold, " +
       "while the hinted fixed-size dims (nation/region) still broadcast") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_planshape_wh_").toString
-    val cfg = graft.etl.Pipeline.Config(sfDir, wh, "19920101", "20021231")
-    graft.etl.Pipeline.t0Fact(spark, cfg)
-    graft.etl.Pipeline.t0Dimensions(spark, cfg)
-    val fact = spark.read.parquet(s"$wh/bronze/fact")
+    val tpch = graft.etl.Pipeline.Tpch(spark, sfDir)
+    val fact = tpch.fact(graft.etl.Medallion.Span("1992", "01", "2002", "12"))
     // Simulate "dims too big to broadcast" (the 100 TB stats point):
     // with the threshold off, ONLY explicit hints may broadcast.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p = plan(graft.etl.Pipeline.silverJoin(spark, cfg, fact))
+      val p = plan(tpch.silver(fact))
       assert(p.contains("SortMergeJoin [l_orderkey") ||
         p.contains("SortMergeJoin [cast(l_orderkey"),
         s"fact⋈orders must sort-merge when orders can't broadcast:\n$p")
@@ -394,13 +389,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // RESULT whose planning-time estimate is conservative, so the
     // broadcast decision lands at runtime via AQE: execute, then check
     // the FINAL plan.
-    val dfSmall = graft.etl.Pipeline.silverJoin(spark, cfg, fact)
+    val dfSmall = tpch.silver(fact)
     dfSmall.collect() // count() would execute a different wrapped query
     val pSmall = plan(dfSmall).split("== Initial Plan ==").head
     assert(!pSmall.contains("SortMergeJoin"),
       s"small dims must (auto-)broadcast without hints:\n$pSmall")
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(wh)).deleteRecursively()
   }
 
   test("q60 vocab top-k: the limit pushes BELOW the window " +
