@@ -56,8 +56,12 @@ object GraftSession {
     *  - one shuffle partition per core instead of 200: a local stage
     *    can run no more tasks at once, and each extra partition costs
     *    every map task one more shuffle block;
-    *  - `RawLocalFileSystem` skips the `.crc` checksum sidecars, which
-    *    halves FS operations on many-small-file partitioned writes;
+    *  - the engine's [[LocalFs]], a `RawLocalFileSystem`: it skips the
+    *    `.crc` checksum sidecars, which halves FS operations on
+    *    many-small-file partitioned writes, and it sets each new dir's
+    *    and file's mode in-process, where the stock class starts a
+    *    `chmod` process per dir and per file when the native Hadoop
+    *    library is absent;
     *  - committer v2 commits task output in parallel from the tasks
     *    instead of in a serial driver rename pass;
     *  - no web UI.
@@ -73,8 +77,7 @@ object GraftSession {
           else n
         Map(
           "spark.sql.shuffle.partitions" -> cores,
-          "spark.hadoop.fs.file.impl" ->
-            "org.apache.hadoop.fs.RawLocalFileSystem",
+          "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
           "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" ->
             "2",
           "spark.ui.enabled" -> "false")

@@ -11,38 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * table metadata outlives the driver that wrote it. */
 class CrossProcessCatalogSpec extends AnyFunSuite {
 
-  private val javaBin =
-    s"${System.getProperty("java.home")}/bin/java"
-
-  private lazy val classpath: String = {
-    val classes =
-      new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val sparkJars = new java.io.File("/opt/spark/jars").listFiles()
-      .filter(_.getName.endsWith(".jar")).map(_.getAbsolutePath)
-    (classes +: sparkJars.toSeq)
-      .mkString(java.io.File.pathSeparator)
-  }
-
-  private val opens =
-    Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic")
-      .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED") ++
-    Seq("sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar")
-      .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-
-  private def fork(meta: String, args: Seq[String]): (Int, String) = {
-    val cmd = Seq(javaBin, "-Xmx3g",
-      s"-Dderby.stream.error.file=$meta/derby_probe.log") ++ opens ++
-      Seq("-cp", classpath, "graft.etl.CatalogProbe") ++ args
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-    val code = p.waitFor()
-    (code, out)
-  }
+  private def fork(meta: String, args: Seq[String]): (Int, String) =
+    ForkedJvm.run("graft.etl.CatalogProbe", args,
+      Seq("-Xmx3g", s"-Dderby.stream.error.file=$meta/derby_probe.log"))
 
   private def probe(out: String, key: String): String =
     out.linesIterator.collectFirst {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
 
   private val local = Map(
-    "spark.hadoop.fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem",
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     "spark.ui.enabled" -> "false")
 
@@ -29,7 +29,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(s.sparkContext.hadoopConfiguration
       .get("mapreduce.fileoutputcommitter.marksuccessfuljobs") === "false")
     assert(s.sparkContext.hadoopConfiguration.get("fs.file.impl") ===
-      "org.apache.hadoop.fs.RawLocalFileSystem")
+      classOf[LocalFs].getName)
   }
 
   test("local[n] adds n shuffle partitions, raw local FS, committer v2 " +
@@ -47,6 +47,10 @@ class GraftSessionSpec extends AnyFunSuite {
   test("a cluster master gets the defaults and none of the local " +
       "settings") {
     assert(GraftSession.conf("spark://h:7077") === GraftSession.defaults)
+    // a cluster keeps its own file system: the engine's local one is
+    // for a single machine only
+    assert(!GraftSession.conf("spark://h:7077")
+      .contains("spark.hadoop.fs.file.impl"))
   }
 
   test("extraConf overrides every default and local setting") {
