@@ -1,20 +1,530 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.etl.Pipeline
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
+import scala.math.BigDecimal.RoundingMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, count, lit, max, sum}
+import org.json4s.{JArray, JBool, JDecimal, JDouble, JField, JInt, JLong,
+  JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, render}
+import graft.etl.{Pipeline, RetailPipeline}
+import graft.etl.Medallion.Span
+import graft.format.{CommitProfile, GraftTable, LogStore,
+  S3ConditionalPutLogStore, S3FakeServer}
+import graft.operators.{CurationGate, Dedup, RetailQueries, Similarity}
 
-/** Benchmark main — one JSON line on stdout for the driver.
+/** Benchmark main — one JSON result line on stdout.
   *
-  * Each query runs once for warmup (file listing, plan, codegen, JIT)
-  * and once measured; `etl_pipeline` is the full T0→T1→T2 medallion DAG
-  * into a temp warehouse, the direct analogue of the reference's
-  * end-to-end Step Functions run (BASELINE.md: ≈20 min initial load at
-  * 28.6M rows on 2–4 G.1X workers).
+  * Each registry query runs once for warmup (file listing, plan,
+  * codegen, JIT) and twice measured. Then the [[legs]] run, each
+  * sample in a fresh session: `etl_pipeline` is the full T0→T1→T2
+  * medallion DAG into a temp warehouse, the direct analogue of the
+  * reference's end-to-end Step Functions run (BASELINE.md: ≈20 min
+  * initial load at 28.6M rows on 2–4 G.1X workers); the others are
+  * scale smokes, reported per key and left out of the `total`.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (default: the sf0.1 testdata dir),
+  * `SPARK_GRAFT_CPUS` ([[GraftSession.localMaster]]), `SPARK_GRAFT_ONLY`
+  * (a comma list of query, leg or key names: only those run, see
+  * [[legOn]]) and `SPARK_GRAFT_ETL_X` (the etl smoke's replication
+  * factor, default 10; 48 reproduces the reference's own 28.6M-row
+  * volume from sf0.1, SURVEY.md).
   */
 object Bench {
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = GraftSession.build(s"local[$cpus]", "graft-bench")
+  // Quiet-host protocol: ambient load distorts timings up to 8×. The run
+  // waits up to LoadWaitSec for the 1-minute loadavg to fall to
+  // MaxLoad, then proceeds anyway (refusing would cost the artifact)
+  // and stamps `load_ok`. Each sample then waits up to LegLoadWaitSec
+  // for a quiet host: at most MaxExtCores cores busy outside this JVM
+  // and at most MaxIoPct of time stalled on IO ([[Runner.quiet]]).
+  private val MaxLoad = 4.0
+  private val LoadWaitSec = 120
+  private val LegLoadWaitSec = 60
+  private val MaxExtCores = 2.0
+  // External SYSTEM time counts only above this: kernel writeback
+  // threads flush the leg's own page-cache writes in system time and
+  // would read as ~2.5 external cores during every write-heavy leg.
+  private val SysAllowanceCores = 2.5
+  private val MaxIoPct = 10.0
+  // Samples per leg, and the extra budget that unlocks only while fewer
+  // than two quiet samples exist (a bounded re-queue on a busy host).
+  private val LegSamples = 3
+  private val LegSamplesDirty = 5
+  /** The reference's purchase rows at full scale (FIXTURES A.4). */
+  private val RetailRows = 28593030L
+  private val OutFile = "bench_result.json"
+
+  /** How a leg's samples are taken. */
+  sealed trait Passes
+  /** Re-sampled until two quiet samples agree ([[Runner.run]]). */
+  case object Sampled extends Passes
+  /** One untimed pass first, then [[Sampled]]: it moves the cold
+    * file-system and page-cache state out of every measured sample
+    * (the first retail sample ran 1.4–2.4× its quiet twin at zero
+    * external CPU). */
+  case object Warmed extends Passes
+  /** One quiet-gated sample: a ratio instrument, not a headline. */
+  case object Once extends Passes
+
+  /** One bench leg. `body` takes a fresh session and an empty temp dir
+    * (deleted after the sample) and returns one value per key: the
+    * timed components first, then `gauges` readings (task counts, heap
+    * peaks) that take no part in convergence. `smoke` legs stay out of
+    * the `total`. */
+  final case class Leg(name: String, keys: Seq[String],
+      smoke: Boolean = true, passes: Passes = Sampled, gauges: Int = 0)(
+      val body: (SparkSession, String) => Seq[Double])
+
+  /** Artifact fields that legs fill beside their values. */
+  final class Notes {
+    /** Every `curation_history` sample's per-batch seconds. */
+    val curationBatches = mutable.Buffer.empty[JValue]
+    /** The last good `commit_throughput` sample's attempt histogram,
+      * `[[attempts, commits], …]`. */
+    var commitTputAttempts: JValue = JArray(Nil)
+  }
+
+  /** The dev filter: with `SPARK_GRAFT_ONLY` unset every leg runs; set,
+    * a leg runs when the list names the leg or one of its keys. */
+  def legOn(only: Option[Set[String]], leg: Leg): Boolean =
+    only.forall(names => names(leg.name) || leg.keys.exists(names))
+
+  /** Printed form of a value in seconds: whole numbers bare, the rest
+    * at ms precision (sub-ms digits of a wall clock are noise). */
+  def fmtSec(v: Double): JValue =
+    if (v == math.rint(v) && math.abs(v) < 1e15) JLong(v.toLong)
+    else num(v, 3)
+
+  private def num(v: Double, scale: Int): JValue =
+    JDecimal(BigDecimal(v).setScale(scale, RoundingMode.HALF_UP))
+
+  /** The headline: the queries plus the 1× etl pair, the definition
+    * kept since before the smokes existed so totals compare across
+    * runs. A -1 (not run or failed) counts as nothing. */
+  def total(results: Seq[(String, Double)], legs: Seq[Leg]): Double = {
+    val smoke = legs.filter(_.smoke).flatMap(_.keys).toSet
+    results.collect { case (k, v) if !smoke(k) && v >= 0 => v }.sum
+  }
+
+  /** One result line: `value` renders the headline and each result;
+    * `diagnostics` follow the core fields. The printed line is the core
+    * alone at [[fmtSec]] precision (~8 KB): readers that tail-capture
+    * stdout once truncated a ~50 KB diagnostics-laden line.
+    * The artifact file carries everything at full precision. */
+  def resultLine(results: Seq[(String, Double)], total: Double,
+      sfDir: String, loadOk: Boolean, value: Double => JValue,
+      diagnostics: List[JField] = Nil): String =
+    compact(render(JObject(List[JField](
+      "metric" -> JString("total"), "value" -> value(total),
+      "unit" -> JString("sec"),
+      "queries" -> JObject(results.map { case (k, v) => k -> value(v) }
+        .toList),
+      "sf" -> JString(sfDir), "load_ok" -> JBool(loadOk)) ++ diagnostics)))
+
+  /** The legs in run and report order. */
+  def legs(sfDir: String, etlX: Int, notes: Notes): Seq[Leg] = Seq(
+    // BASELINE.md's initial/incremental pair over the sf dir: the full
+    // history, then one year re-run, where dynamic partition overwrite
+    // rewrites only the touched partitions.
+    Leg("etl_pipeline", Seq("etl_pipeline", "etl_incremental"),
+        smoke = false) { (sp, tmp) => etlPair(sp, sfDir, tmp) },
+    // lineitem+orders replicated with shifted order keys: the same
+    // join and partition structure at etlX× the fact, where a partition
+    // strategy that only works at test scale blows up superlinearly
+    Leg(s"etl_pipeline_${etlX}x",
+        Seq(s"etl_pipeline_${etlX}x", s"etl_incremental_${etlX}x")) {
+      (sp, tmp) =>
+        val ord = Tables.load(sp, sfDir, "orders")
+        val stride = keyStride(ord, "o_orderkey")
+        replicate(Tables.load(sp, sfDir, "lineitem"), "l_orderkey", etlX,
+          stride).write.parquet(s"$tmp/src/lineitem.parquet")
+        replicate(ord, "o_orderkey", etlX, stride)
+          .write.parquet(s"$tmp/src/orders.parquet")
+        Seq("customer", "nation", "region", "part", "supplier").foreach {
+          d => Tables.load(sp, sfDir, d).write.parquet(s"$tmp/src/$d.parquet")
+        }
+        etlPair(sp, s"$tmp/src", s"$tmp/wh")
+    },
+    // documents 10×, each replica a near-dup (one prefixed version
+    // token), through the full MinHash-LSH pipeline (q21): the load a
+    // post-crawl dedup faces — 10× the corpus and dense candidates
+    Leg("dedup_10x", Seq("dedup_10x")) { (sp, tmp) =>
+      val docs = Tables.load(sp, sfDir, "documents")
+      replicate(docs, "doc_id", 10, keyStride(docs, "doc_id"),
+        (d, i) => if (i == 0) d
+          else d.withColumn("text", concat(lit(s"v$i "), col("text"))))
+        .write.parquet(s"$tmp/documents.parquet")
+      Seq(timed { Dedup.q21LshPairs(sp, tmp).count(); () })
+    },
+    // embeddings 50× (exact copies: plan scaling, not recall) through
+    // the IVF index and probe (q34): a probe whose cost is secretly
+    // corpus-shaped instead of probed-cells-shaped shows here
+    Leg("ann_50x", Seq("ann_50x")) { (sp, tmp) =>
+      val emb = Tables.load(sp, sfDir, "embeddings")
+      replicate(emb, "vec_id", 50, keyStride(emb, "vec_id"))
+        .write.parquet(s"$tmp/embeddings.parquet")
+      Seq(timed { Similarity.q34AnnIvf(sp, tmp).count(); () })
+    },
+    // the table format's write/maintain/read surface over orders 10×:
+    // range-clustered create, a range-local merge (COW rewrites only
+    // the files it must), a pruned read, then one OPTIMIZE ZORDER and a
+    // pruned read on the dimension only the z-layout can skip for
+    Leg("gtable_10x", Seq("gtable_10x")) { (sp, tmp) =>
+      val (big, stride) = ordersX(sp, sfDir, 10)
+      val root = s"$tmp/t"
+      Seq(timed {
+        val t = GraftTable.create(sp, root,
+          big.repartitionByRange(32, col("o_orderkey")),
+          statsCols = Seq("o_orderkey", "o_custkey"), numFiles = 0)
+        t.merge(big.where(col("o_orderkey") < stride &&
+            col("o_orderkey") % 10 === 0)
+          .withColumn("o_totalprice", col("o_totalprice") * 2),
+          keyCols = Seq("o_orderkey"), numFiles = 4)
+        GraftTable.forPath(sp, root)
+          .prunedRead("o_orderkey", lit(0), lit(stride / 10))._1.count()
+        t.optimizeZorder("o_custkey", "o_orderkey", numFiles = 32)
+        GraftTable.forPath(sp, root)
+          .prunedRead("o_custkey", lit(0), lit(100))._1.count()
+        ()
+      })
+    },
+    // two equivalent sparse deletes that hit every file (the COW worst
+    // case) on one 10× table, as a file rewrite and as a deletion-vector
+    // commit, each followed by a full live read so MOR pays its
+    // read-side price
+    Leg("mor_10x", Seq("cow_delete_10x", "mor_delete_10x")) { (sp, tmp) =>
+      val t = GraftTable.create(sp, s"$tmp/t",
+        ordersX(sp, sfDir, 10)._1.repartitionByRange(32, col("o_orderkey")),
+        statsCols = Seq("o_orderkey"), numFiles = 0)
+      val cow = timed {
+        t.deleteWhere(col("o_orderkey") % 1000 === 1); t.read().count(); ()
+      }
+      val mor = timed {
+        t.deleteWhereMor(col("o_orderkey") % 1000 === 2); t.read().count()
+        ()
+      }
+      Seq(cow, mor)
+    },
+    // a point lookup on a unique non-cluster column (a scrambled row id:
+    // every file's envelope spans the domain, so min/max never skips)
+    // over two identical 50× tables in 512 files, one bloom-indexed, one
+    // envelopes-only. What the bloom saves at scale is per-file open,
+    // footer and decode; at 10× the fixed planning jobs still rival it.
+    Leg("bloom_50x", Seq("bloom_probe_50x", "fullscan_probe_50x")) {
+      (sp, tmp) =>
+        val (orders50, stride) = ordersX(sp, sfDir, 50)
+        val dom = stride * 50
+        val big = orders50
+          .withColumn("uid", col("o_orderkey") * 2654435761L % dom)
+          .repartitionByRange(512, col("o_orderkey"))
+        GraftTable.create(sp, s"$tmp/indexed", big,
+          statsCols = Seq("o_orderkey"), numFiles = 0,
+          bloomCols = Seq("uid"), bloomBits = 1 << 18)
+        GraftTable.create(sp, s"$tmp/plain", big,
+          statsCols = Seq("o_orderkey"), numFiles = 0)
+        val probe = (12345L * 2654435761L) % dom
+        def lookup(root: String): Long = sp.read.format("gtable")
+          .load(root).where(col("uid") === probe).count()
+        val expected = lookup(s"$tmp/indexed")
+        Seq(timed { lookup(s"$tmp/indexed"); () },
+          timed { require(lookup(s"$tmp/plain") == expected); () })
+    },
+    // the reference's own schema at its own volume (seed CSVs + the
+    // FIXTURES A.4 fact generator): the pair BASELINE.md's ≈20 min /
+    // ≈10 min describe, on both tiers
+    Leg("retail_fullscale",
+        Seq("retail_fullscale", "retail_incremental_fullscale"),
+        passes = Warmed) { (sp, tmp) =>
+      retailPair(sp, tmp, lake = false, RetailRows)
+    },
+    // the lake tier writes a different warehouse, so it warms its own
+    Leg("retail_fullscale_lake",
+        Seq("retail_fullscale_lake", "retail_incremental_fullscale_lake"),
+        passes = Warmed) { (sp, tmp) =>
+      retailPair(sp, tmp, lake = true, RetailRows)
+    },
+    // the lake pair at 2× the rows: a stable 2×/1× ratio across runs
+    // says a win was fixed cost, a falling one that it was scale
+    Leg("retail_lake_2x", Seq("retail_fullscale_lake_2x",
+        "retail_incremental_fullscale_lake_2x"), passes = Once) {
+      (sp, tmp) => retailPair(sp, tmp, lake = true, RetailRows * 2)
+    },
+    // 200 one-file appends then one incremental maintain: the fixed
+    // cost per commit (201 / seconds = commits/s) and metadata KB per
+    // commit
+    Leg("commit_micro", Seq("commit_micro_200", "commit_micro_meta_kb")) {
+      (sp, tmp) =>
+        import sp.implicits._
+        val root = s"$tmp/t"
+        val n = 200
+        val secs = timed {
+          val t = GraftTable.create(sp, root, Seq((0L, 0L)).toDF("k", "v"),
+            statsCols = Seq("k"), numFiles = 1)
+          (1 until n).foreach { i =>
+            t.append(Seq((i.toLong, i * 10L)).toDF("k", "v"), numFiles = 1)
+          }
+          // the mixed-maintenance commit a scheduler would issue
+          t.compactSmall(maxRows = 1000L, numFiles = 4)
+          ()
+        }
+        Seq(secs, dirBytes(new java.io.File(s"$root/_log")) / 1024.0 / (n + 1))
+    },
+    // 2048 small files, the many-micro-commits read shape
+    Leg("packed_scan", Seq("packed_scan_2048", "per_file_scan_2048")) {
+      (sp, tmp) => packedVsPerFile(sp, s"$tmp/t", 2048, reps = 3,
+        tasks = false)
+    },
+    // 2×10⁴ tiny files, the streaming-sink debt shape the packer was
+    // built for; task counts show the win is tasks, not cache luck
+    Leg("packed_scan_20k", Seq("packed_scan_20k", "per_file_scan_20k",
+        "packed_tasks_20k", "per_file_tasks_20k"), gauges = 2) {
+      (sp, tmp) => packedVsPerFile(sp, s"$tmp/t", 20000, reps = 2,
+        tasks = true)
+    },
+    Leg("manifest_plan_200k", Seq("manifest_plan_200k_collect",
+        "manifest_plan_200k_stream", "manifest_plan_200k_collect_mb",
+        "manifest_plan_200k_stream_mb"), gauges = 2) {
+      (sp, tmp) => manifestPlanning(sp, s"$tmp/t", 200000L)
+    },
+    // the streamed branch's design regime: at 200k entries it saves
+    // only ~18-35 MB for ~3× the wall
+    Leg("manifest_plan_1m", Seq("manifest_plan_1m_collect",
+        "manifest_plan_1m_stream", "manifest_plan_1m_collect_mb",
+        "manifest_plan_1m_stream_mb"), gauges = 2) {
+      (sp, tmp) => manifestPlanning(sp, s"$tmp/t", 1000000L)
+    },
+    // ten nightly batches of the documents table (1 doc in 5 an exact
+    // re-post of night 0) through q255's change-feed drain and
+    // curateBatch: history grows each night while the batch does not,
+    // so a flat per-batch series is the O(batch) maintenance claim.
+    // Reports the first and last batch.
+    Leg("curation_history",
+        Seq("curation_hist_first_s", "curation_hist_last_s")) { (sp, tmp) =>
+      val times = CurationGate.benchHistory(sp, sfDir, tmp, nBatches = 10,
+        mult = 8)
+      notes.curationBatches += JArray(times.map(num(_, 2)).toList)
+      if (times.exists(_ < 0)) Seq(-1.0, -1.0)
+      else Seq(times.head, times.last)
+    },
+    // 6 writer threads × 20 one-file appends race one table whose
+    // commits linearize through S3ConditionalPutLogStore against the
+    // in-process conditional-PUT fake, 2 ms wire latency per attempt:
+    // wall seconds (commits/s = 120 / s) and mean attempts per commit.
+    // Any failed commit fails the sample.
+    Leg("commit_throughput",
+        Seq("commit_tput_120_s", "commit_tput_attempts_mean")) { (sp, tmp) =>
+      val fake = new S3FakeServer
+      val prevProvider = LogStore.provider
+      try {
+        fake.latencyMs.set(2)
+        val store = new S3ConditionalPutLogStore(fake.endpoint,
+          () => sp.sparkContext.hadoopConfiguration)
+        LogStore.provider =
+          r => if (r.startsWith(tmp)) store else prevProvider(r)
+        import sp.implicits._
+        val root = s"$tmp/t"
+        GraftTable.create(sp, root, Seq((0L, 0L)).toDF("k", "v"),
+          statsCols = Seq("k"), numFiles = 1)
+        val (writers, per) = (6, 20)
+        CommitProfile.reset()
+        CommitProfile.on.set(true)
+        val errors = new AtomicInteger(0)
+        val secs = timed {
+          val ths = (0 until writers).map { w =>
+            new Thread(() => {
+              try {
+                val t = GraftTable.forPath(sp, root)
+                (0 until per).foreach { i =>
+                  t.append(Seq((w * 1000L + i + 1L, i.toLong)).toDF("k", "v"),
+                    numFiles = 1); ()
+                }
+              } catch {
+                case e: Throwable =>
+                  errors.incrementAndGet()
+                  System.err.println(s"BENCH commit_tput writer $w FAILED: $e")
+              }
+            })
+          }
+          ths.foreach(_.start()); ths.foreach(_.join())
+        }
+        CommitProfile.on.set(false)
+        val attempts = CommitProfile.attemptCounts
+        if (errors.get() > 0 || attempts.length != writers * per)
+          Seq(-1.0, -1.0)
+        else {
+          notes.commitTputAttempts = JArray(attempts.groupBy(identity)
+            .toList.sortBy(_._1)
+            .map { case (k, v) => JArray(List(JInt(k), JInt(v.size))) })
+          Seq(secs, attempts.sum.toDouble / attempts.size)
+        }
+      } finally {
+        LogStore.provider = prevProvider
+        CommitProfile.on.set(false)
+        fake.stop()
+      }
+    })
+
+  private def timed(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Waits for `sync`: the writeback of earlier writes (a previous leg,
+    * a pair's initial load) lands outside the next timed window instead
+    * of inside it. It evicts nothing, so warm read-back state stays. */
+  private def settle(): Unit =
+    try {
+      Runtime.getRuntime.exec(Array("sync")).waitFor(120, TimeUnit.SECONDS)
+      ()
+    } catch { case _: Throwable => () }
+
+  /** The TPC-H DAG's initial load (1992–2002), then a re-run of 1995. */
+  private def etlPair(sp: SparkSession, src: String, wh: String)
+      : Seq[Double] = {
+    val initial = timed {
+      Pipeline.run(sp, src, wh, Span("1992", "01", "2002", "12"))
+    }
+    settle()
+    val incremental = timed {
+      Pipeline.run(sp, src, wh, Span("1995", "01", "1995", "12"))
+    }
+    Seq(initial, incremental)
+  }
+
+  /** The retail DAG's initial load, then its monthly re-run of 2014-11. */
+  private def retailPair(sp: SparkSession, wh: String, lake: Boolean,
+      rows: Long): Seq[Double] = {
+    val data = RetailQueries.DataDir
+    val initial = timed {
+      if (lake) RetailPipeline.runLake(sp, data, wh, rows)
+      else RetailPipeline.run(sp, data, wh, rows)
+      ()
+    }
+    settle()
+    val incremental = timed {
+      if (lake)
+        RetailPipeline.runIncrementalLake(sp, data, wh, rows, "2014", "11")
+      else RetailPipeline.runIncremental(sp, data, wh, rows, "2014", "11")
+      ()
+    }
+    Seq(initial, incremental)
+  }
+
+  /** One more than the largest `key`: the shift between replicas. */
+  private def keyStride(df: DataFrame, key: String): Long =
+    df.agg(max(col(key)).cast("long")).head().getLong(0) + 1L
+
+  /** `df` stacked `n` times, copy `i` with `key` shifted by `i * stride`
+    * and then passed through `copy`. */
+  private def replicate(df: DataFrame, key: String, n: Int, stride: Long,
+      copy: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
+    (0 until n).map(i => copy(
+        df.withColumn(key, col(key).cast("long") + lit(i * stride)), i))
+      .reduce(_ unionByName _)
+
+  /** orders replicated `n`×, and the key stride. */
+  private def ordersX(sp: SparkSession, sfDir: String, n: Int)
+      : (DataFrame, Long) = {
+    val ord = Tables.load(sp, sfDir, "orders")
+    val stride = keyStride(ord, "o_orderkey")
+    (replicate(ord, "o_orderkey", n, stride), stride)
+  }
+
+  private def dirBytes(f: java.io.File): Long =
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
+    else f.length()
+
+  /** A 10⁶-row table in `files` files, then the same aggregate scan
+    * `reps` times under bin-packed planning and `reps` times under the
+    * `graft.scan.pack.enabled` kill-switch (one task per file, the
+    * plan before packing): (packed s, per-file s), then, with `tasks`, each
+    * arm's task count. */
+  private def packedVsPerFile(sp: SparkSession, root: String, files: Int,
+      reps: Int, tasks: Boolean): Seq[Double] = {
+    GraftTable.create(sp, root,
+      sp.range(0L, 1000000L).selectExpr("id as k", "id % 97 as v"),
+      statsCols = Seq("k"), numFiles = files)
+    def df() = sp.read.format("gtable").load(root)
+    def scanOnce(): Unit = { df().agg(sum("v"), count("*")).collect(); () }
+    def taskCount(): Seq[Double] =
+      if (tasks) Seq(df().rdd.getNumPartitions.toDouble) else Nil
+    scanOnce() // warm: plan caches + page cache for both arms
+    val packedTasks = taskCount()
+    val packed = timed((1 to reps).foreach(_ => scanOnce()))
+    try {
+      sp.conf.set("graft.scan.pack.enabled", "false")
+      val perFileTasks = taskCount()
+      Seq(packed, timed((1 to reps).foreach(_ => scanOnce()))) ++
+        packedTasks ++ perFileTasks
+    } finally sp.conf.unset("graft.scan.pack.enabled")
+  }
+
+  /** A synthetic manifest of `nEntries` + 1 files (fabricated entries
+    * through the real commit path; planning opens no data file) planned
+    * under both branches of [[GraftTable.PlanCollectLimit]]:
+    * whole-result collect and partition-streamed `toLocalIterator`.
+    * Returns (collect s, stream s, collect MB, stream MB), the MB being
+    * each branch's driver live-heap peak over baseline: what says a
+    * 10⁶-commit table is plannable without sizing the driver by its
+    * manifest. */
+  private def manifestPlanning(sp: SparkSession, root: String,
+      nEntries: Long): Seq[Double] = {
+    val prevLimit = GraftTable.PlanCollectLimit
+    try {
+      val t = GraftTable.create(sp, root,
+        sp.range(0L, 1000L).selectExpr("id as k", "id as v"),
+        statsCols = Seq("k"), numFiles = 1)
+      val fake = sp.range(0L, nEntries).selectExpr(
+        "concat('data/cfake/part-', lpad(cast(id as string), 7, " +
+          "'0'), '.parquet') as path",
+        "cast(50 as bigint) as row_count",
+        "cast(4096 as bigint) as size_bytes",
+        "id * 50 + 1000000 as min_k", "id * 50 + 1000049 as max_k",
+        "cast(0 as bigint) as nulls_k")
+      t.commitReplaceFiles("append", Nil, fake, expectedParent = 1L)
+      require(t.fileCount() == nEntries + 1L,
+        s"fabricated manifest holds ${t.fileCount()} entries")
+      def planOnce(): Unit = {
+        sp.read.format("gtable").load(root).rdd.getNumPartitions; ()
+      }
+      val rt = Runtime.getRuntime
+      // The sampler forces a GC before each reading so it tracks
+      // retained buffers (the collect arm's whole-result rows), not
+      // allocation noise: raw used-heap sampling read the stream arm
+      // higher from eden churn alone. It runs as its own pass so the
+      // GC pounding never touches the wall time.
+      def livePeakMb(f: => Unit): Double = {
+        System.gc(); Thread.sleep(200)
+        val base0 = rt.totalMemory - rt.freeMemory
+        @volatile var run = true
+        @volatile var peak = 0L
+        val th = new Thread(() => while (run) {
+          System.gc()
+          val u = rt.totalMemory - rt.freeMemory - base0
+          if (u > peak) peak = u
+          Thread.sleep(50)
+        })
+        th.setDaemon(true); th.start()
+        f
+        run = false; th.join()
+        peak / 1e6
+      }
+      planOnce() // warm manifest footers + plan machinery
+      GraftTable.PlanCollectLimit = 10000000L
+      val collectSec = timed(planOnce())
+      val collectMb = livePeakMb(planOnce())
+      GraftTable.PlanCollectLimit = 0L
+      val streamSec = timed(planOnce())
+      Seq(collectSec, streamSec, collectMb, livePeakMb(planOnce()))
+    } finally GraftTable.PlanCollectLimit = prevLimit
+  }
+
+  private def newSession(): SparkSession = {
+    val spark = GraftSession.build(GraftSession.localMaster, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
@@ -25,1353 +535,277 @@ object Bench {
     SparkSession.clearDefaultSession()
   }
 
-  /** One `/proc/loadavg` sample ("1m 5m 15m" fields), "" off-Linux.
-    * Recorded in the bench artifact so a round-over-round delta can be
-    * attributed to ambient host load vs a genuine code regression
-    * (round 6's uniform 13% drift was exactly this ambiguity). */
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split("\\s+").take(3).mkString(" ")
-    catch { case _: Throwable => "" }
+  /** `parse` of a /proc file's text; `orElse` off Linux or on any
+    * read or parse error. */
+  private def proc[T](path: String, orElse: T)(parse: String => T): T =
+    try {
+      val src = scala.io.Source.fromFile(path)
+      try parse(src.mkString) finally src.close()
+    } catch { case _: Throwable => orElse }
+
+  /** The "1m 5m 15m" loadavg fields, context for every sample. */
+  private def loadavg(): String = proc("/proc/loadavg", "")(
+    _.trim.split("\\s+").take(3).mkString(" "))
+
+  private def load1m(): Double =
+    proc("/proc/loadavg", 0.0)(_.trim.split("\\s+").head.toDouble)
+
+  /** Page-cache size (MB): says whether a warm pass's cache survived
+    * to the sample, or which phase displaced it. */
+  private def cachedMb(): Double = proc("/proc/meminfo", -1.0)(
+    _.linesIterator.find(_.startsWith("Cached:"))
+      .map(_.trim.split("\\s+")(1).toDouble / 1024.0).getOrElse(-1.0))
+
+  /** Host (user+nice, system) jiffies. */
+  private def hostJiffies(): (Long, Long) = proc("/proc/stat", (-1L, -1L)) {
+    t =>
+      val v = t.linesIterator.next().split("\\s+").drop(1).map(_.toLong)
+      (v(0) + v(1), v(2))
+  }
+
+  /** This JVM's (user, system) jiffies, reaped children included, so
+    * what the bench spawns (`sync`) never reads as external load. */
+  private def selfJiffies(): (Long, Long) =
+    proc("/proc/self/stat", (-1L, -1L)) { t =>
+      // fields 14-17 = utime stime cutime cstime; field 2 may hold
+      // spaces inside its parens, so split after the closing one
+      val v = t.substring(t.lastIndexOf(')') + 2).split("\\s+")
+      (v(11).toLong + v(13).toLong, v(12).toLong + v(14).toLong)
+    }
+
+  /** IO pressure "some" line: (avg10 %, total stall µs). */
+  private def psiIo(): (Double, Long) = proc("/proc/pressure/io", (-1.0, -1L)) {
+    t =>
+      val kv = t.linesIterator.next().split("\\s+").drop(1).map { f =>
+        val a = f.split("="); a(0) -> a(1)
+      }.toMap
+      (kv("avg10").toDouble, kv("total").toLong)
+  }
+
+  /** `f`'s result, its wall seconds, and the cores other processes
+    * kept busy meanwhile: what contaminates a sample is their CPU, not
+    * loadavg, which a heavy leg raises by itself. External user time
+    * counts fully, external system time above [[SysAllowanceCores]]. */
+  private def withExtCores[T](f: => T): (T, Double, Double) = {
+    val h0 = hostJiffies(); val s0 = selfJiffies()
+    val t0 = System.nanoTime()
+    val r = f
+    val sec = (System.nanoTime() - t0) / 1e9
+    val h1 = hostJiffies(); val s1 = selfJiffies()
+    val ext =
+      if (h0._1 < 0 || h1._1 < 0 || s0._1 < 0 || s1._1 < 0 || sec <= 0) 0.0
+      else {
+        def cores(h0: Long, h1: Long, s0: Long, s1: Long): Double =
+          math.max(0.0, ((h1 - h0) - (s1 - s0)) / 100.0 / sec)
+        cores(h0._1, h1._1, s0._1, s1._1) +
+          math.max(0.0, cores(h0._2, h1._2, s0._2, s1._2) - SysAllowanceCores)
+      }
+    (r, sec, ext)
+  }
+
+  /** Samples legs behind the quiet gate and keeps every sample's host
+    * readings for the artifact. */
+  private final class Runner {
+    /** Per-sample diagnostics: artifact field → sample tag → value. */
+    val diag = mutable.LinkedHashMap.from(
+      Seq("leg_loadavg", "leg_loadavg_end", "leg_ext_cores", "leg_samples",
+        "leg_quiet", "leg_io_stall_pct", "leg_cached_mb", "warm_info")
+        .map(_ -> mutable.LinkedHashMap.empty[String, JValue]))
+
+    /** One sample of `leg` in a fresh session and temp dir, both gone
+      * afterwards. A sample that throws prints `BENCH FAIL <leg>` and
+      * reads -1 for every key. */
+    private def sample(leg: Leg): Seq[Double] = {
+      val spark = newSession()
+      val dir = Files.createTempDirectory(s"graft_bench_${leg.name}_")
+      try leg.body(spark, dir.toString)
+      catch {
+        case e: Throwable =>
+          System.err.println(s"BENCH FAIL ${leg.name}: $e")
+          leg.keys.map(_ => -1.0)
+      } finally {
+        new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+        stop(spark)
+      }
+    }
+
+    /** `f` once the host is quiet or [[LegLoadWaitSec]] has passed, and
+      * whether the sample was quiet: before and throughout, at most
+      * [[MaxExtCores]] external cores busy and, before, at most
+      * [[MaxIoPct]] IO stall (during the sample the leg's own writes
+      * stall too, so that reading is stamped, not gated). */
+    def quiet[T](tag: String)(f: => T): (T, Boolean) = {
+      settle()
+      def ioBusy(pct: Double) = pct >= 0 && pct > MaxIoPct
+      // idle between samples, so this is ambient load
+      def extNow() = withExtCores(Thread.sleep(500))._3
+      val deadline = System.nanoTime() + LegLoadWaitSec * 1000000000L
+      var ext = extNow()
+      var ioPct = psiIo()._1
+      while ((ext > MaxExtCores || ioBusy(ioPct)) &&
+          System.nanoTime() < deadline) {
+        System.err.println(
+          f"BENCH LEG WAIT [$tag]: external busy cores $ext%.2f " +
+            f"(max $MaxExtCores%.1f), io some-avg10 $ioPct%.1f%% " +
+            f"(max $MaxIoPct%.1f)")
+        Thread.sleep(5000)
+        ext = extNow()
+        ioPct = psiIo()._1
+      }
+      diag("leg_loadavg")(tag) = num(load1m(), 2)
+      diag("leg_cached_mb")(tag) = num(cachedMb(), 0)
+      val io0 = psiIo()._2
+      val (r, sec, legExt) = withExtCores(f)
+      val io1 = psiIo()._2
+      diag("leg_loadavg_end")(tag) = num(load1m(), 2)
+      if (io0 >= 0 && io1 >= io0 && sec > 0)
+        diag("leg_io_stall_pct")(tag) = num((io1 - io0) / 1e4 / sec, 1)
+      diag("leg_ext_cores")(tag) = num(legExt, 2)
+      (r, ext <= MaxExtCores && legExt <= MaxExtCores && !ioBusy(ioPct))
+    }
+
+    /** `leg`'s values. Samples repeat, up to [[LegSamples]] (or
+      * [[LegSamplesDirty]] while fewer than two are quiet), until every
+      * timed component's two best quiet samples agree within 1.5×; a
+      * failed sample ends the leg. Each timed component reports its
+      * own minimum over the quiet samples (over all when none is
+      * quiet), so a spike in one component never rides in on another's
+      * good run; each gauge reports its largest reading. */
+    def run(leg: Leg): Seq[Double] = {
+      if (leg.passes == Warmed) {
+        System.err.println(s"BENCH WARM ${leg.name} (untimed)")
+        val before = cachedMb()
+        val sec = timed { sample(leg); () }
+        diag("warm_info")(leg.name) = JObject("warm_sec" -> num(sec, 1),
+          "cached_mb_before" -> num(before, 0),
+          "cached_mb_after" -> num(cachedMb(), 0))
+      }
+      val nTimed = leg.keys.size - leg.gauges
+      val (budget, dirtyBudget) =
+        if (leg.passes == Once) (1, 1) else (LegSamples, LegSamplesDirty)
+      def converged(ss: Seq[(Seq[Double], Boolean)]): Boolean =
+        (0 until nTimed).forall { j =>
+          val s = ss.filter(_._2).map(_._1(j)).sorted
+          s.length >= 2 && s(1) <= s(0) * 1.5
+        }
+      var samples = Vector.empty[(Seq[Double], Boolean)]
+      var done = false
+      while (!done && (samples.size < budget ||
+          (samples.count(_._2) < 2 && samples.size < dirtyBudget))) {
+        val tag =
+          if (samples.isEmpty) leg.name else s"${leg.name}#${samples.size + 1}"
+        val s = quiet(tag)(sample(leg))
+        val failed = s._1.take(nTimed).exists(_ < 0)
+        if (!failed || samples.isEmpty) samples :+= s
+        done = failed || converged(samples)
+      }
+      (0 until nTimed).foreach { j =>
+        val tag = if (j == 0) leg.name else s"${leg.name}.${('a' + j).toChar}"
+        diag("leg_samples")(tag) =
+          JArray(samples.map(s => num(s._1(j), 1)).toList)
+      }
+      diag("leg_quiet")(leg.name) = JBool(samples.exists(_._2))
+      val pool = if (samples.exists(_._2)) samples.filter(_._2) else samples
+      def valid(xs: Seq[Double]) = xs.filter(_ >= 0)
+      leg.keys.indices.map { j =>
+        if (j < nTimed) valid(pool.map(_._1(j))).minOption.getOrElse(-1.0)
+        else valid(samples.map(_._1(j))).maxOption.getOrElse(-1.0)
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Quiet-host protocol: ambient load distorts timings up to 8×
-    // (round 7's closing artifact ran at loadavg 3 → 24 and buried a
-    // 28.8 s number under 238 s). Wait up to SPARK_GRAFT_LOAD_WAIT
-    // seconds (default 120) for the 1-minute loadavg to fall below
-    // SPARK_GRAFT_MAX_LOAD (default 4.0) before measuring; proceed
-    // regardless once the budget is spent (refusing would cost the
-    // round its artifact entirely), but stamp `load_ok` in the JSON so
-    // a loaded-host run is discountable at a glance.
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "4.0").toDouble
-    val loadWaitSec = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "120").toInt
-    def load1m(): Double =
-      try loadavg().split(" ").head.toDouble catch { case _: Throwable => 0.0 }
-    val loadDeadline = System.nanoTime() + loadWaitSec * 1000000000L
-    while (load1m() > maxLoad && System.nanoTime() < loadDeadline) {
-      System.err.println(
-        f"BENCH WAIT: 1m loadavg ${load1m()}%.2f > $maxLoad%.1f, sleeping 10s")
-      Thread.sleep(10000)
-    }
-    val loadOk = load1m() <= maxLoad
-    val loadStart = loadavg()
-    val spark = newSession(cpus)
-
-    /** Runs one leg in its own fresh session and always stops it: a
-      * leg that throws prints `BENCH FAIL <leg>` and reports `failed`,
-      * its -1 sentinels. */
-    def inSession[T](leg: String, failed: T)(body: SparkSession => T): T = {
-      val sp = newSession(cpus)
-      try body(sp)
-      catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL $leg: $e")
-          failed
-      } finally stop(sp)
-    }
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    // PAGE-CACHE SETTLE BETWEEN PAIR COMPONENTS (r16, VERDICT r15 #1):
-    // the pair legs publish TWO metrics per run (initial, incremental),
-    // but only the LEG boundary ran the quiet protocol's `sync` — so
-    // the initial load's multi-GB async writeback landed inside the
-    // INCREMENTAL's timed window on slow-storage hosts, and it lands
-    // HARDER at higher core counts because the initial finishes sooner
-    // and leaves more dirty pages un-flushed (the driver's r15 runs:
-    // etl_incremental_10x 23.4 s at 32 cores vs 7.4 s at 8 on
-    // byte-identical code — the inversion tracks writeback debt, not
-    // the incremental's own work). This is the SAME settle the legs
-    // have run since r12 ("sync moves that writeback OUT of the
-    // measured window"), applied at the pair's internal boundary; each
-    // component now measures its own pipeline, as on a cluster where
-    // jobs don't share a page cache. sync() forces writeback only —
-    // it evicts nothing, so the incremental's warm read-back state is
-    // unchanged. Timed regions themselves are untouched.
-    def settle(): Unit =
-      try {
-        val p = Runtime.getRuntime.exec(Array("sync"))
-        p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS); ()
-      } catch { case _: Throwable => () }
-
-    // Per-leg load accounting (VERDICT r8 #5): the closing artifact once
-    // misstated dedup_10x by 4× because load was sampled only at pack
-    // start. Every big leg now (a) re-waits for a quiet host with a
-    // smaller per-leg budget, and (b) stamps the 1-minute loadavg it
-    // actually started under, so each number is individually
-    // discountable.
-    // Page-cache size (/proc/meminfo Cached, MB) — stamped at each
-    // leg sample start and around the fullscale warm passes (VERDICT
-    // r14 #5: attribute the cold first fullscale sample — either the
-    // warm pass holds the cache and the first timed sample is ≤1.3×
-    // the min, or the stamps name the displacing phase).
-    def cachedMb(): Double =
-      try scala.io.Source.fromFile("/proc/meminfo").getLines()
-        .find(_.startsWith("Cached:"))
-        .map(_.trim.split("\\s+")(1).toDouble / 1024.0).getOrElse(-1.0)
-      catch { case _: Throwable => -1.0 }
-    val legCachedMb =
-      scala.collection.mutable.LinkedHashMap[String, Double]()
-    // fullscale warm passes: own duration + cache before/after
-    val warmInfo =
-      scala.collection.mutable.LinkedHashMap[String, String]()
-
-    val legLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // loadavg at leg END too (VERDICT r9 #4): a leg stamped "quiet" at
-    // start can absorb mid-leg contention — the end stamp makes that
-    // visible in the artifact instead of silently inflating the number.
-    val legLoadsEnd = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val legWaitSec = sys.env.getOrElse("SPARK_GRAFT_LEG_LOAD_WAIT", "60").toInt
-
-    // EXTERNAL-CPU contention accounting (round 12). The loadavg gate
-    // defeated itself on heavy legs: a 32-thread leg ENDS with the
-    // 1-minute loadavg above any sane threshold purely from its own
-    // work, so heavy legs could never be "quiet", burned the whole
-    // dirty budget, and shipped flagged-dirty. What contaminates a
-    // sample is CPU burned by OTHER processes while the leg runs —
-    // measured exactly as (host busy jiffies Δ − this JVM's process
-    // CPU Δ) / wall. Loadavg stays in the artifact as context; the
-    // quiet verdict and the start gate use external cores. The start
-    // gate samples instantaneous host busy-cores (minus our own), so
-    // back-to-back legs start immediately instead of waiting minutes
-    // for the PREVIOUS leg's loadavg to decay.
-    val maxExtCores =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_EXT_CORES", "2.0").toDouble
-    // USER time counts fully; SYSTEM time counts above an allowance
-    // (ADVICE r12). Kernel writeback threads (kworkers) flush OUR
-    // page-cache writes in system time and would read as ~2.5
-    // "external" cores during every write-heavy leg — that IO is the
-    // leg's own work, not contention — so external system time only
-    // contaminates once it clears SPARK_GRAFT_SYS_ALLOWANCE_CORES.
-    // That closes the r12 blind spot where an IO/kernel-heavy rival
-    // (cp, gzip -d, a build's kernel time) was invisible to a
-    // user-only gate. Self measurement includes REAPED CHILDREN
-    // (cutime/cstime, fields 16/17) so anything the bench itself
-    // spawns (sync below) never reads as external load.
-    def hostJiffies(): (Long, Long) =
-      try {
-        // cpu user nice system idle iowait irq softirq steal …
-        val f = scala.io.Source.fromFile("/proc/stat")
-        val t = try f.getLines().next() finally f.close()
-        val v = t.split("\\s+").drop(1).map(_.toLong)
-        (v(0) + v(1), v(2)) // (user+nice, system)
-      } catch { case _: Throwable => (-1L, -1L) }
-    def selfJiffies(): (Long, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/self/stat")
-        val t = try f.mkString finally f.close()
-        // fields 14-17 (1-based) = utime stime cutime cstime; field 2
-        // can contain spaces in parens — split after the closing paren
-        val v = t.substring(t.lastIndexOf(')') + 2).split("\\s+")
-        (v(11).toLong + v(13).toLong, v(12).toLong + v(14).toLong)
-      } catch { case _: Throwable => (-1L, -1L) }
-    val sysAllowanceCores = sys.env
-      .getOrElse("SPARK_GRAFT_SYS_ALLOWANCE_CORES", "2.5").toDouble
-    /** External cores from host/self jiffie deltas over `sec`:
-      * external user counts fully, external system above the
-      * writeback allowance. */
-    def extCoresFrom(h0: (Long, Long), s0: (Long, Long),
-        h1: (Long, Long), s1: (Long, Long), sec: Double): Double = {
-      if (h0._1 < 0 || h1._1 < 0 || s0._1 < 0 || s1._1 < 0 || sec <= 0)
-        return 0.0
-      val extUser =
-        math.max(0.0, ((h1._1 - h0._1) - (s1._1 - s0._1)) / 100.0 / sec)
-      val extSys =
-        math.max(0.0, ((h1._2 - h0._2) - (s1._2 - s0._2)) / 100.0 / sec)
-      extUser + math.max(0.0, extSys - sysAllowanceCores)
-    }
-    /** Average EXTERNAL cores over `sampleMs` (we are idle between
-      * legs, so between-legs this is pure ambient load). */
-    def externalCoresNow(sampleMs: Long = 500): Double = {
-      val h0 = hostJiffies(); val s0 = selfJiffies()
-      Thread.sleep(sampleMs)
-      val h1 = hostJiffies(); val s1 = selfJiffies()
-      extCoresFrom(h0, s0, h1, s1, sampleMs / 1000.0)
-    }
-    val legExtCores = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // IO-PRESSURE accounting (VERDICT r13 #4): the external-CPU gate
-    // is blind to IO interference — r13's fullscale spread (1.67x at
-    // quiet CPU) pointed at storage contention. /proc/pressure/io
-    // "some" = fraction of time ≥1 task stalled on IO: its avg10
-    // gates the PRE-leg window (between legs we are idle, so pre-leg
-    // pressure is ambient or residual writeback), and the stall-total
-    // delta over each leg is stamped per-leg in the artifact so an
-    // IO-contended sample is attributable after the fact. A leg's OWN
-    // writes stall too, so the during-leg number diagnoses rather
-    // than gates.
-    def psiIo(): (Double, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/pressure/io")
-        val line = try f.getLines().next() finally f.close()
-        val kv = line.split("\\s+").drop(1).map { t =>
-          val a = t.split("="); a(0) -> a(1)
-        }.toMap
-        (kv("avg10").toDouble, kv("total").toLong)
-      } catch { case _: Throwable => (-1.0, -1L) }
-    val maxIoPct =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_IO_PCT", "10.0").toDouble
-    val legIoStall = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // QUIET flag per sample (VERDICT r11 #2): a sample contaminated by
-    // external CPU — other processes burning more than maxExtCores on
-    // average while the leg ran — may stand in as a reported number
-    // only when no quiet sample exists, and it never counts toward
-    // convergence (r11's retail_fullscale shipped two consistently-slow
-    // samples that "converged" at 181.6 s on byte-identical code that
-    // runs in 78 s quiet).
-    def quietLeg[T](name: String)(f: => T): (T, Boolean) = {
-      // PAGE-CACHE SETTLE (VERDICT r12 #9): a leg following ~30 GB of
-      // writes starts with the kernel still flushing the PREVIOUS
-      // leg's dirty pages — r12's retail_fullscale first sample ran
-      // 2.4× its quiet twin at 0.00 external user-CPU. `sync` moves
-      // that writeback OUT of the measured window, synchronously.
-      try {
-        val p = Runtime.getRuntime.exec(Array("sync"))
-        p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS); ()
-      } catch { case _: Throwable => () }
-      val deadline = System.nanoTime() + legWaitSec * 1000000000L
-      var ext = externalCoresNow()
-      var ioPct = psiIo()._1
-      while ((ext > maxExtCores ||
-          (ioPct >= 0 && ioPct > maxIoPct)) &&
-          System.nanoTime() < deadline) {
-        System.err.println(
-          f"BENCH LEG WAIT [$name]: external busy cores $ext%.2f " +
-            f"(max $maxExtCores%.1f), io some-avg10 $ioPct%.1f%% " +
-            f"(max $maxIoPct%.1f)")
-        Thread.sleep(5000)
-        ext = externalCoresNow()
-        ioPct = psiIo()._1
-      }
-      legLoads(name) = load1m()
-      legCachedMb(name) = cachedMb()
-      val io0 = psiIo()._2
-      val h0 = hostJiffies(); val s0 = selfJiffies()
-      val t0 = System.nanoTime()
-      val r = f
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      val h1 = hostJiffies(); val s1 = selfJiffies()
-      val io1 = psiIo()._2
-      legLoadsEnd(name) = load1m()
-      // stall-time share of the leg's wall (own + external IO) —
-      // diagnosis, not a gate
-      if (io0 >= 0 && io1 >= io0 && wallSec > 0)
-        legIoStall(name) = (io1 - io0) / 1e4 / wallSec
-      val legExt = extCoresFrom(h0, s0, h1, s1, wallSec)
-      legExtCores(name) = legExt
-      (r, ext <= maxExtCores && legExt <= maxExtCores &&
-        !(ioPct >= 0 && ioPct > maxIoPct))
-    }
-
-    // Closing-artifact protocol (VERDICT r9 #4): each scale-smoke leg
-    // runs up to SPARK_GRAFT_LEG_SAMPLES times, stopping as soon as the
-    // best two samples agree within 1.5× — the REPORTED number is the
-    // per-leg minimum (what the hardware can do), with every sample and
-    // its start/end loadavg in the artifact. One arbitrary sample on a
-    // shared sandbox once misstated a 26 s leg as 182 s.
-    val legMaxSamples =
-      sys.env.getOrElse("SPARK_GRAFT_LEG_SAMPLES", "3").toInt
-    // extra sample budget that unlocks ONLY while fewer than two quiet
-    // samples exist — bounded re-queue for a contended host
-    val legMaxDirty =
-      sys.env.getOrElse("SPARK_GRAFT_LEG_SAMPLES_DIRTY", "5").toInt
-    val legSampleLog =
-      scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-    // per leg: did at least one QUIET sample back the reported number?
-    val legQuietOk =
-      scala.collection.mutable.LinkedHashMap[String, Boolean]()
-    def sampled[T](name: String)(primary: T => Double)(f: => T): T = {
-      var best: Option[(T, Boolean)] = None // (result, was-quiet)
-      var times = List.empty[Double]
-      var quietTimes = List.empty[Double]
-      var i = 0
-      var converged = false
-      while (!converged && (i < legMaxSamples ||
-          (quietTimes.length < 2 && i < legMaxDirty))) {
-        val tag = if (i == 0) name else s"$name#${i + 1}"
-        val (r, quiet) = quietLeg(tag)(f)
-        val p = primary(r)
-        if (p < 0) {
-          if (best.isEmpty) best = Some((r, quiet)); converged = true
-        } else {
-          times = times :+ p
-          if (quiet) quietTimes = quietTimes :+ p
-          // a quiet sample always beats a contaminated one; within the
-          // same class, smaller wins
-          val better = best.forall { case (b, bq) =>
-            if (quiet != bq) quiet else p < primary(b) }
-          if (better) best = Some((r, quiet))
-          // convergence is judged on QUIET samples only
-          val s = quietTimes.sorted
-          converged = s.length >= 2 && s(1) <= s(0) * 1.5
-        }
-        i += 1
-      }
-      legSampleLog(name) = times
-      legQuietOk(name) = best.exists(_._2)
-      best.get._1
-    }
-
-    /** Pair-leg variant of the re-sample protocol (VERDICT r10 #2):
-      * legs that report TWO numbers per run (etl initial/incremental,
-      * cow/mor delete) previously converged on one of them only — the
-      * r10 artifact's etl_incremental_10x was a 45 s load spike that
-      * the protocol never re-sampled. Both components must agree
-      * within 1.5× across samples, and each REPORTED number is its
-      * own per-component minimum (a spike in one run's incremental
-      * must not ride in on a good initial). */
-    def sampledPair(name: String)(f: => (Double, Double))
-        : (Double, Double) = {
-      var samples = List.empty[(Double, Double, Boolean)]
-      var i = 0
-      var converged = false
-      while (!converged && (i < legMaxSamples ||
-          (samples.count(_._3) < 2 && i < legMaxDirty))) {
-        val tag = if (i == 0) name else s"$name#${i + 1}"
-        val (r, quiet) = quietLeg(tag)(f)
-        if (r._1 < 0 || r._2 < 0) {
-          if (samples.isEmpty) samples = List((r._1, r._2, quiet))
-          converged = true
-        } else {
-          samples = samples :+ ((r._1, r._2, quiet))
-          // convergence over QUIET samples only — two consistently
-          // slow contended runs must not ship as the round's number
-          val qs = samples.filter(_._3)
-          def conv(sel: ((Double, Double, Boolean)) => Double)
-              : Boolean = {
-            val s = qs.map(sel).sorted
-            s.length >= 2 && s(1) <= s(0) * 1.5
-          }
-          converged = conv(_._1) && conv(_._2)
-        }
-        i += 1
-      }
-      legSampleLog(name) = samples.map(_._1)
-      legSampleLog(s"$name.b") = samples.map(_._2)
-      legQuietOk(name) = samples.exists(_._3)
-      // report from quiet samples when any exist
-      val pool = if (samples.exists(_._3)) samples.filter(_._3)
-        else samples
-      def minPosOf(xs: List[Double]): Double = {
-        val pos = xs.filter(_ >= 0)
-        if (pos.isEmpty) -1.0 else pos.min
-      }
-      (minPosOf(pool.map(_._1)), minPosOf(pool.map(_._2)))
-    }
-
-    // Optional dev filter: SPARK_GRAFT_ONLY=q101_pagerank,q21_lsh_pairs
-    // restricts the measured set (and skips the etl pair) so a single
-    // query's warm time can be iterated on without the full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+    val etlX = sys.env.getOrElse("SPARK_GRAFT_ETL_X", "10").toInt
+    val loadDeadline = System.nanoTime() + LoadWaitSec * 1000000000L
+    while (load1m() > MaxLoad && System.nanoTime() < loadDeadline) {
+      System.err.println(
+        f"BENCH WAIT: 1m loadavg ${load1m()}%.2f > $MaxLoad%.1f, sleeping 10s")
+      Thread.sleep(10000)
+    }
+    val loadOk = load1m() <= MaxLoad
+    val loadStart = loadavg()
+
+    val spark = newSession()
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Warmup pass: file listing, plan, codegen, JIT.
-    sorted.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).count()
       catch { case e: Throwable =>
         System.err.println(s"BENCH WARMUP FAIL $name: $e") }
     }
     // Two full measured passes, min-merged per query: ambient load
-    // spikes on shared hosts last minutes, so the two samples of a
-    // query must be far apart in time — back-to-back repeats would both
-    // land inside the same spike.
-    def measurePass(): Map[String, Double] = sorted.map { case (name, fn) =>
-      try name -> timed { fn(spark, sfDir).count(); () }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: $e")
-          name -> -1.0
-      }
-    }.toMap
-    // Queries that persist intermediates (LSH signatures) would leak a
-    // cached copy per execution across passes — drop them between
-    // passes so session state stays flat.
-    // PER-PASS ATTRIBUTION (VERDICT r13 #8): both passes publish
-    // their own per-query times plus the external-CPU / loadavg they
-    // ran under, so a like-for-like drift next round is attributable
-    // to a pass (and its load) without judge archaeology — the
-    // published number stays the min-merge.
-    def passMeta(f: => Map[String, Double])
-        : (Map[String, Double], Double, String) = {
-      val h0 = hostJiffies(); val s0 = selfJiffies()
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val h1 = hostJiffies(); val s1 = selfJiffies()
-      (r, extCoresFrom(h0, s0, h1, s1, wall), loadavg())
+    // spikes on shared hosts last minutes, so a query's two samples
+    // must be far apart in time. Each pass publishes its own times and
+    // the external cores and loadavg it ran under.
+    def measurePass(): (Map[String, Double], Double, String) = {
+      // queries that persist intermediates (LSH signatures) would leak
+      // a cached copy per execution: drop them between passes
+      spark.catalog.clearCache()
+      val (times, _, ext) = withExtCores(queries.map { case (name, fn) =>
+        try name -> timed { fn(spark, sfDir).count(); () }
+        catch {
+          case e: Throwable =>
+            System.err.println(s"BENCH FAIL $name: $e")
+            name -> -1.0
+        }
+      }.toMap)
+      (times, ext, loadavg())
     }
+    val (p1, p1Ext, p1Load) = measurePass()
+    val (p2, p2Ext, p2Load) = measurePass()
     spark.catalog.clearCache()
-    val (p1, p1Ext, p1Load) = passMeta(measurePass())
-    spark.catalog.clearCache()
-    val (p2, p2Ext, p2Load) = passMeta(measurePass())
-    spark.catalog.clearCache()
-    val queryTimes = sorted.map { case (name, _) =>
+    val queryTimes = queries.map { case (name, _) =>
       val (a, b) = (p1(name), p2(name))
       name -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
     }
-
-    // The query passes age the SparkContext (scheduler/listener-bus/AQE
-    // state): by the time 3×55 query executions have run, a long
-    // multi-job pipeline in the SAME context hits sys-CPU/futex storms
-    // and reads 4–5× its clean time (round 2: 227 s vs ~50 s fresh).
-    // So the etl pair runs in a FRESH SparkContext — new scheduler
-    // threads, empty listener bus — while keeping the JVM's JIT warmth
-    // from the passes above. On a real cluster this is simply "each
-    // pipeline run is its own application", which is how the reference
-    // runs its Glue jobs too.
+    // The query passes age the SparkContext (scheduler, listener bus,
+    // AQE state): a long pipeline in the same context read 4–5× its
+    // clean time. Every leg sample gets a fresh context and keeps the
+    // JVM's JIT warmth — on a cluster, each pipeline run is its own
+    // application, as the reference's Glue jobs are.
     stop(spark)
 
-    // Full pipeline pair, mirroring BASELINE.md's published numbers:
-    // initial load (full history) then an incremental re-run of one
-    // year, where dynamic partition overwrite rewrites only the touched
-    // partitions. Like the query passes, the pair is measured TWICE and
-    // min-merged — the etl numbers were the only un-replicated samples
-    // in the report, so a single ambient-load spike could triple them.
-    // Each attempt gets its own fresh SparkContext (see above).
-    def etlPair(): (Double, Double) =
-      inSession("etl_pipeline", (-1.0, -1.0)) { sp =>
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_bench_wh_").toString
-      val initial = timed {
-        Pipeline.run(sp,
-          Pipeline.Config(sfDir, wh, "19920101", "20021231"))
-      }
-      settle() // initial's writeback must not bill the incremental
-      val incremental = timed {
-        Pipeline.run(sp,
-          Pipeline.Config(sfDir, wh, "19950101", "19951231"))
-      }
-      // best-effort cleanup of the temp warehouse
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(wh)).deleteRecursively()
-      (initial, incremental)
+    val notes = new Notes
+    val runner = new Runner
+    val table = legs(sfDir, etlX, notes)
+    val results = queryTimes ++ table.flatMap { leg =>
+      leg.keys.zip(
+        if (legOn(only, leg)) runner.run(leg) else leg.keys.map(_ => -1.0))
     }
-    // dev filter: naming etl_pipeline in SPARK_GRAFT_ONLY keeps the pair
-    val runEtl = only.forall(_.contains("etl_pipeline"))
-    // per-leg dev filter: SPARK_GRAFT_ONLY=gtable_10x runs JUST that
-    // scale leg (A/B attribution runs must not drag the fullscale
-    // pair along). With NO filter every leg runs (the driver's mode);
-    // with a filter only the NAMED legs run — previously naming
-    // etl_pipeline turned every other leg on too, so the pair could
-    // not be timed in isolation.
-    def legOn(key: String): Boolean =
-      only.forall(_.contains(key))
-    val (etlTime, etlIncTime) =
-      if (!runEtl) (-1.0, -1.0)
-      else sampledPair("etl_pipeline")(etlPair())
-
-    // 10× scale smoke: replicate lineitem+orders 10× with shifted order
-    // keys (same join/partition structure, 10× the fact volume) and run
-    // ONE initial load — scale-up evidence beyond the sf dir, where a
-    // partition strategy that only works at test scale would show as a
-    // superlinear blowup. Single attempt (not min-merged): this is a
-    // smoke, and generation+run already dominate the bench tail.
-    // Replication factor for the etl scale smoke: 10 per-round; a
-    // one-off SPARK_GRAFT_ETL_X=48 run reproduces the reference's OWN
-    // full-load volume (sf0.1's 600 K lineitem × 48 ≈ 28.8 M rows vs
-    // BASELINE.md's 28.6 M) — recorded in SURVEY.md, not per-round.
-    val etlX = sys.env.getOrElse("SPARK_GRAFT_ETL_X", "10").toInt
-    def etl10x(): (Double, Double) =
-      inSession(s"etl_pipeline_${etlX}x", (-1.0, -1.0)) { sp =>
-      // the replicated source is ~10× the sf dir on disk — clean it up
-      // on EVERY exit path, or a failing 10x leg fills /tmp run over run
-      var base: String = null
-      var wh: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_10x_src_").toString
-        import org.apache.spark.sql.functions.{col, lit, max}
-        val ord = Tables.load(sp, sfDir, "orders")
-        val keyStride = ord.agg(max(col("o_orderkey")).cast("long"))
-          .head().getLong(0) + 1L
-        def rep(df: org.apache.spark.sql.DataFrame, key: String) =
-          (0 until etlX).map(i =>
-            df.withColumn(key, col(key).cast("long") + lit(i * keyStride)))
-            .reduce(_ unionByName _)
-        rep(Tables.load(sp, sfDir, "lineitem"), "l_orderkey")
-          .write.parquet(s"$base/lineitem.parquet")
-        rep(ord, "o_orderkey").write.parquet(s"$base/orders.parquet")
-        Seq("customer", "nation", "region", "part", "supplier").foreach {
-          d => Tables.load(sp, sfDir, d).write.parquet(s"$base/$d.parquet")
-        }
-        wh = java.nio.file.Files
-          .createTempDirectory("graft_10x_wh_").toString
-        val tInit = timed {
-          Pipeline.run(sp, Pipeline.Config(base, wh, "19920101", "20021231"))
-        }
-        settle() // initial's writeback must not bill the incremental
-        // incremental leg at 10×: one year re-run, dynamic overwrite
-        // rewrites only the touched partitions (BASELINE.md publishes
-        // the same initial/incremental pair)
-        val tInc = timed {
-          Pipeline.run(sp, Pipeline.Config(base, wh, "19950101", "19951231"))
-        }
-        (tInit, tInc)
-      } finally {
-        import scala.reflect.io.Directory
-        Seq(wh, base).filter(_ != null).foreach(d =>
-          new Directory(new java.io.File(d)).deleteRecursively())
-      }
-    }
-    val (etl10xTime, etl10xIncTime) =
-      if (runEtl) sampledPair(s"etl_pipeline_${etlX}x")(etl10x())
-      else (-1.0, -1.0)
-
-    // 10× scale smoke for the DEDUP family: documents replicated 10×
-    // where each replica is a NEAR-dup (one prefixed version token —
-    // high-Jaccard shingle overlap, like re-crawled/re-encoded pages),
-    // then the full MinHash-LSH pipeline (q21) runs end-to-end. This is
-    // the load profile a post-crawl dedup actually faces — 10× the
-    // corpus AND a dense candidate structure — so superlinear blowup in
-    // band buckets, candidate joins, or verification would surface here
-    // long before 100 TB. Single attempt, reported per-query only.
-    def dedup10x(): Double = inSession("dedup_10x", -1.0) { sp =>
-      var base: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_10x_docs_").toString
-        import org.apache.spark.sql.functions.{col, concat, lit, max}
-        val docs = Tables.load(sp, sfDir, "documents")
-        val stride = docs.agg(max(col("doc_id")).cast("long"))
-          .head().getLong(0) + 1L
-        (0 until 10).map { i =>
-          val shifted = docs.withColumn("doc_id",
-            col("doc_id").cast("long") + lit(i * stride))
-          if (i == 0) shifted
-          else shifted.withColumn("text", concat(lit(s"v$i "), col("text")))
-        }.reduce(_ unionByName _)
-          .write.parquet(s"$base/documents.parquet")
-        timed { graft.operators.Dedup.q21LshPairs(sp, base).count(); () }
-      } finally {
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val dedup10xTime =
-      if (legOn("dedup_10x")) sampled("dedup_10x")((t: Double) => t)(dedup10x())
-      else -1.0
-
-    // 50× scale smoke for the ANN family: embeddings replicated 50×
-    // (sf0.1 → 100 K vectors) and the IVF index + probe path (q34)
-    // runs end-to-end. IVF cell buckets grow 50× uniformly here, so a
-    // probe whose cost is secretly corpus-shaped (instead of
-    // probed-cells-shaped) would blow up superlinearly in this leg.
-    // Replicas are exact copies (vec_id-shifted): the smoke measures
-    // plan scaling, not recall.
-    def ann50x(): Double = inSession("ann_50x", -1.0) { sp =>
-      var base: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_50x_emb_").toString
-        import org.apache.spark.sql.functions.{col, lit, max}
-        val emb = Tables.load(sp, sfDir, "embeddings")
-        val stride = emb.agg(max(col("vec_id")).cast("long"))
-          .head().getLong(0) + 1L
-        (0 until 50).map(i => emb.withColumn("vec_id",
-            col("vec_id").cast("long") + lit(i * stride)))
-          .reduce(_ unionByName _)
-          .write.parquet(s"$base/embeddings.parquet")
-        timed { graft.operators.Similarity.q34AnnIvf(sp, base).count(); () }
-      } finally {
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val ann50xTime =
-      if (legOn("ann_50x")) sampled("ann_50x")((t: Double) => t)(ann50x())
-      else -1.0
-
-    // 10× scale smoke for the TABLE FORMAT: orders replicated 10×,
-    // then one timed pass of the format's whole write/maintain/read
-    // surface — range-clustered create, a RANGE-LOCAL merge (updates
-    // confined to the low tenth of the key space, so COW rewrites
-    // only the files it must — the file-granularity claim under
-    // load), and a zone-map pruned read. Superlinear blowup in the
-    // audit join, manifest handling, or pruning would surface here.
-    def gtable10x(): Double = inSession("gtable_10x", -1.0) { sp =>
-      var root: String = null
-      try {
-        root = java.nio.file.Files
-          .createTempDirectory("graft_10x_gtable_").toString + "/t"
-        import org.apache.spark.sql.functions.{col, lit, max}
-        val ord = Tables.load(sp, sfDir, "orders")
-        val stride = ord.agg(max(col("o_orderkey")).cast("long"))
-          .head().getLong(0) + 1L
-        val big = (0 until 10).map(i =>
-            ord.withColumn("o_orderkey",
-              col("o_orderkey").cast("long") + lit(i * stride)))
-          .reduce(_ unionByName _)
-        timed {
-          val t = graft.format.GraftTable.create(sp, root,
-            big.repartitionByRange(32, col("o_orderkey")),
-            statsCols = Seq("o_orderkey", "o_custkey"), numFiles = 0)
-          t.merge(big.where(col("o_orderkey") < stride &&
-              col("o_orderkey") % 10 === 0)
-            .withColumn("o_totalprice", col("o_totalprice") * 2),
-            keyCols = Seq("o_orderkey"), numFiles = 4)
-          val (rows, _, _) = graft.format.GraftTable.forPath(sp, root)
-            .prunedRead("o_orderkey", lit(0), lit(stride / 10))
-          rows.count()
-          // retro-clustering cost under load: one OPTIMIZE ZORDER
-          // commit over the accreted table, then a pruned read on the
-          // SECOND dimension that only the z-layout can skip for
-          t.optimizeZorder("o_custkey", "o_orderkey", numFiles = 32)
-          val (rows2, _, _) = graft.format.GraftTable.forPath(sp, root)
-            .prunedRead("o_custkey", lit(0), lit(100))
-          rows2.count()
-          ()
-        }
-      } finally {
-        import scala.reflect.io.Directory
-        if (root != null)
-          new Directory(new java.io.File(root).getParentFile)
-            .deleteRecursively()
-      }
-    }
-    val gtable10xTime =
-      if (legOn("gtable_10x")) sampled("gtable_10x")((t: Double) => t)(gtable10x())
-      else -1.0
-
-    // COW vs MOR on the SAME 10× accreted table: two equivalent
-    // sparse deletes (every file hit — the copy-on-write worst case),
-    // one as a file rewrite, one as a deletion-vector commit, each
-    // followed by a full live read. The pair quantifies the
-    // write-amplification gap the MOR tier closes AND charges MOR its
-    // read-side DV price honestly.
-    def mor10x(): (Double, Double) = inSession("mor_10x", (-1.0, -1.0)) { sp =>
-      var root: String = null
-      try {
-        root = java.nio.file.Files
-          .createTempDirectory("graft_10x_mor_").toString + "/t"
-        import org.apache.spark.sql.functions.{col, lit, max}
-        val ord = Tables.load(sp, sfDir, "orders")
-        val stride = ord.agg(max(col("o_orderkey")).cast("long"))
-          .head().getLong(0) + 1L
-        val big = (0 until 10).map(i =>
-            ord.withColumn("o_orderkey",
-              col("o_orderkey").cast("long") + lit(i * stride)))
-          .reduce(_ unionByName _)
-        val t = graft.format.GraftTable.create(sp, root,
-          big.repartitionByRange(32, col("o_orderkey")),
-          statsCols = Seq("o_orderkey"), numFiles = 0)
-        val cow = timed {
-          t.deleteWhere(col("o_orderkey") % 1000 === 1)
-          t.read().count()
-          ()
-        }
-        val mor = timed {
-          t.deleteWhereMor(col("o_orderkey") % 1000 === 2)
-          t.read().count()
-          ()
-        }
-        (cow, mor)
-      } finally {
-        import scala.reflect.io.Directory
-        if (root != null)
-          new Directory(new java.io.File(root).getParentFile)
-            .deleteRecursively()
-      }
-    }
-    val (cowDel10xTime, morDel10xTime) =
-      if (legOn("mor_10x")) sampledPair("mor_10x")(mor10x())
-      else (-1.0, -1.0)
-
-    // BLOOM-INDEX probe at 50×: the same point lookup on a UNIQUE
-    // NON-cluster column (a scrambled row id — every file's envelope
-    // spans the whole domain, so min/max can never skip) against two
-    // identical 50× tables, one bloom-indexed, one envelopes-only.
-    // The pair quantifies the index's file-skipping win the way
-    // cow/mor quantifies write amplification: the bloom side pays a
-    // CONSTANT manifest-planning cost and opens ~1 file, the plain
-    // side reads everything — at 100 TB the gap is "open 2 files" vs
-    // "open a million". (At 10× the fixed planning jobs still rival
-    // the saved read; 50× is where the asymptotics show even on one
-    // node.)
-    def bloom50x(): (Double, Double) =
-      inSession("bloom_50x", (-1.0, -1.0)) { sp =>
-      var base: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_50x_bloom_").toString
-        import org.apache.spark.sql.functions.{col, lit, max}
-        val ord = Tables.load(sp, sfDir, "orders")
-        val stride = ord.agg(max(col("o_orderkey")).cast("long"))
-          .head().getLong(0) + 1L
-        val dom = stride * 50
-        val big = (0 until 50).map(i =>
-            ord.withColumn("o_orderkey",
-              col("o_orderkey").cast("long") + lit(i * stride)))
-          .reduce(_ unionByName _)
-          .withColumn("uid", col("o_orderkey") * 2654435761L % dom)
-          // 512 files: what the bloom actually saves at scale is
-          // per-FILE open/footer/decode overhead — a point lookup on
-          // an unindexed unique column must touch every file of a
-          // 100 TB table no matter how well columns prune
-          .repartitionByRange(512, col("o_orderkey"))
-        graft.format.GraftTable.create(sp, s"$base/indexed",
-          big, statsCols = Seq("o_orderkey"), numFiles = 0,
-          bloomCols = Seq("uid"), bloomBits = 1 << 18)
-        graft.format.GraftTable.create(sp, s"$base/plain",
-          big, statsCols = Seq("o_orderkey"), numFiles = 0)
-        val probe = (12345L * 2654435761L) % dom
-        def lookup(root: String): Long = sp.read.format("gtable")
-          .load(root).where(col("uid") === probe).count()
-        val expected = lookup(s"$base/indexed")
-        val withBloom = timed { lookup(s"$base/indexed"); () }
-        val without = timed {
-          require(lookup(s"$base/plain") == expected); ()
-        }
-        (withBloom, without)
-      } finally {
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val (bloomProbe50xTime, fullscanProbe50xTime) =
-      if (legOn("bloom_50x")) sampled("bloom_50x")(
-        (t: (Double, Double)) => t._1)(bloom50x())
-      else (-1.0, -1.0)
-
-    // FULL-SCALE RETAIL PARITY (VERDICT r7 #6 / r8 #4): the reference's
-    // OWN schema at the reference's OWN volume — RetailPipeline (seed
-    // CSVs + the deterministic FIXTURES A.4 fact generator) at
-    // 28,593,030 purchase rows, initial full DAG then the monthly
-    // incremental re-run (one month's partitions dynamic-overwritten).
-    // This is the leg BASELINE.md's ≈20 min / ≈10 min numbers describe;
-    // single attempt, reported per-query only.
-    val retailRows =
-      sys.env.getOrElse("SPARK_GRAFT_RETAIL_ROWS", "28593030").toLong
-    def retailFullscale(): (Double, Double) =
-      inSession("retail_fullscale", (-1.0, -1.0)) { sp =>
-      var wh: String = null
-      try {
-        wh = java.nio.file.Files
-          .createTempDirectory("graft_retail_full_").toString
-        val dataDir = graft.operators.RetailQueries.DataDir
-        val tInit = timed {
-          graft.etl.RetailPipeline.run(sp, dataDir, wh, retailRows)
-        }
-        settle() // initial's writeback must not bill the incremental
-        val tInc = timed {
-          graft.etl.RetailPipeline.runIncremental(
-            sp, dataDir, wh, retailRows, "2014", "11")
-        }
-        (tInit, tInc)
-      } finally {
-        import scala.reflect.io.Directory
-        if (wh != null)
-          new Directory(new java.io.File(wh)).deleteRecursively()
-      }
-    }
-    // sampledPair, not sampled-on-initial (VERDICT r12 #2): r12's
-    // 117.4 s incremental was an unconverged ride-along on whichever
-    // sample won the initial — BOTH published metrics must converge
-    // on quiet samples and report their own per-component minimum.
-    // THROWAWAY WARM PASS (VERDICT r13 #4): across r12-r14 the FIRST
-    // fullscale sample ran 1.4-2.4x its quiet twin at zero external
-    // CPU — cold FS/page-cache state, not contention (the PSI-io
-    // stamps confirm low stall). One un-timed run moves the cold
-    // state out of every measured sample so the published SPREAD
-    // reflects the hardware, not the warmup; min-of-quiet already
-    // ignored the cold sample, but convergence burned a sample slot
-    // on it every round.
-    // WARM-PASS STAMPING (VERDICT r14 #5): the warm run's own wall
-    // time and the page-cache level before/after ride the artifact —
-    // if the first timed sample still runs >1.3× the min, the stamps
-    // say whether the warm pass's cache survived to the sample or
-    // what displaced it.
-    val runRetail = legOn("retail_fullscale")
-    if (runRetail) {
-      System.err.println("BENCH WARM retail_fullscale (untimed)")
-      val cb = cachedMb()
-      val w = timed {
-        try { retailFullscale(); () } catch { case _: Throwable => () }
-      }
-      warmInfo("retail_fullscale") =
-        f"""{"warm_sec":$w%.1f,"cached_mb_before":$cb%.0f,""" +
-          f""""cached_mb_after":${cachedMb()}%.0f}"""
-    }
-    val (retailFullTime, retailIncTime) =
-      if (runRetail) sampledPair("retail_fullscale")(retailFullscale())
-      else (-1.0, -1.0)
-
-    // The same DAG at the same volume through the LAKEHOUSE tier
-    // (every tier a GraftTable, incremental via atomic replaceWhere) —
-    // tracks the format's write amplification vs raw partition dirs
-    // (VERDICT r9 #8).
-    def retailLakeAt(rows: Long, leg: String): (Double, Double) =
-      inSession(leg, (-1.0, -1.0)) { sp =>
-      var wh: String = null
-      try {
-        wh = java.nio.file.Files
-          .createTempDirectory("graft_retail_lake_").toString
-        val dataDir = graft.operators.RetailQueries.DataDir
-        val tInit = timed {
-          graft.etl.RetailPipeline.runLake(sp, dataDir, wh, rows)
-        }
-        settle() // initial's writeback must not bill the incremental
-        val tInc = timed {
-          graft.etl.RetailPipeline.runIncrementalLake(
-            sp, dataDir, wh, rows, "2014", "11")
-        }
-        (tInit, tInc)
-      } finally {
-        import scala.reflect.io.Directory
-        if (wh != null)
-          new Directory(new java.io.File(wh)).deleteRecursively()
-      }
-    }
-    def retailFullscaleLake(): (Double, Double) =
-      retailLakeAt(retailRows, "retail_fullscale_lake")
-    // same throwaway warm as the raw-dir pair (the lake tier writes a
-    // different warehouse shape, so the raw pair's warm does not
-    // cover it)
-    if (runRetail) {
-      System.err.println("BENCH WARM retail_fullscale_lake (untimed)")
-      val cb = cachedMb()
-      val w = timed {
-        try { retailFullscaleLake(); () }
-        catch { case _: Throwable => () }
-      }
-      warmInfo("retail_fullscale_lake") =
-        f"""{"warm_sec":$w%.1f,"cached_mb_before":$cb%.0f,""" +
-          f""""cached_mb_after":${cachedMb()}%.0f}"""
-    }
-    val (retailLakeTime, retailLakeIncTime) =
-      if (runRetail)
-        sampledPair("retail_fullscale_lake")(retailFullscaleLake())
-      else (-1.0, -1.0)
-
-    // SCALE-RATIO LEG (r16, VERDICT r15 #7): the SAME lake DAG at 2×
-    // the generated rows (57.2M), single attempt right after the 1×
-    // pair — published so a round-over-round verdict can separate
-    // fixed-cost wins (2×/1× ratio stays put) from scale wins (the
-    // ratio drops). The leg is a ratio instrument, not a headline
-    // number: one quiet-gated sample, no warm pass of its own (the 1×
-    // pair's runs just warmed the shared inputs; the synth fact is
-    // generated, not read).
-    val (retailLake2xTime, retailLake2xIncTime) =
-      if (runRetail && legOn("retail_lake_2x")) {
-        val ((i, inc), quiet) = quietLeg("retail_lake_2x")(
-          retailLakeAt(retailRows * 2, "retail_lake_2x"))
-        legSampleLog("retail_lake_2x") = List(i)
-        legSampleLog("retail_lake_2x.b") = List(inc)
-        legQuietOk("retail_lake_2x") = quiet
-        (i, inc)
-      } else (-1.0, -1.0)
-
-    // COMMIT-THROUGHPUT MICROBENCH (VERDICT r11 #3): 200 one-file
-    // appends then one incremental maintain (compactSmall), on a
-    // dedicated table — pins the manifest-list FIXED COST per commit
-    // so a commit-heavy setup regression (r11's q238 doubling) is
-    // attributable to the commit path or the host, not guessed.
-    // Reports (total seconds, metadata KB per commit); commits/s =
-    // 201 / seconds, derivable from the artifact.
-    def commitMicro(): (Double, Double) =
-      inSession("commit_micro", (-1.0, -1.0)) { sp =>
-      var root: String = null
-      try {
-        root = java.nio.file.Files
-          .createTempDirectory("graft_commit_micro_").toString + "/t"
-        import sp.implicits._
-        val n = 200
-        val secs = timed {
-          val t = graft.format.GraftTable.create(sp, root,
-            Seq((0L, 0L)).toDF("k", "v"), statsCols = Seq("k"),
-            numFiles = 1)
-          (1 until n).foreach { i =>
-            t.append(Seq((i.toLong, i * 10L)).toDF("k", "v"),
-              numFiles = 1)
-          }
-          // the mixed-maintenance commit a scheduler would issue
-          t.compactSmall(maxRows = 1000L, numFiles = 4)
-          ()
-        }
-        def dirSize(f: java.io.File): Long =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty)
-              .map(dirSize).sum
-          else f.length()
-        val metaKbPerCommit =
-          dirSize(new java.io.File(s"$root/_log")) / 1024.0 / (n + 1)
-        (secs, metaKbPerCommit)
-      } finally {
-        import scala.reflect.io.Directory
-        if (root != null)
-          new Directory(new java.io.File(root).getParentFile)
-            .deleteRecursively()
-      }
-    }
-    // dev filter: SPARK_GRAFT_ONLY=commit_micro runs just this leg
-    val runCommitMicro = only.forall(_.contains("commit_micro"))
-    val (commitMicroTime, commitMicroMetaKb) =
-      if (runCommitMicro) sampledPair("commit_micro")(commitMicro())
-      else (-1.0, -1.0)
-
-    // Packed-scan smoke (round 13): 2048 small files in one table,
-    // the many-micro-commits read shape. Reports (packed, per_file):
-    // the same 3-scan aggregate loop under bin-packed planning (~32
-    // tasks) and under the kill-switch (2048 tasks, the pre-round-13
-    // plan) — the delta is the per-task fixed cost packing removes.
-    def packedScan(): (Double, Double) =
-      inSession("packed_scan", (-1.0, -1.0)) { sp =>
-      var root: String = null
-      try {
-        root = java.nio.file.Files
-          .createTempDirectory("graft_packed_scan_").toString + "/t"
-        graft.format.GraftTable.create(sp, root,
-          sp.range(0L, 1000000L)
-            .selectExpr("id as k", "id % 97 as v"),
-          statsCols = Seq("k"), numFiles = 2048)
-        def scanOnce(): Unit = {
-          sp.read.format("gtable").load(root)
-            .agg(org.apache.spark.sql.functions.sum("v"),
-              org.apache.spark.sql.functions.count("*"))
-            .collect(); ()
-        }
-        scanOnce() // warm: plan caches + page cache for both arms
-        val packed = timed((1 to 3).foreach(_ => scanOnce()))
-        val perFile = try {
-          sp.conf.set("graft.scan.pack.enabled", "false")
-          timed((1 to 3).foreach(_ => scanOnce()))
-        } finally sp.conf.unset("graft.scan.pack.enabled")
-        (packed, perFile)
-      } finally {
-        import scala.reflect.io.Directory
-        if (root != null)
-          new Directory(new java.io.File(root).getParentFile)
-            .deleteRecursively()
-      }
-    }
-    val runPackedScan = only.forall(_.contains("packed_scan"))
-    val (packedScanTime, perFileScanTime) =
-      if (runPackedScan) sampledPair("packed_scan")(packedScan())
-      else (-1.0, -1.0)
-
-    // PACKED SCAN AT ITS DESIGN REGIME (VERDICT r13 #1): 2×10⁴
-    // genuinely tiny files — the streaming-sink debt shape the packer
-    // was built for ("10⁴ micro-files → ~300 tasks",
-    // GraftTableSource.packPartitions). Both arms run the same
-    // 2-scan aggregate loop; the packed arm plans byte-binned
-    // partitions, the kill-switch arm pays one scheduler round per
-    // file. Task counts ride the artifact next to the wall times so
-    // the win is attributable (tasks, not cache luck).
-    var packedTasks20k = -1.0
-    var perFileTasks20k = -1.0
-    def packedScan20k(): (Double, Double) =
-      inSession("packed_scan_20k", (-1.0, -1.0)) { sp =>
-      var base: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_packed20k_").toString
-        val root = s"$base/t"
-        graft.format.GraftTable.create(sp, root,
-          sp.range(0L, 1000000L).selectExpr("id as k", "id % 97 as v"),
-          statsCols = Seq("k"), numFiles = 20000)
-        def df() = sp.read.format("gtable").load(root)
-        def scanOnce(): Unit = {
-          df().agg(org.apache.spark.sql.functions.sum("v"),
-            org.apache.spark.sql.functions.count("*"))
-            .collect(); ()
-        }
-        scanOnce() // warm: plan caches + page cache for both arms
-        packedTasks20k = df().rdd.getNumPartitions.toDouble
-        val packed = timed((1 to 2).foreach(_ => scanOnce()))
-        val perFile = try {
-          sp.conf.set("graft.scan.pack.enabled", "false")
-          perFileTasks20k = df().rdd.getNumPartitions.toDouble
-          timed((1 to 2).foreach(_ => scanOnce()))
-        } finally sp.conf.unset("graft.scan.pack.enabled")
-        (packed, perFile)
-      } finally {
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val runPacked20k = only.forall(_.contains("packed_scan_20k"))
-    val (packed20kTime, perFile20kTime) =
-      if (runPacked20k) sampledPair("packed_scan_20k")(packedScan20k())
-      else (-1.0, -1.0)
-
-    // MANIFEST PLANNING AT 2×10⁵ ENTRIES (VERDICT r13 #1): a
-    // synthetic 200001-file manifest (fabricated entries through the
-    // real commit path — planning never opens data files, so the
-    // paths need not exist) planned under BOTH branches of the
-    // PlanCollectLimit straddle: whole-result collect vs
-    // partition-streamed toLocalIterator. Reports planning wall time
-    // AND the driver-heap PEAK over baseline while planning — the
-    // number that says a 10⁶-commit table's scan is plannable without
-    // sizing the driver by the manifest.
-    val planCollectMb =
-      scala.collection.mutable.LinkedHashMap[String, Double]()
-    val planStreamMb =
-      scala.collection.mutable.LinkedHashMap[String, Double]()
-    def manifestPlanning(nEntries: Long, leg: String)
-        : (Double, Double) = inSession(leg, (-1.0, -1.0)) { sp =>
-      var base: String = null
-      val prevLimit = graft.format.GraftTable.PlanCollectLimit
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_planmem_").toString
-        val root = s"$base/t"
-        val t = graft.format.GraftTable.create(sp, root,
-          sp.range(0L, 1000L).selectExpr("id as k", "id as v"),
-          statsCols = Seq("k"), numFiles = 1)
-        val fake = sp.range(0L, nEntries).selectExpr(
-          "concat('data/cfake/part-', lpad(cast(id as string), 7, " +
-            "'0'), '.parquet') as path",
-          "cast(50 as bigint) as row_count",
-          "cast(4096 as bigint) as size_bytes",
-          "id * 50 + 1000000 as min_k", "id * 50 + 1000049 as max_k",
-          "cast(0 as bigint) as nulls_k")
-        t.commitReplaceFiles("append", Nil, fake, expectedParent = 1L)
-        require(t.fileCount() == nEntries + 1L,
-          s"fabricated manifest holds ${t.fileCount()} entries")
-        def planOnce(): Unit = {
-          sp.read.format("gtable").load(root).rdd.getNumPartitions
-          ()
-        }
-        val rt = Runtime.getRuntime
-        // peak LIVE heap MB over post-GC baseline: the sampler forces
-        // a GC before each reading so it tracks retained buffers (the
-        // collect arm's whole-result Rows), not allocation-rate noise
-        // — raw used-heap sampling read the STREAM arm higher purely
-        // from eden churn across its per-partition jobs. Runs as its
-        // own pass so the GC pounding never distorts the wall time.
-        def livePeak(f: => Unit): Double = {
-          System.gc(); Thread.sleep(200)
-          val base0 = rt.totalMemory - rt.freeMemory
-          @volatile var run = true
-          @volatile var peak = 0L
-          val th = new Thread(() => while (run) {
-            System.gc()
-            val u = rt.totalMemory - rt.freeMemory - base0
-            if (u > peak) peak = u
-            Thread.sleep(50)
-          })
-          th.setDaemon(true); th.start()
-          f
-          run = false; th.join()
-          peak / 1e6
-        }
-        planOnce() // warm manifest footers + plan machinery
-        graft.format.GraftTable.PlanCollectLimit = 10000000L
-        val cSec = timed(planOnce())
-        val cMb = livePeak(planOnce())
-        graft.format.GraftTable.PlanCollectLimit = 0L
-        val sSec = timed(planOnce())
-        val sMb = livePeak(planOnce())
-        planCollectMb(leg) =
-          math.max(planCollectMb.getOrElse(leg, -1.0), cMb)
-        planStreamMb(leg) =
-          math.max(planStreamMb.getOrElse(leg, -1.0), sMb)
-        (cSec, sSec)
-      } finally {
-        graft.format.GraftTable.PlanCollectLimit = prevLimit
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val runPlanMem = only.forall(_.contains("manifest_plan_200k"))
-    val (planCollectSec, planStreamSec) =
-      if (runPlanMem) sampledPair("manifest_plan_200k")(
-        manifestPlanning(200000L, "manifest_plan_200k"))
-      else (-1.0, -1.0)
-
-    // THE STREAMED BRANCH'S DESIGN REGIME (VERDICT r14 #7): a 10⁶-
-    // entry manifest — at 200k entries the streamed branch saves only
-    // ~18-35 MB for ~3× wall; this leg publishes the wall/heap pair
-    // at the scale PlanCollectLimit exists for, so the crossover
-    // claim next to the knob is measured, not asserted.
-    val runPlan1m = only.forall(_.contains("manifest_plan_1m"))
-    val (plan1mCollectSec, plan1mStreamSec) =
-      if (runPlan1m) sampledPair("manifest_plan_1m")(
-        manifestPlanning(1000000L, "manifest_plan_1m"))
-      else (-1.0, -1.0)
-
-    // CURATION AT HISTORY (VERDICT r14 #3): ten nightly batches of
-    // the full documents table (re-keyed per night; 1 doc in 5 is an
-    // exact re-post of night 0 → dup_of_history, the rest are novel)
-    // through the SAME change-feed drain and curateBatch as q255 —
-    // history grows ~0.8·|batch| fingerprints per night while each
-    // batch stays constant-sized, so a flat per-batch series IS the
-    // O(batch) maintenance claim (the pre-r15 mart recompute read the
-    // full verdict history every night and would show here as a
-    // rising series). Reports (first batch, last batch) seconds; the
-    // full per-batch series of every sample rides the artifact as
-    // `curation_batches`.
-    var curationSeries = List.empty[String]
-    def curationHistory(): (Double, Double) =
-      inSession("curation_history", (-1.0, -1.0)) { sp =>
-      var base: String = null
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_cur_hist_").toString
-        val times = graft.operators.CurationGate
-          .benchHistory(sp, sfDir, base,
-            nBatches = sys.env
-              .getOrElse("SPARK_GRAFT_CURATION_BATCHES", "10").toInt,
-            mult = sys.env
-              .getOrElse("SPARK_GRAFT_CURATION_MULT", "8").toInt)
-        curationSeries = curationSeries :+
-          times.map(t => f"$t%.2f").mkString("[", ",", "]")
-        if (times.exists(_ < 0)) (-1.0, -1.0)
-        else (times.head, times.last)
-      } finally {
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val runCuration = only.forall(_.contains("curation_history"))
-    val (curationFirstSec, curationLastSec) =
-      if (runCuration) sampledPair("curation_history")(curationHistory())
-      else (-1.0, -1.0)
-
-    // MULTI-WRITER COMMIT THROUGHPUT THROUGH THE S3 FAKE (VERDICT r14
-    // #4): 6 writer threads × 20 one-file appends race ONE table
-    // whose commits linearize through S3ConditionalPutLogStore
-    // against the in-process conditional-PUT fake, with 2 ms injected
-    // wire latency per attempt (the round trip a real store charges).
-    // Publishes (wall seconds for all 120 commits → commits/s =
-    // 120/s, derivable like commit_micro's) and MEAN commit attempts
-    // per successful commit; the full attempt histogram rides the
-    // artifact (`commit_tput_attempts`: [[attempts, n_commits], …]) —
-    // the jittered-backoff claim measured, not asserted. Any
-    // ConcurrentCommitException fails the leg to -1.
-    var commitTputHist = "[]"
-    def commitThroughput(): (Double, Double) =
-      inSession("commit_throughput", (-1.0, -1.0)) { sp =>
-      var fake: graft.format.S3FakeServer = null
-      var base: String = null
-      val prevProvider = graft.format.LogStore.provider
-      try {
-        base = java.nio.file.Files
-          .createTempDirectory("graft_commit_tput_").toString
-        val root = s"$base/t"
-        fake = new graft.format.S3FakeServer
-        fake.latencyMs.set(2)
-        val store = new graft.format.S3ConditionalPutLogStore(
-          fake.endpoint, () => sp.sparkContext.hadoopConfiguration)
-        val bp = base
-        graft.format.LogStore.provider =
-          r => if (r.startsWith(bp)) store else prevProvider(r)
-        import sp.implicits._
-        graft.format.GraftTable.create(sp, root,
-          Seq((0L, 0L)).toDF("k", "v"), statsCols = Seq("k"),
-          numFiles = 1)
-        val writers = 6
-        val per = 20
-        graft.format.CommitProfile.reset()
-        graft.format.CommitProfile.on.set(true)
-        val errors = new java.util.concurrent.atomic.AtomicInteger(0)
-        val secs = timed {
-          val ths = (0 until writers).map { w =>
-            new Thread(() => {
-              try {
-                val t = graft.format.GraftTable.forPath(sp, root)
-                (0 until per).foreach { i =>
-                  t.append(Seq((w * 1000L + i + 1L, i.toLong))
-                    .toDF("k", "v"), numFiles = 1); ()
-                }
-              } catch {
-                case e: Throwable =>
-                  errors.incrementAndGet()
-                  System.err.println(
-                    s"BENCH commit_tput writer $w FAILED: $e")
-              }
-            })
-          }
-          ths.foreach(_.start()); ths.foreach(_.join())
-        }
-        graft.format.CommitProfile.on.set(false)
-        val attempts = graft.format.CommitProfile.attemptCounts
-        if (errors.get() > 0 ||
-            attempts.length != writers * per) (-1.0, -1.0)
-        else {
-          commitTputHist = attempts.groupBy(identity).toSeq
-            .sortBy(_._1)
-            .map { case (k, v) => s"[$k,${v.size}]" }
-            .mkString("[", ",", "]")
-          (secs, attempts.sum.toDouble / attempts.size)
-        }
-      } finally {
-        graft.format.LogStore.provider = prevProvider
-        graft.format.CommitProfile.on.set(false)
-        if (fake != null) fake.stop()
-        import scala.reflect.io.Directory
-        if (base != null)
-          new Directory(new java.io.File(base)).deleteRecursively()
-      }
-    }
-    val runCommitTput = only.forall(_.contains("commit_throughput"))
-    val (commitTputSec, commitTputAttempts) =
-      if (runCommitTput)
-        sampledPair("commit_throughput")(commitThroughput())
-      else (-1.0, -1.0)
-
-    // Scale-smoke legs carry their TRUE factor in the key (a 48× run
-    // used to report under _10x) and are excluded from the headline by
-    // this explicit list — never by suffix matching.
-    val scaleSmokeKeys = Seq(
-      s"etl_pipeline_${etlX}x", s"etl_incremental_${etlX}x",
-      "dedup_10x", "ann_50x", "gtable_10x",
-      "cow_delete_10x", "mor_delete_10x",
-      "bloom_probe_50x", "fullscan_probe_50x",
-      "retail_fullscale", "retail_incremental_fullscale",
-      "retail_fullscale_lake", "retail_incremental_fullscale_lake",
-      "retail_fullscale_lake_2x", "retail_incremental_fullscale_lake_2x",
-      "commit_micro_200", "commit_micro_meta_kb",
-      "packed_scan_2048", "per_file_scan_2048",
-      "packed_scan_20k", "per_file_scan_20k",
-      "packed_tasks_20k", "per_file_tasks_20k",
-      "manifest_plan_200k_collect", "manifest_plan_200k_stream",
-      "manifest_plan_200k_collect_mb", "manifest_plan_200k_stream_mb",
-      "manifest_plan_1m_collect", "manifest_plan_1m_stream",
-      "manifest_plan_1m_collect_mb", "manifest_plan_1m_stream_mb",
-      "curation_hist_first_s", "curation_hist_last_s",
-      "commit_tput_120_s", "commit_tput_attempts_mean")
-    val all = queryTimes :+ ("etl_pipeline" -> etlTime) :+
-      ("etl_incremental" -> etlIncTime) :+
-      (s"etl_pipeline_${etlX}x" -> etl10xTime) :+
-      (s"etl_incremental_${etlX}x" -> etl10xIncTime) :+
-      ("dedup_10x" -> dedup10xTime) :+
-      ("ann_50x" -> ann50xTime) :+
-      ("gtable_10x" -> gtable10xTime) :+
-      ("cow_delete_10x" -> cowDel10xTime) :+
-      ("mor_delete_10x" -> morDel10xTime) :+
-      ("bloom_probe_50x" -> bloomProbe50xTime) :+
-      ("fullscan_probe_50x" -> fullscanProbe50xTime) :+
-      ("retail_fullscale" -> retailFullTime) :+
-      ("retail_incremental_fullscale" -> retailIncTime) :+
-      ("retail_fullscale_lake" -> retailLakeTime) :+
-      ("retail_incremental_fullscale_lake" -> retailLakeIncTime) :+
-      ("retail_fullscale_lake_2x" -> retailLake2xTime) :+
-      ("retail_incremental_fullscale_lake_2x" -> retailLake2xIncTime) :+
-      ("commit_micro_200" -> commitMicroTime) :+
-      ("commit_micro_meta_kb" -> commitMicroMetaKb) :+
-      ("packed_scan_2048" -> packedScanTime) :+
-      ("per_file_scan_2048" -> perFileScanTime) :+
-      ("packed_scan_20k" -> packed20kTime) :+
-      ("per_file_scan_20k" -> perFile20kTime) :+
-      ("packed_tasks_20k" -> packedTasks20k) :+
-      ("per_file_tasks_20k" -> perFileTasks20k) :+
-      ("manifest_plan_200k_collect" -> planCollectSec) :+
-      ("manifest_plan_200k_stream" -> planStreamSec) :+
-      ("manifest_plan_200k_collect_mb" ->
-        planCollectMb.getOrElse("manifest_plan_200k", -1.0)) :+
-      ("manifest_plan_200k_stream_mb" ->
-        planStreamMb.getOrElse("manifest_plan_200k", -1.0)) :+
-      ("manifest_plan_1m_collect" -> plan1mCollectSec) :+
-      ("manifest_plan_1m_stream" -> plan1mStreamSec) :+
-      ("manifest_plan_1m_collect_mb" ->
-        planCollectMb.getOrElse("manifest_plan_1m", -1.0)) :+
-      ("manifest_plan_1m_stream_mb" ->
-        planStreamMb.getOrElse("manifest_plan_1m", -1.0)) :+
-      ("curation_hist_first_s" -> curationFirstSec) :+
-      ("curation_hist_last_s" -> curationLastSec) :+
-      ("commit_tput_120_s" -> commitTputSec) :+
-      ("commit_tput_attempts_mean" -> commitTputAttempts)
-    val qs = all.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // headline total keeps the PRE-round-7 metric definition (query set
-    // + the 1x etl pair) so round-over-round totals stay comparable;
-    // the scale-smoke legs are reported per-query only
-    val total = all
-      .filterNot { case (k, _) => scaleSmokeKeys.contains(k) }
-      .map(_._2).filter(_ >= 0).sum
+    val headline = total(results, table)
     val loadEnd = loadavg()
-    val legLoadJson = legLoads
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
-    val legLoadEndJson = legLoadsEnd
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
-    val legSamplesJson = legSampleLog
-      .map { case (k, vs) =>
-        "\"" + k + "\":[" + vs.map(v => f"$v%.1f").mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    // false = the leg's reported number has NO quiet backing sample
-    // even after the extended retry budget — discount it on sight
-    val legQuietJson = legQuietOk
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // average EXTERNAL busy cores while each sample ran — the signal
-    // the quiet verdict is judged on (loadavg fields are context only)
-    val legExtJson = legExtCores
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
-    val legIoJson = legIoStall
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.1f" }
-      .mkString("{", ",", "}")
-    def passJson(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val passesJson =
-      s"""{"p1":${passJson(p1)},"p2":${passJson(p2)},""" +
-      f""""p1_ext_cores":$p1Ext%.2f,"p2_ext_cores":$p2Ext%.2f,""" +
-      s""""p1_loadavg":"$p1Load","p2_loadavg":"$p2Load"}"""
-    val legCachedJson = legCachedMb
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.0f" }
-      .mkString("{", ",", "}")
-    val warmJson = warmInfo
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val curationJson = curationSeries.mkString("[", ",", "]")
-    // FULL diagnostics line — the on-disk artifact (bench_result*.json)
-    // keeps every per-leg sample/load/cache/pass field for judge
-    // archaeology, exactly as before.
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_ok":$loadOk,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","leg_loadavg":$legLoadJson,"leg_loadavg_end":$legLoadEndJson,"leg_ext_cores":$legExtJson,"leg_samples":$legSamplesJson,"leg_quiet":$legQuietJson,"leg_io_stall_pct":$legIoJson,"leg_cached_mb":$legCachedJson,"warm_info":$warmJson,"curation_batches":$curationJson,"commit_tput_attempts":$commitTputHist,"query_passes":$passesJson}"""
-    // PRINTED line (r16, VERDICT r15 #2/#3): the driver tail-captures
-    // stdout, and rounds 12–14's ~50 KB diagnostics-laden line
-    // truncated there, losing the round's parsed bench. The printed
-    // line now carries only the driver-parsed core — metric, value,
-    // unit, the full per-query map (values at ms precision; they are
-    // wall-clock seconds, where sub-ms digits are noise), sf, load_ok
-    // — ~8 KB. Every diagnostic field still rides the artifact file
-    // above. No timed region or metric definition changed.
-    def fmtSec(v: Double): String =
-      if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
-      else f"$v%.3f"
-    val qsLine = all.map { case (k, v) => "\"" + k + "\":" + fmtSec(v) }
-      .mkString("{", ",", "}")
-    val printed =
-      s"""{"metric":"total","value":${fmtSec(total)},"unit":"sec","queries":$qsLine,"sf":"$sfDir","load_ok":$loadOk}"""
-    println(printed)
-    // Also persist the result line: stdout tails can truncate mid-stream
-    // (sbt log interleaving), which loses the headline number from the
-    // artifact. A file is the machine-parseable source of truth.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"BENCH RESULT FILE WRITE FAIL $out: $e") }
-    // Per-round self-identifying copy: bench_result.json is overwritten
-    // every run, so round-over-round comparison needs a file the next
-    // run won't clobber. The round number = 1 + the highest BENCH_r{N}
-    // the driver has already published in cwd. Full runs only — a
-    // SPARK_GRAFT_ONLY dev run must not replace the round's artifact
-    // with a partial one.
-    if (only.isEmpty) try {
+    def passJson(m: Map[String, Double]): JValue =
+      JObject(m.toList.sortBy(_._1).map { case (k, v) => k -> JDouble(v) })
+    val artifact = resultLine(results, headline, sfDir, loadOk, JDouble(_),
+      List[JField]("loadavg_start" -> JString(loadStart),
+        "loadavg_end" -> JString(loadEnd)) ++
+        runner.diag.map { case (f, m) => f -> JObject(m.toList) } ++
+        List("curation_batches" -> JArray(notes.curationBatches.toList),
+          "commit_tput_attempts" -> notes.commitTputAttempts,
+          "query_passes" -> JObject("p1" -> passJson(p1),
+            "p2" -> passJson(p2), "p1_ext_cores" -> num(p1Ext, 2),
+            "p2_ext_cores" -> num(p2Ext, 2),
+            "p1_loadavg" -> JString(p1Load), "p2_loadavg" -> JString(p2Load))))
+    println(resultLine(results, headline, sfDir, loadOk, fmtSec))
+    // The artifact file is the machine-parseable source of truth: stdout
+    // tails can truncate mid-stream.
+    def write(path: String): Unit =
+      try Files.write(Paths.get(path), (artifact + "\n").getBytes("UTF-8"))
+      catch { case e: Throwable =>
+        System.err.println(s"BENCH RESULT FILE WRITE FAIL $path: $e") }
+    write(OutFile)
+    // A per-round copy the next run won't clobber, numbered one past the
+    // highest BENCH_r{N}.json published in cwd. Full runs only: a
+    // filtered dev run must not replace the round's artifact.
+    if (only.isEmpty) {
       val seen = Option(new java.io.File(".").listFiles()).toSeq.flatten
         .map(_.getName)
         .collect { case s if s.matches("BENCH_r\\d+\\.json") =>
           s.replaceAll("\\D", "").toInt }
-      val round = (if (seen.isEmpty) 0 else seen.max) + 1
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"bench_result_r$round%02d.json"),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"BENCH PER-ROUND FILE WRITE FAIL: $e") }
+      write(f"bench_result_r${seen.maxOption.getOrElse(0) + 1}%02d.json")
+    }
   }
 }

@@ -90,6 +90,16 @@ object GraftSession {
       extraConf: Map[String, String] = Map.empty): Map[String, String] =
     defaults ++ localConf(master) ++ extraConf
 
+  /** The master of the engine's mains (`Bench`, `Verify`, `PlanProf`,
+    * `Run`): `local[n]`, n from `SPARK_GRAFT_CPUS` or else the available
+    * processors. One default for all of them, so the session the oracle
+    * verifies is the one the bench times. */
+  def localMaster: String = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    s"local[$n]"
+  }
+
   def build(master: String = "local[*]",
       appName: String = "graft",
       extraConf: Map[String, String] = Map.empty): SparkSession = {

@@ -10,7 +10,8 @@ package graft
   *
   * Usage: PlanProf <outDir> <query>[,query…] [reps]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32) — same contract as Bench.
+  *      SPARK_GRAFT_CPUS ([[GraftSession.localMaster]]) — same
+  *      contract as Bench.
   */
 object PlanProf {
   def main(args: Array[String]): Unit = {
@@ -18,8 +19,7 @@ object PlanProf {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", "graft-planprof")
+    val spark = GraftSession.build(GraftSession.localMaster, "graft-planprof")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 

@@ -23,9 +23,8 @@ object Run {
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — try --list"))
 
-    val spark = GraftSession.build(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
-      appName = s"graft-run-$name")
+    val spark = GraftSession.build(GraftSession.localMaster,
+      s"graft-run-$name")
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val df = fn(spark, dir)

@@ -18,28 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** A run over `sourceDir`'s tables into `warehouseDir`, loading the
-    * whole months from `fromDate` through `toDate` (yyyymmdd). Months
-    * are the partitions a run overwrites, so a run loads whole ones:
-    * a part-month would replace the month's rows with only that part. */
-  case class Config(
-    sourceDir: String,
-    warehouseDir: String,
-    fromDate: String,
-    toDate: String) {
-    def window: Span = Span(fromDate.take(4), fromDate.slice(4, 6),
-      toDate.take(4), toDate.slice(4, 6))
-  }
-
-  /** The directory-tier DAG over the config's months: dynamic
-    * partition overwrite, so a first run and a re-run are the same
-    * call. Returns the rows this run wrote to each mart, counted by the
-    * write itself: the whole mart on a first run, the window's
-    * partitions on a re-run (the same report `RetailPipeline`
-    * returns). */
-  def run(spark: SparkSession, cfg: Config): Map[String, Long] =
-    runDag(spark, Tpch(spark, cfg.sourceDir), cfg.window,
-      DirTier(cfg.warehouseDir))
+  /** The directory-tier DAG over `sourceDir`'s tables into
+    * `warehouseDir`, loading `window`'s months. Months are the
+    * partitions a run overwrites, so a run loads whole ones. Dynamic
+    * partition overwrite makes a first run and a re-run the same call.
+    * Returns the rows this run wrote to each mart, counted by the write
+    * itself: the whole mart on a first run, the window's partitions on
+    * a re-run (the same report `RetailPipeline` returns). */
+  def run(spark: SparkSession, sourceDir: String, warehouseDir: String,
+      window: Span): Map[String, Long] =
+    runDag(spark, Tpch(spark, sourceDir), window, DirTier(warehouseDir))
 
   /** The DAG with every table a [[graft.format.GraftTable]] under
     * `warehouseDir`: `Full` is the initial load (one atomic overwrite

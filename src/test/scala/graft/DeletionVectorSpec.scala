@@ -11,12 +11,11 @@ import graft.format.GraftTable
   * mutations), DV-follows-manifest restriction at commit, compaction
   * materializing deletions away, and vacuum's DV-dir lifecycle.
   * (Result correctness is additionally hash-gated by q232/q233.) */
-class DeletionVectorSpec extends AnyFunSuite {
+class DeletionVectorSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_dv_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_dv_spec_") + "/t"
 
   private def dataFiles(root: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -8,12 +8,11 @@ import graft.format.GraftTable
   * zone-map skip rates, COW file accounting, compaction invariance,
   * commit-race loser rebase, and history. (Result correctness is
   * hash-gated by q205–q208.) */
-class GraftTableSpec extends AnyFunSuite {
+class GraftTableSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_table_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_table_spec_") + "/t"
 
   private def orders = Tables.load(spark, sfDir, "orders")
 
@@ -477,8 +476,7 @@ class GraftTableSpec extends AnyFunSuite {
 
   test("protocol gate: a snapshot demanding a newer reader protocol " +
       "refuses with upgrade guidance; older versions stay readable") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_proto_").toString + "/t"
+    val root = tempDir("graft_proto_") + "/t"
     import spark.implicits._
     val t = GraftTable.create(spark, root,
       (1L to 10L).toDF("k"), Seq("k"), numFiles = 1)

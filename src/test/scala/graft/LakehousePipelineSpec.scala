@@ -23,7 +23,7 @@ class LakehousePipelineSpec extends AnyFunSuite {
     try {
       // classic: the directory tier over every ship date
       Pipeline.run(spark,
-        Pipeline.Config(sfDir, whClassic, "19920101", "20021231"))
+        sfDir, whClassic, Span("1992", "01", "2002", "12"))
       val classicFact = spark.read.parquet(s"$whClassic/bronze/fact")
       val classicSilver =
         spark.read.parquet(s"$whClassic/silver/fact_all_info")

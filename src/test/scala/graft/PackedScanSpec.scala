@@ -13,12 +13,11 @@ import graft.sources.{GraftTableFilePartition, GraftTablePackedPartition, GraftT
   * semantic (DV slice, `_file` constant, `_pos` ordinal) is preserved
   * by the chained readers. Also pins the new `size_bytes` manifest
   * stat on both write paths and the post-prune CBO sizeInBytes. */
-class PackedScanSpec extends AnyFunSuite {
+class PackedScanSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_packed_").toString + "/t"
+  private def tmp(): String = tempDir("graft_packed_") + "/t"
 
   private def numParts(df: org.apache.spark.sql.DataFrame): Int =
     df.rdd.getNumPartitions
@@ -275,8 +274,7 @@ class PackedScanSpec extends AnyFunSuite {
     t.deleteWhereMor(col("k") % 10L === 7L)
     val from = t.currentVersion
     val out = s"$root-snapseed"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_packseed_ckpt_").toString
+    val ckpt = tempDir("graft_packseed_ckpt_")
     val q = spark.readStream.format("gtable")
       .option("startingVersion", from.toString)
       .option("initialSnapshot", "true")

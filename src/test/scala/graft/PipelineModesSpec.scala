@@ -53,7 +53,7 @@ class PipelineModesSpec extends AnyFunSuite {
     // the span covers every ship date of the testdata: both tiers load
     // the whole fact
     val reportD = Pipeline.run(spark,
-      Pipeline.Config(sfDir, whD, "19920101", "20021231"))
+      sfDir, whD, Span("1992", "01", "2002", "12"))
     val reportL = Pipeline.runLake(spark, sfDir, whL, Full)
     assert(reportD === reportL)
 

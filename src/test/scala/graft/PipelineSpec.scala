@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.etl.{Pipeline, Sinks}
+import graft.etl.Medallion.Span
 import java.nio.file.Files
 
 class PipelineSpec extends AnyFunSuite {
@@ -13,8 +14,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("full DAG produces all marts and preserves fact rows in silver") {
     val wh = freshDir()
-    val cfg = Pipeline.Config(sfDir, wh, "19950101", "20011231")
-    val report = Pipeline.run(spark, cfg)
+    val window = Span("1995", "01", "2001", "12")
+    val report = Pipeline.run(spark, sfDir, wh, window)
     assert(report.keySet === Set("sales_by_datetime", "sales_by_category",
       "sales_by_region", "sales_by_customer"))
     report.values.foreach(n => assert(n > 0))
@@ -27,22 +28,22 @@ class PipelineSpec extends AnyFunSuite {
 
   test("pipeline is idempotent (second run, same window, same output)") {
     val wh = freshDir()
-    val cfg = Pipeline.Config(sfDir, wh, "19950101", "19951231")
-    Pipeline.run(spark, cfg)
+    val window = Span("1995", "01", "1995", "12")
+    Pipeline.run(spark, sfDir, wh, window)
     val first = spark.read.parquet(s"$wh/gold/sales_by_region").collect().toSet
-    Pipeline.run(spark, cfg)
+    Pipeline.run(spark, sfDir, wh, window)
     val second = spark.read.parquet(s"$wh/gold/sales_by_region").collect().toSet
     assert(first === second)
   }
 
   test("dynamic partition overwrite only replaces touched partitions") {
     val wh = freshDir()
-    Pipeline.run(spark, Pipeline.Config(sfDir, wh, "19950101", "19951231"))
+    Pipeline.run(spark, sfDir, wh, Span("1995", "01", "1995", "12"))
     val y1995 = spark.read.parquet(s"$wh/bronze/fact")
       .where(col("ship_year") === "1995").count()
     assert(y1995 > 0)
     // incremental load of 1996 must keep 1995's partitions intact
-    Pipeline.run(spark, Pipeline.Config(sfDir, wh, "19960101", "19961231"))
+    Pipeline.run(spark, sfDir, wh, Span("1996", "01", "1996", "12"))
     val fact = spark.read.parquet(s"$wh/bronze/fact")
     assert(fact.where(col("ship_year") === "1995").count() === y1995)
     assert(fact.where(col("ship_year") === "1996").count() > 0)
@@ -53,8 +54,7 @@ class PipelineSpec extends AnyFunSuite {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("pipeline-spec: caller")
     try {
-      Pipeline.run(spark, Pipeline.Config(sfDir, freshDir(), "19950101",
-        "19951231"))
+      Pipeline.run(spark, sfDir, freshDir(), Span("1995", "01", "1995", "12"))
       assert(sc.getLocalProperty("spark.job.description") ==
         "pipeline-spec: caller")
     } finally sc.setLocalProperty("spark.job.description", prev)
@@ -62,7 +62,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("silver read prunes partitions (plan shows PartitionFilters)") {
     val wh = freshDir()
-    Pipeline.run(spark, Pipeline.Config(sfDir, wh, "19950101", "19961231"))
+    Pipeline.run(spark, sfDir, wh, Span("1995", "01", "1996", "12"))
     val plan = spark.read.parquet(s"$wh/silver/fact_all_info")
       .where(col("ship_year") === "1995")
       .queryExecution.executedPlan.toString
@@ -74,10 +74,10 @@ class PipelineSpec extends AnyFunSuite {
     val wh = freshDir()
     def mart(m: String) = spark.read.parquet(s"$wh/gold/$m")
     val full = Pipeline.run(spark,
-      Pipeline.Config(sfDir, wh, "19940101", "19961231"))
+      sfDir, wh, Span("1994", "01", "1996", "12"))
     full.foreach { case (m, n) => assert(n === mart(m).count(), m) }
     val rerun = Pipeline.run(spark,
-      Pipeline.Config(sfDir, wh, "19950101", "19951231"))
+      sfDir, wh, Span("1995", "01", "1995", "12"))
     assert(rerun.keySet === full.keySet)
     rerun.foreach { case (m, n) =>
       val rows1995 = mart(m).where(col("ship_year") === 1995).count()
