@@ -797,15 +797,27 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"BENCH RESULT FILE WRITE FAIL $path: $e") }
     write(OutFile)
-    // A per-round copy the next run won't clobber, numbered one past the
-    // highest BENCH_r{N}.json published in cwd. Full runs only: a
-    // filtered dev run must not replace the round's artifact.
-    if (only.isEmpty) {
-      val seen = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .map(_.getName)
-        .collect { case s if s.matches("BENCH_r\\d+\\.json") =>
-          s.replaceAll("\\D", "").toInt }
-      write(f"bench_result_r${seen.maxOption.getOrElse(0) + 1}%02d.json")
-    }
+    // Full runs only: a filtered dev run must not add a round's artifact.
+    if (only.isEmpty)
+      try writeRoundCopy(new java.io.File("."), artifact + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"BENCH RESULT FILE WRITE FAIL round copy: $e") }
+  }
+
+  private val RoundFile = """(?:BENCH|bench_result)_r(\d+)(?:_.*)?\.json""".r
+
+  /** Writes `text` to a per-round copy in `dir` that no later run
+    * clobbers: `bench_result_r<N>.json`, N one past the highest round a
+    * `BENCH_r<N>*.json` or `bench_result_r<N>*.json` there names. The
+    * file is created new; an existing one is never overwritten. */
+  private[graft] def writeRoundCopy(dir: java.io.File,
+      text: String): java.io.File = {
+    val seen = Option(dir.listFiles()).toSeq.flatten.map(_.getName)
+      .collect { case RoundFile(n) => n.toInt }
+    val f = new java.io.File(dir,
+      f"bench_result_r${seen.maxOption.getOrElse(0) + 1}%02d.json")
+    Files.write(f.toPath, text.getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE_NEW)
+    f
   }
 }

@@ -33,7 +33,10 @@ object Medallion {
     /** The span over a table's year and month columns, as a plain
       * And/Or of comparisons — the shape the table format's manifest
       * stats prune with. The literals compare as strings against the
-      * fact's zero-padded columns and as ints against the int ones. */
+      * fact's zero-padded columns. Against silver's and gold's int
+      * columns ANSI analysis compares both sides as bigint
+      * (`cast(purchase_year as bigint) = cast('2014' as bigint)`);
+      * the format prunes through such lossless integral widenings. */
     def cond(year: Column, month: Column): Column =
       if (fromYear == toYear && fromMonth == toMonth)
         year === fromYear && month === fromMonth
@@ -179,7 +182,6 @@ object Medallion {
     def table(spark: SparkSession, star: Star, rel: String,
         window: Window): Table = {
       val root = s"$warehouseDir/${rel.replace('/', '_')}"
-      val gold = rel.startsWith("gold/")
       val t = window match {
         case Full => GraftTable.openOrCreate(spark, root,
           Seq(star.yearCol, star.monthCol))
@@ -191,10 +193,11 @@ object Medallion {
           case Full => t.overwrite(
             // silver arrives range-clustered from silverInput
             if (rel == star.silverTable && star.silverKeepsFactLayout) df
-            else clustered(star, df, if (gold) 8 else 32),
+            else clustered(star, df, if (rel.startsWith("gold/")) 8 else 32),
             numFiles = 0)
-          case s: Span =>
-            t.replaceWhere(cond(s), df, numFiles = if (gold) 4 else 8)
+          // the window's rows keep their frame's partitioning: a month
+          // needs no exchange of its own, nor a fixed file count
+          case s: Span => t.replaceWhere(cond(s), df, numFiles = 0)
         })
         def readBack(): DataFrame = window match {
           case Full => t.read()

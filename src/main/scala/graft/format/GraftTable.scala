@@ -628,9 +628,26 @@ final class GraftTable private (
     * shared by the COW mutation paths so their candidate audits read
     * only stats-intersecting files (a file this predicate drops
     * provably holds no cond-TRUE row). */
-  private def statsKeep(cond: Column, version: Long): Column = {
+  private def statsKeep(cond: Column, version: Long): Column =
+    zoneMaps(cond, version, Set.empty)._1
+
+  /** `cond` translated into two manifest predicates over `version`'s
+    * entries (`mcols`: the manifest's columns):
+    *  - KEEP is FALSE only for a file that provably holds no cond-TRUE
+    *    row — the zone-map skip;
+    *  - PROVED is TRUE only for a file whose every row makes `cond`
+    *    TRUE — its dual, so a COW mutation drops the file unread.
+    *    It needs no NULLs in the column (`nulls_c = 0`: a NULL row
+    *    makes a comparison NULL, not TRUE), an exact envelope (not
+    *    `trunc_c`), and the whole [min, max] on the TRUE side; `And`
+    *    holds when both sides do, `Or` when either does. Anything
+    *    else, NULL included, is unproved and gets audited. */
+  private def zoneMaps(cond: Column, version: Long,
+      mcols: Set[String]): (Column, Column) = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
+      LongType, ShortType}
     // Resolve through the analyzer against the table's own schema:
     // Spark 4 Columns carry lazy ColumnNodes, and only analysis turns
     // them into the And/Or/comparison tree (with literals cast to the
@@ -638,32 +655,40 @@ final class GraftTable private (
     // predicates reference LOGICAL names; manifest stats/blooms live
     // under PHYSICAL names — translate at the match (identity unless
     // the table evolved)
-    def attr(e: Expression): Option[String] = e match {
-      case a: AttributeReference
-          if statsCols.contains(physCol(a.name, version)) =>
-        Some(physCol(a.name, version))
-      case _ => None // incl. Cast(attr): a cast can break monotonicity
-    }
-    // equality probes can also prune through a BLOOM INDEX (columns
-    // the table is not clustered on); envelope and bloom tests AND
-    def attrEq(e: Expression): Option[String] = e match {
-      case a: AttributeReference
-          if statsCols.contains(physCol(a.name, version)) ||
-            bloomCols.contains(physCol(a.name, version)) =>
-        Some(physCol(a.name, version))
+    val integral = Seq[DataType](ByteType, ShortType, IntegerType, LongType)
+    // (physical column, bare) for a column or a LOSSLESS INTEGRAL
+    // WIDENING of one (byte < short < int < long): widening keeps
+    // order, so the narrow envelope still bounds the widened values.
+    // ANSI analysis compares an int column with a bigint or string
+    // literal as `cast(c as bigint) = cast('9' as bigint)`. Any other
+    // cast can break monotonicity and keeps the file.
+    def stat(e: Expression): Option[(String, Boolean)] = e match {
+      case a: AttributeReference => Some((physCol(a.name, version), true))
+      case c: Cast => c.child match {
+        case a: AttributeReference
+            if integral.contains(a.dataType) &&
+              integral.indexOf(c.dataType) >= integral.indexOf(a.dataType) =>
+          Some((physCol(a.name, version), false))
+        case _ => None
+      }
       case _ => None
     }
+    // equality probes can also prune through a BLOOM INDEX (columns
+    // the table is not clustered on), but only on the bare column: the
+    // bloom hashes TYPED values (xxhash64(int) ≠ xxhash64(long))
+    def eqCol(c: String, bare: Boolean): Boolean =
+      statsCols.contains(c) || (bare && bloomCols.contains(c))
     // NULL-SAFE envelopes throughout: a null min/max (dir predating
     // the stats column, null-filled at the manifest union) keeps the
-    // file — same contract as a null bloom
-    def eqTest(c: String, lv: Column): Column = {
+    // file — same contract as a null bloom; envelope and bloom AND
+    def eqTest(c: String, bare: Boolean, lv: Column): Column = {
       val env =
         if (statsCols.contains(c))
           col(s"min_$c").isNull ||
             (col(s"min_$c") <= lv && col(s"max_$c") >= lv)
         else lit(true)
       val blm =
-        if (bloomCols.contains(c))
+        if (bare && bloomCols.contains(c))
           graft.functions.BloomFilterIndex
             .mightContain(col(s"bloom_$c"), lv)
         else lit(true)
@@ -675,51 +700,70 @@ final class GraftTable private (
         Some(ColumnBridge.column(Literal.create(c.eval(null), c.dataType)))
       case _ => None
     }
+    // a comparison as (column, bare, op, literal), column on the left:
+    // a literal on the left flips the operator
+    val flip = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<",
+      ">=" -> "<=")
+    def atom(e: Expression): Option[(String, Boolean, String, Column)] = {
+      val parts = e match {
+        case EqualTo(l, r) => Some(("=", l, r))
+        case LessThan(l, r) => Some(("<", l, r))
+        case LessThanOrEqual(l, r) => Some(("<=", l, r))
+        case GreaterThan(l, r) => Some((">", l, r))
+        case GreaterThanOrEqual(l, r) => Some((">=", l, r))
+        case _ => None
+      }
+      parts.flatMap { case (op, l, r) =>
+        (stat(l), value(r)) match {
+          case (Some((c, bare)), Some(lv)) => Some((c, bare, op, lv))
+          case _ => (stat(r), value(l)) match {
+            case (Some((c, bare)), Some(lv)) => Some((c, bare, flip(op), lv))
+            case _ => None
+          }
+        }
+      }
+    }
     def keep(e: Expression): Column = e match {
       case And(l, r) => keep(l) && keep(r)
       case Or(l, r) => keep(l) || keep(r)
-      case EqualTo(a, v) => (attrEq(a), value(v)) match {
-        case (Some(c), Some(lv)) => eqTest(c, lv)
-        case _ => (attrEq(v), value(a)) match { // literal on the left
-          case (Some(c), Some(lv)) => eqTest(c, lv)
-          case _ => lit(true)
-        }
-      }
-      case GreaterThan(a, v) => (attr(a), value(v), attr(v), value(a)) match {
-        case (Some(c), Some(lv), _, _) =>
-          col(s"max_$c").isNull || col(s"max_$c") > lv   // c > v
-        case (_, _, Some(c), Some(lv)) =>
-          col(s"min_$c").isNull || col(s"min_$c") < lv   // v > c
+      case In(a, vs) if vs.forall(value(_).isDefined) => stat(a) match {
+        case Some((c, bare)) if eqCol(c, bare) =>
+          vs.map(v => eqTest(c, bare, value(v).get)).reduce(_ || _)
         case _ => lit(true)
       }
-      case GreaterThanOrEqual(a, v) =>
-        (attr(a), value(v), attr(v), value(a)) match {
-          case (Some(c), Some(lv), _, _) =>
-            col(s"max_$c").isNull || col(s"max_$c") >= lv
-          case (_, _, Some(c), Some(lv)) =>
-            col(s"min_$c").isNull || col(s"min_$c") <= lv
-          case _ => lit(true)
-        }
-      case LessThan(a, v) => (attr(a), value(v), attr(v), value(a)) match {
-        case (Some(c), Some(lv), _, _) =>
-          col(s"min_$c").isNull || col(s"min_$c") < lv
-        case (_, _, Some(c), Some(lv)) =>
-          col(s"max_$c").isNull || col(s"max_$c") > lv
-        case _ => lit(true)
+      case _ => atom(e) match {
+        case Some((c, bare, "=", lv)) if eqCol(c, bare) => eqTest(c, bare, lv)
+        case Some((c, _, op, lv)) if op != "=" && statsCols.contains(c) =>
+          val (mn, mx) = (col(s"min_$c"), col(s"max_$c"))
+          op match {
+            case "<" => mn.isNull || mn < lv
+            case "<=" => mn.isNull || mn <= lv
+            case ">" => mx.isNull || mx > lv
+            case _ => mx.isNull || mx >= lv
+          }
+        case _ => lit(true) // NOT, functions, other columns: keep
       }
-      case LessThanOrEqual(a, v) =>
-        (attr(a), value(v), attr(v), value(a)) match {
-          case (Some(c), Some(lv), _, _) =>
-            col(s"min_$c").isNull || col(s"min_$c") <= lv
-          case (_, _, Some(c), Some(lv)) =>
-            col(s"max_$c").isNull || col(s"max_$c") >= lv
-          case _ => lit(true)
-        }
-      case In(a, vs)
-          if attrEq(a).isDefined && vs.forall(value(_).isDefined) =>
-        val c = attrEq(a).get
-        vs.map(v => eqTest(c, value(v).get)).reduce(_ || _)
-      case _ => lit(true) // NOT, functions, other columns: keep
+    }
+    def exact(c: String): Column =
+      (if (mcols.contains(s"nulls_$c")) col(s"nulls_$c") === 0L
+       else lit(false)) &&
+        (if (mcols.contains(s"trunc_$c")) !(col(s"trunc_$c") <=> lit(true))
+         else lit(true))
+    def proved(e: Expression): Column = e match {
+      case And(l, r) => proved(l) && proved(r)
+      case Or(l, r) => proved(l) || proved(r)
+      case _ => atom(e) match {
+        case Some((c, _, op, lv)) if mcols.contains(s"min_$c") =>
+          val (mn, mx) = (col(s"min_$c"), col(s"max_$c"))
+          exact(c) && (op match {
+            case "=" => mn === lv && mx === lv
+            case "<" => mx < lv
+            case "<=" => mx <= lv
+            case ">" => mn > lv
+            case _ => mn >= lv
+          })
+        case _ => lit(false)
+      }
     }
     val resolved = ColumnBridge
       .analyzed(read(version).where(cond))
@@ -729,7 +773,7 @@ final class GraftTable private (
       }
       .getOrElse(throw new IllegalArgumentException(
         s"predicate did not analyze to a Filter: $cond"))
-    keep(resolved)
+    (keep(resolved), coalesce(proved(resolved), lit(false)))
   }
 
   /** The table with schemas MERGED across commits (schema evolution:
@@ -1259,23 +1303,20 @@ final class GraftTable private (
     * [[replaceWhere]]: files whose stats envelope can't intersect
     * `cond` carry forward by reference WITHOUT BEING READ (the audit
     * is stats-pruned through [[statsKeep]] — at 100 TB a windowed
-    * delete reads only the window's files, not the table); candidate
-    * files get one hit-count audit; all-hit files drop, mixed files
-    * rewrite. DELETE semantics are Delta/Iceberg's: only rows where
-    * `cond` IS TRUE go — a NULL-evaluating row is not a hit and is
-    * kept by audit and rewrite alike (`coalesce(cond, false)` on both
-    * sides, so the outcome never depends on file layout). */
+    * delete reads only the window's files, not the table); files whose
+    * envelope proves every row a hit drop WITHOUT BEING READ either
+    * ([[cowCandidates]]); the other candidate files get one hit-count
+    * audit; all-hit files drop, mixed files rewrite. DELETE semantics
+    * are Delta/Iceberg's: only rows where `cond` IS TRUE go — a
+    * NULL-evaluating row is not a hit and is kept by audit and rewrite
+    * alike (`coalesce(cond, false)` on both sides, so the outcome never
+    * depends on file layout). */
   private def cowSurvivors(parent: Long, cond: Column,
       numFiles: Int): AddRemove = {
-    import spark.implicits._
-    val all = manifest(parent)
-    val allPaths = all.select("path").as[String].collect()
-    lastAuditTotal = allPaths.length.toLong
-    if (allPaths.isEmpty) { lastAuditScanned = 0L; return AddRemove() }
-    val candidates = all.where(statsKeep(cond, parent))
-      .select("path").as[String].collect()
+    val (total, proved, candidates) = cowCandidates(parent, cond)
+    lastAuditTotal = total
     lastAuditScanned = candidates.length.toLong
-    if (candidates.isEmpty) return AddRemove()
+    if (candidates.isEmpty) return AddRemove(removedPaths = proved)
     val hit = coalesce(cond, lit(false))
     // audit over the LIVE view: rows already in the parent's deletion
     // vector count neither as total nor as hits, so a file whose
@@ -1296,7 +1337,7 @@ final class GraftTable private (
     // other dir carries by reference, so a windowed delete's metadata
     // cost follows the window, not the table
     if (mixed.isEmpty)
-      AddRemove(removedPaths = touched.map(_._1).toSeq)
+      AddRemove(removedPaths = proved ++ touched.map(_._1))
     else {
       val rec = reconcile(minusDv(withRowId(readRaw(
         mixed.map(p => s"$root/$p").toSeq, parent)), parent), parent)
@@ -1304,8 +1345,24 @@ final class GraftTable private (
         .filterNot(_.startsWith("_gt_"))
       val survivors = rec.where(!hit).select(dataCols.map(col): _*)
       AddRemove(added = Some(writeData(survivors, numFiles)),
-        removedPaths = touched.map(_._1).toSeq)
+        removedPaths = proved ++ touched.map(_._1))
     }
+  }
+
+  /** (live files, files stats prove all-hit, files to audit) for a COW
+    * mutation of `parent` by `cond` — one pass over the manifest. A
+    * proved file holds only cond-TRUE rows ([[zoneMaps]]), so it drops
+    * with no read; a deletion vector only removes rows from it. */
+  private[graft] def cowCandidates(parent: Long,
+      cond: Column): (Long, Seq[String], Seq[String]) = {
+    val all = manifest(parent)
+    val (keepP, provedP) = zoneMaps(cond, parent, all.columns.toSet)
+    val files = all.select(col("path"), keepP, provedP).collect()
+    // a NULL keep (a NULL literal: never TRUE) drops, as `where` does
+    val kept = files.filter(r => !r.isNullAt(1) && r.getBoolean(1))
+    val (proved, audited) = kept.partition(_.getBoolean(2))
+    (files.length.toLong, proved.map(_.getString(0)).toSeq,
+      audited.map(_.getString(0)).toSeq)
   }
 
   /** Replace the ENTIRE table content with `df` in one atomic

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `Bench`'s leg table, dev filter and result lines, without a session:
   * the keys a reader parses, their order and their printed form. */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with TempDirs {
   private val legs = Bench.legs("/sf", 10, new Bench.Notes)
 
   private def running(only: String*): Seq[String] =
@@ -88,5 +88,26 @@ class BenchSpec extends AnyFunSuite {
     assert(json \ "value" === JDouble(0.123456789))
     assert(json \ "queries" \ "k" === JDouble(-1.0))
     assert(json \ "loadavg_start" === JString("0.50 0.40 0.30"))
+  }
+
+  test("a full run's round copy goes one past every committed round " +
+      "and never overwrites a file") {
+    val dir = new java.io.File(tempDir("graft_bench_spec_"))
+    def put(name: String): Unit = {
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
+        name.getBytes("UTF-8")); ()
+    }
+    assert(Bench.writeRoundCopy(dir, "a").getName == "bench_result_r01.json")
+    val existing = Seq("BENCH_r15.json", "BENCH_r15_c8.json",
+      "bench_result_r16.json", "bench_result_r16_close.json",
+      "bench_result.json", "CORRECTNESS_r40.json")
+    existing.foreach(put)
+    val f = Bench.writeRoundCopy(dir, "b")
+    assert(f.getName == "bench_result_r17.json")
+    assert(new String(java.nio.file.Files.readAllBytes(f.toPath),
+      "UTF-8") == "b")
+    existing.foreach(n => assert(new String(java.nio.file.Files
+      .readAllBytes(new java.io.File(dir, n).toPath), "UTF-8") == n, n))
+    assert(Bench.writeRoundCopy(dir, "c").getName == "bench_result_r18.json")
   }
 }

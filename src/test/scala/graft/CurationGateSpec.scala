@@ -11,13 +11,12 @@ import graft.operators.CurationGate
   * 0..v-1, stamped with their batch id), ledger state, index/mart
   * consistency, verdict-canonical invariants, and a FULL-FEED REPLAY
   * (fresh checkpoint, same state roots) that must be a no-op. */
-class CurationGateSpec extends AnyFunSuite {
+class CurationGateSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_curation_").toString
+  private def tmp(): String = tempDir("graft_curation_")
 
   private def runPipeline(): (String, String, String, String) = {
     val base = tmp()

@@ -3,16 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.etl.CurationPipeline
-import java.nio.file.Files
 
 /** The end-to-end curation funnel: monotone stage counts, gate
   * semantics, contamination removal, pack integrity, and both output
   * formats readable. */
-class CurationPipelineSpec extends AnyFunSuite {
+class CurationPipelineSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
 
-  private lazy val outDir =
-    Files.createTempDirectory("graft_curation_").toString
+  private lazy val outDir = tempDir("graft_curation_")
   private lazy val funnel =
     CurationPipeline.run(spark, sfDir, outDir)
 

@@ -365,6 +365,134 @@ class GraftTableSpec extends AnyFunSuite with TempDirs {
       orders.where(!col("o_orderkey").between(lo, lo + 50)).count())
   }
 
+  /** An int-keyed monthly table at `root` through session `s`: one
+    * file per month m = 1..12 of year 2014, ten rows (v = 1..10) each,
+    * stats on the int columns y and m. */
+  private def monthly(s: org.apache.spark.sql.SparkSession,
+      root: String): GraftTable = {
+    def month(m: Int) = s.createDataFrame(
+      (1 to 10).map(i => (2014, m, i.toLong))).toDF("y", "m", "v")
+    val t = GraftTable.create(s, root, month(1), Seq("y", "m"),
+      numFiles = 1)
+    (2 to 12).foreach(m => t.append(month(m), numFiles = 1))
+    t
+  }
+
+  /** A session that analyzes `int_col = 'lit'` ANSI-style, as
+    * `cast(int_col as bigint) = cast('lit' as bigint)`. */
+  private def ansi = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    s
+  }
+
+  test("zone maps prune int columns through the ANSI widening cast: " +
+      "a bigint or string literal opens and audits only its month") {
+    val s = ansi
+    val t = monthly(s, tmp())
+    for (w <- Seq(col("y") === 2014L && col("m") === 9L,
+        col("y") === "2014" && col("m") === "09")) {
+      val (rows, opened, total) = t.prunedWhere(w)
+      assert(total == 12 && opened == 1, s"$w opened $opened of $total")
+      assert(rows.select("m", "v").as[(Int, Long)].collect().toSet ==
+        (1 to 10).map(i => (9, i.toLong)).toSet)
+    }
+    val (range, opened, _) = t.prunedWhere(col("m") >= 11L)
+    assert(opened == 2 && range.count() == 20)
+    val month9 = t.manifest().where(col("min_m") === 9)
+      .select("path").as[String].collect().toSet
+    t.replaceWhere(col("m") === "09",
+      s.createDataFrame(Seq((2014, 9, 99L))).toDF("y", "m", "v"),
+      numFiles = 1)
+    assert(t.lastAuditTotal == 12 && t.lastAuditScanned == 0,
+      s"audited ${t.lastAuditScanned} of ${t.lastAuditTotal}")
+    val after = t.manifest().select("path").as[String].collect().toSet
+    assert(after.size == 12 && (after & month9).isEmpty,
+      "exactly the month's file is replaced")
+    assert(t.read().count() == 111)
+    assert(t.read().where(col("m") === 9).select("v").as[Long]
+      .collect().toSeq == Seq(99L))
+  }
+
+  test("casts that are not a lossless integral widening keep and " +
+      "audit every file, and the rows stay exact") {
+    val t = monthly(ansi, tmp())
+    for (w <- Seq(col("m").cast("double") === 9.0,
+        col("m").cast("string") === "9",
+        col("m").cast("byte") === 9)) {
+      val (rows, opened, total) = t.prunedWhere(w)
+      assert(opened == total, s"$w must keep every file")
+      assert(rows.count() == 10, s"$w")
+    }
+    t.deleteWhere(col("m").cast("double") === 9.0)
+    assert(t.lastAuditScanned == 12, "no proof through a double cast")
+    assert(t.read().count() == 110)
+  }
+
+  test("a bloom-indexed int column probed with a bigint literal stays " +
+      "exact: the bloom is never probed through a cast") {
+    val root = tmp()
+    // overlapping envelopes (odd vs even k): only the bloom can tell
+    // the two files apart
+    val t = GraftTable.create(spark, root,
+      (1 to 99 by 2).map(k => (k, s"o$k")).toDF("k", "s"), Seq("k"),
+      numFiles = 1, bloomCols = Seq("k"))
+    t.append((2 to 100 by 2).map(k => (k, s"e$k")).toDF("k", "s"),
+      numFiles = 1)
+    val (wide, openedWide, total) = t.prunedWhere(col("k") === 5L)
+    assert(wide.select("s").as[String].collect().toSeq == Seq("o5"))
+    assert(openedWide == total, "envelope only through the cast")
+    val (bare, openedBare, _) = t.prunedWhere(col("k") === 5)
+    assert(bare.count() == 1 && openedBare == 1, "the bare probe blooms")
+  }
+
+  test("a file whose envelope equals the window but holds NULLs is " +
+      "audited, and its NULL rows survive") {
+    val root = tmp()
+    val rows = (1 to 10).map(i =>
+      (i.toLong, if (i <= 3) None else Some(9)))
+    val t = GraftTable.create(spark, root, rows.toDF("k", "m"), Seq("m"),
+      numFiles = 1)
+    assert(t.manifest().select("min_m", "max_m", "nulls_m").head().toSeq
+      == Seq(9, 9, 3L))
+    t.replaceWhere(col("m") === 9L, Seq((100L, Some(9))).toDF("k", "m"),
+      numFiles = 1)
+    assert(t.lastAuditScanned == 1, "NULLs defeat the proof")
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 100L))
+  }
+
+  test("a truncated envelope is audited, not proved") {
+    val root = tmp()
+    val doc = (i: Int) => "b" * 100 + i
+    val t = GraftTable.create(spark, root,
+      (1 to 10).map(i => (i, doc(i))).toDF("k", "body"), Seq("body"),
+      numFiles = 1)
+    assert(t.manifest().select("trunc_body").head().getBoolean(0))
+    t.deleteWhere(col("body") > "a")
+    assert(t.lastAuditScanned == 1, "a truncated envelope is not exact")
+    assert(t.read().count() == 0)
+  }
+
+  test("a stats-proved file with a deletion vector drops unread and " +
+      "no deleted row comes back") {
+    val t = monthly(spark, tmp())
+    t.deleteWhereMor(col("m") === 9 && col("v") === 3L)
+    t.deleteWhereMor(col("m") === 10 && col("v") === 3L)
+    assert(t.hasDeletionVectors())
+    t.replaceWhere(col("m") === 9L,
+      Seq((2014, 9, 99L)).toDF("y", "m", "v"), numFiles = 1)
+    assert(t.lastAuditScanned == 0)
+    t.deleteWhere(col("m") === 10L)
+    assert(t.lastAuditScanned == 0)
+    assert(t.read().where(col("m") === 9).select("v").as[Long]
+      .collect().toSeq == Seq(99L))
+    assert(t.read().where(col("m") === 10).count() == 0)
+    assert(t.read().count() == 101)
+    assert(t.metadataAggregates().select("n_rows").head().getLong(0)
+      == 101L, "the dropped files' deletion-vector entries left too")
+  }
+
   test("the merge key-probe is envelope-pruned: a range-local update " +
       "set probes only the files its key bounds intersect") {
     val root = tmp()

@@ -10,12 +10,11 @@ import graft.format.GraftTable
   * delta dir, MOR deletes and restores touch zero manifest rows, COW
   * removals rewrite only the dirs that list a removed file, and a
   * fold policy bounds the list length so reads stay O(few dirs). */
-class ManifestListSpec extends AnyFunSuite {
+class ManifestListSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_mlist_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_mlist_spec_") + "/t"
 
   /** All manifest dirs currently on disk under <root>/_log. */
   private def manifestDirs(root: String): Set[String] =

@@ -12,13 +12,12 @@ import graft.operators.NeardupGate
   * never reads the verdict table), the fuzzy catches are REAL
   * (mutated re-posts, not exact dups), and a full-feed replay is a
   * no-op through the ledgers. */
-class NeardupGateSpec extends AnyFunSuite {
+class NeardupGateSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_neardup_").toString
+  private def tmp(): String = tempDir("graft_neardup_")
 
   private def runPipeline(): (String, String, String, String) = {
     val base = tmp()

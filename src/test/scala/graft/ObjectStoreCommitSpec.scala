@@ -24,12 +24,11 @@ import scala.concurrent.ExecutionContext.Implicits.global
   *      reads back as a win; one where the destination is missing
   *      RETHROWS — a commit is never silently dropped (the old broad
   *      `IOException => false` would orphan it). */
-class ObjectStoreCommitSpec extends AnyFunSuite {
+class ObjectStoreCommitSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_objstore_").toString
+  private def tmp(): String = tempDir("graft_objstore_")
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 

@@ -12,12 +12,11 @@ import graft.format.GraftTable
   * the supported scalar types incl. nulls, and (c) that bloom-indexed
   * and array-carrying tables still take the read-back fallback and
   * stay correct. */
-class OnePassWriteSpec extends AnyFunSuite {
+class OnePassWriteSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_onepass_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_onepass_spec_") + "/t"
 
   /** Spark jobs started while `body` runs (tracked via a job group —
     * actions inside `body` are blocking, so the tracker is exact). */

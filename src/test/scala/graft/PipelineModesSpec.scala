@@ -6,18 +6,16 @@ import org.apache.spark.sql.functions.col
 import graft.etl.Medallion.{Full, Span}
 import graft.etl.Pipeline
 import graft.format.GraftTable
-import java.nio.file.Files
 
 /** The TPC-H star runs one chain on both storage tiers: the lake
   * tier's silver and marts equal the directory tier's, and carry the
   * same partition types, so the directory tier's Hive layout (string
   * bronze months, int silver and gold months) is what the lake
   * tables' partition values name. */
-class PipelineModesSpec extends AnyFunSuite {
+class PipelineModesSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft_modes_").toString
+  private def freshDir(): String = tempDir("graft_modes_")
 
   private def dirNames(root: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =

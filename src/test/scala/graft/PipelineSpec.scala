@@ -4,13 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.etl.{Pipeline, Sinks}
 import graft.etl.Medallion.Span
-import java.nio.file.Files
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft_wh_").toString
+  private def freshDir(): String = tempDir("graft_wh_")
 
   test("full DAG produces all marts and preserves fact rows in silver") {
     val wh = freshDir()

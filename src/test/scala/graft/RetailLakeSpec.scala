@@ -199,6 +199,34 @@ class RetailLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(after(t) == lakeOpsAfterRun(t) :+ "replace", t))
   }
 
+  test("the lake re-run drops bronze's and silver's month file " +
+      "unread and audits only the mart files that meet the month") {
+    lakeWindow
+    import spark.implicits._
+    val (y, m) = (year.toInt, month.toInt)
+    lakeTables.foreach { name =>
+      val t = GraftTable.forPath(spark, s"$base/lake/$name")
+      val v = t.currentVersion
+      def paths(ver: Long) =
+        t.manifest(ver).select("path").as[String].collect().toSet
+      // the files of the re-run's parent whose envelopes meet the month
+      val meets = t.manifest(v - 1)
+        .where(col("min_purchase_year").cast("int") <= y &&
+          col("max_purchase_year").cast("int") >= y &&
+          col("min_purchase_month").cast("int") <= m &&
+          col("max_purchase_month").cast("int") >= m)
+        .select("path").as[String].collect().toSet
+      val (_, proved, audited) = t.cowCandidates(v - 1, window)
+      assert((proved ++ audited).toSet == meets, name)
+      if (name.startsWith("gold_")) assert(audited.nonEmpty, name)
+      else {
+        assert(audited.isEmpty && proved.size == 1, name)
+        assert(paths(v - 1) -- paths(v) == proved.toSet,
+          s"$name removes only its month's file")
+      }
+    }
+  }
+
   test("the lake re-run of a month reproduces the initial marts") {
     lakeWindow
     marts.foreach(m =>

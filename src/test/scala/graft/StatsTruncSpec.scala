@@ -14,12 +14,11 @@ import graft.format.{GraftTable, StatsTrunc}
   * protocol 2. Without this a 1 MB document value writes two 1 MB
   * manifest values per file — at 100 TB the manifest becomes the
   * table. */
-class StatsTruncSpec extends AnyFunSuite {
+class StatsTruncSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_trunc_").toString + "/t"
+  private def tmp(): String = tempDir("graft_trunc_") + "/t"
 
   test("truncated bounds hold in UTF-8 byte order for adversarial " +
       "strings; short values pass through untouched") {

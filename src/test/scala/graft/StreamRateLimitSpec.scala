@@ -13,17 +13,15 @@ import graft.sources.{GraftTableMicroBatchStream, GraftTableOffset}
   * arithmetic, zero jobs) — and `Trigger.AvailableNow` is
   * first-class: target pinned at prepare, drained in bounded batches,
   * then termination. Delta's rate-limit contract restated. */
-class StreamRateLimitSpec extends AnyFunSuite {
+class StreamRateLimitSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_rate_").toString + "/t"
+  private def tmp(): String = tempDir("graft_rate_") + "/t"
 
   private def drain(root: String, out: String,
       opts: Map[String, String]): Seq[Long] = {
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_rate_ckpt_").toString
+    val ckpt = tempDir("graft_rate_ckpt_")
     val batchSizes = scala.collection.mutable.ArrayBuffer.empty[Long]
     var reader = spark.readStream.format("gtable")
     opts.foreach { case (k, v) => reader = reader.option(k, v) }

@@ -14,18 +14,16 @@ import graft.format.GraftTable
   * readCdc, Delta CDF's contract). Pins: both event types, exact
   * event payloads, fold-to-live equivalence, and checkpoint resume
   * delivering only new commits. */
-class StreamingCdcSpec extends AnyFunSuite {
+class StreamingCdcSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_cdcstream_").toString + "/t"
+  private def tmp(): String = tempDir("graft_cdcstream_") + "/t"
 
   test("the CDC stream emits inserts and deletes exactly once, folds " +
       "to the live table, and a resumed stream sees only new commits") {
     val root = tmp()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cdcstream_ckpt_").toString
+    val ckpt = tempDir("graft_cdcstream_ckpt_")
     val t = GraftTable.create(spark, root,
       (1L to 100L).map(k => (k, k * 10L)).toDF("k", "v"),
       Seq("k"), numFiles = 2)                      // v1: 100 inserts
@@ -98,8 +96,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       "feed skips dataChange=false commits, and the fold still " +
       "matches the live table (VERDICT r11 #1)") {
     val root = tmp()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cdcstream_ckpt2_").toString
+    val ckpt = tempDir("graft_cdcstream_ckpt2_")
     val t = GraftTable.create(spark, root,
       (1L to 100L).map(k => (k, k * 10L)).toDF("k", "v"),
       Seq("k"), numFiles = 4)                      // v1
@@ -147,8 +144,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       eb.getMessage.contains("deleteWhereMor"))
     intercept[IllegalStateException] { t.readChanges(1, 2) }
     // streaming: same refusal surfaces through the query
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cdcstream_ckpt3_").toString
+    val ckpt = tempDir("graft_cdcstream_ckpt3_")
     val q = spark.readStream.format("gtable")
       .option("readChangeFeed", "true")
       .option("startingVersion", "1").load(root)
@@ -187,8 +183,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     // the restart verb the refusal message names: snapshot at the
     // rewrite version, deltas after it
     val out = s"$root-restart-ev"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cdcstream_ckpt4_").toString
+    val ckpt = tempDir("graft_cdcstream_ckpt4_")
     def drain(): Unit = {
       val q = spark.readStream.format("gtable")
         .option("readChangeFeed", "true")
