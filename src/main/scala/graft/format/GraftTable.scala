@@ -346,14 +346,21 @@ final class GraftTable private (
   def isEvolved(version: Long = currentVersion): Boolean =
     version > 0 && snapshot(version).evolved
 
-  /** Logical column name → physical (file/manifest) name at
-    * `version`; identity for non-evolved tables and unknown names. */
+  /** Logical → physical (file/manifest) name at `version` for every
+    * field whose two names differ; empty for non-evolved tables. */
+  private[graft] def logToPhys(version: Long): Map[String, String] =
+    if (!isEvolved(version)) Map.empty
+    else recordedSchema(version).map(_.fields.iterator
+        .map(f => f.name -> GraftTable.physName(f))
+        .filter(p => p._1 != p._2).toMap)
+      .getOrElse(Map.empty)
+
+  /** Logical column name (any case) → physical name at `version`;
+    * identity for non-evolved tables and unknown names. */
   private def physCol(name: String, version: Long): String =
-    if (!isEvolved(version)) name
-    else recordedSchema(version)
-      .flatMap(_.fields.find(_.name.equalsIgnoreCase(name))
-        .map(GraftTable.physName))
-      .getOrElse(name)
+    logToPhys(version).collectFirst {
+      case (l, p) if l.equalsIgnoreCase(name) => p
+    }.getOrElse(name)
 
   /** Physical→LOGICAL projection for evolved tables: each recorded
     * field reads from its physical column (null-filled when a file
@@ -545,34 +552,15 @@ final class GraftTable private (
     else reconcile(applyDv(readRaw(paths, version), version), version)
   }
 
-  /** Zone-map pruned read: only files whose [min,max] envelope of
-    * `statsCol` intersects [lo, hi] are opened; the residual filter
-    * still applies row-level (file skipping is a superset guarantee).
-    * Returns (rows, filesOpened, filesTotal) so callers — and specs —
-    * can see the skip rate. */
+  /** Zone-map pruned read of `lo <= statsCol <= hi` ([[prunedWhere]]):
+    * only files whose [min,max] envelope of `statsCol` intersects
+    * [lo, hi] are opened. Returns (rows, filesOpened, filesTotal). */
   def prunedRead(statsCol: String, lo: Column, hi: Column)
       : (DataFrame, Long, Long) = {
-    val v = currentVersion
-    val pc = physCol(statsCol, v) // manifest stats live under physical names
-    require(statsCols.contains(pc), s"no stats for $statsCol")
-    // NULL-SAFE: a null envelope (dir written before the stats column
-    // was declared, null-filled by the manifest union) means "unknown"
-    // — the file must be KEPT, never pruned (the residual row filter
-    // keeps the answer exact either way).
-    // ONE uncached job projecting (path, keep): caching the manifest
-    // and filtering it is subtly WRONG for NaN envelopes — Spark's
-    // in-memory columnar batch stats compare doubles with primitive
-    // '<' (NaN never enters a batch's bound), so batch pruning drops
-    // rows a NaN max should satisfy. Parquet pushdown is safe (footers
-    // omit stats for NaN-bearing double columns).
-    val keep = col(s"min_$pc").isNull ||
-      !(col(s"max_$pc") < lo || col(s"min_$pc") > hi)
-    val (live, total) = keptPaths(keep, v)
-    val df =
-      if (live.isEmpty) read().limit(0)
-      else reconcile(applyDv(readRaw(live, v), v), v)
-    (df.where(col(statsCol) >= lo && col(statsCol) <= hi),
-      live.length.toLong, total)
+    // manifest stats live under physical names
+    require(statsCols.contains(physCol(statsCol, currentVersion)),
+      s"no stats for $statsCol")
+    prunedWhere(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
   /** Evaluate a manifest KEEP flag into (live paths, total entries).
@@ -581,8 +569,12 @@ final class GraftTable private (
     * whole-result collect — the kept-path Seq is unavoidable (the
     * reader API takes paths) but the transient Row/batch buffers of a
     * full collect are 2-3x the steady footprint at 2e5+ entries
-    * (VERDICT r13 #6). One uncached job either way — see prunedRead's
-    * NaN-envelope caveat for why the manifest is never cached here. */
+    * (VERDICT r13 #6). One uncached job either way: caching the
+    * manifest and filtering it is subtly WRONG for NaN envelopes —
+    * Spark's in-memory columnar batch stats compare doubles with
+    * primitive '<' (NaN never enters a batch's bound), so batch pruning
+    * drops rows a NaN max should satisfy. Parquet pushdown is safe
+    * (footers omit stats for NaN-bearing double columns). */
   private def keptPaths(keepCol: Column, version: Long)
       : (Seq[String], Long) = {
     val sel = manifest(version)
@@ -600,181 +592,50 @@ final class GraftTable private (
     (b.result(), total)
   }
 
-  /** GENERAL predicate-driven zone maps: translate an arbitrary data
-    * predicate into a manifest-stats predicate — each comparison on a
-    * stats column becomes an interval test against that file's
-    * [min,max] envelope, And/Or recurse, and anything the translation
-    * doesn't understand (other columns, functions, NOT) becomes
-    * `true` (keep the file) — so skipping is always CONSERVATIVE and
-    * the row-level filter re-applied on the survivors makes the
-    * result exact regardless. This is the Delta/Iceberg data-skipping
-    * contract: pruning is an optimization, never a semantics change.
-    * Returns (rows, filesOpened, filesTotal). */
+  /** GENERAL predicate-driven zone maps: only files whose manifest
+    * entry [[ZoneMaps]] keeps for `cond` are opened, and `cond` still
+    * applies row-level on them, so the result is exact (pruning is an
+    * optimization, never a semantics change). A NULL keep (a NULL
+    * literal) opens the file. Returns (rows, filesOpened, filesTotal). */
   def prunedWhere(cond: Column): (DataFrame, Long, Long) = {
     val v = currentVersion
-    // one uncached job (see prunedRead: cached batch stats mishandle
-    // NaN envelopes — the cache's batch pruning would skip a file
-    // whose max is NaN for upper-range predicates)
-    val (live, total) =
-      keptPaths(coalesce(statsKeep(cond, v), lit(true)), v)
+    val keep = manifestTests(resolve(cond, v), v)._1
+    val (live, total) = keptPaths(coalesce(keep, lit(true)), v)
     val df =
-      if (live.isEmpty) read().limit(0)
+      if (live.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        readSchema(v))
       else reconcile(applyDv(readRaw(live, v), v), v)
     (df.where(cond), live.length.toLong, total)
   }
 
-  /** The manifest-level KEEP predicate for `cond` against `version`'s
-    * schema — the envelope translation [[prunedWhere]] scans with,
-    * shared by the COW mutation paths so their candidate audits read
-    * only stats-intersecting files (a file this predicate drops
-    * provably holds no cond-TRUE row). */
-  private def statsKeep(cond: Column, version: Long): Column =
-    zoneMaps(cond, version, Set.empty)._1
+  /** The columns every read of `version` surfaces: its recorded schema,
+    * every field nullable ([[readRaw]]). Only records that predate
+    * schema recording ask the read itself. */
+  private[graft] def readSchema(version: Long)
+      : org.apache.spark.sql.types.StructType =
+    recordedSchema(version).map(s => org.apache.spark.sql.types.StructType(
+        s.fields.map(_.copy(nullable = true))))
+      .getOrElse(read(version).schema)
 
-  /** `cond` translated into two manifest predicates over `version`'s
-    * entries (`mcols`: the manifest's columns):
-    *  - KEEP is FALSE only for a file that provably holds no cond-TRUE
-    *    row — the zone-map skip;
-    *  - PROVED is TRUE only for a file whose every row makes `cond`
-    *    TRUE — its dual, so a COW mutation drops the file unread.
-    *    It needs no NULLs in the column (`nulls_c = 0`: a NULL row
-    *    makes a comparison NULL, not TRUE), an exact envelope (not
-    *    `trunc_c`), and the whole [min, max] on the TRUE side; `And`
-    *    holds when both sides do, `Or` when either does. Anything
-    *    else, NULL included, is unproved and gets audited. */
-  private def zoneMaps(cond: Column, version: Long,
-      mcols: Set[String]): (Column, Column) = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
-      LongType, ShortType}
-    // Resolve through the analyzer against the table's own schema:
-    // Spark 4 Columns carry lazy ColumnNodes, and only analysis turns
-    // them into the And/Or/comparison tree (with literals cast to the
-    // column type) this translation walks.
-    // predicates reference LOGICAL names; manifest stats/blooms live
-    // under PHYSICAL names — translate at the match (identity unless
-    // the table evolved)
-    val integral = Seq[DataType](ByteType, ShortType, IntegerType, LongType)
-    // (physical column, bare) for a column or a LOSSLESS INTEGRAL
-    // WIDENING of one (byte < short < int < long): widening keeps
-    // order, so the narrow envelope still bounds the widened values.
-    // ANSI analysis compares an int column with a bigint or string
-    // literal as `cast(c as bigint) = cast('9' as bigint)`. Any other
-    // cast can break monotonicity and keeps the file.
-    def stat(e: Expression): Option[(String, Boolean)] = e match {
-      case a: AttributeReference => Some((physCol(a.name, version), true))
-      case c: Cast => c.child match {
-        case a: AttributeReference
-            if integral.contains(a.dataType) &&
-              integral.indexOf(c.dataType) >= integral.indexOf(a.dataType) =>
-          Some((physCol(a.name, version), false))
-        case _ => None
-      }
-      case _ => None
-    }
-    // equality probes can also prune through a BLOOM INDEX (columns
-    // the table is not clustered on), but only on the bare column: the
-    // bloom hashes TYPED values (xxhash64(int) ≠ xxhash64(long))
-    def eqCol(c: String, bare: Boolean): Boolean =
-      statsCols.contains(c) || (bare && bloomCols.contains(c))
-    // NULL-SAFE envelopes throughout: a null min/max (dir predating
-    // the stats column, null-filled at the manifest union) keeps the
-    // file — same contract as a null bloom; envelope and bloom AND
-    def eqTest(c: String, bare: Boolean, lv: Column): Column = {
-      val env =
-        if (statsCols.contains(c))
-          col(s"min_$c").isNull ||
-            (col(s"min_$c") <= lv && col(s"max_$c") >= lv)
-        else lit(true)
-      val blm =
-        if (bare && bloomCols.contains(c))
-          graft.functions.BloomFilterIndex
-            .mightContain(col(s"bloom_$c"), lv)
-        else lit(true)
-      env && blm
-    }
-    def value(e: Expression): Option[Column] = e match {
-      case l: Literal => Some(ColumnBridge.column(l))
-      case c if c.foldable => // analyzer-inserted Cast over a literal
-        Some(ColumnBridge.column(Literal.create(c.eval(null), c.dataType)))
-      case _ => None
-    }
-    // a comparison as (column, bare, op, literal), column on the left:
-    // a literal on the left flips the operator
-    val flip = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<",
-      ">=" -> "<=")
-    def atom(e: Expression): Option[(String, Boolean, String, Column)] = {
-      val parts = e match {
-        case EqualTo(l, r) => Some(("=", l, r))
-        case LessThan(l, r) => Some(("<", l, r))
-        case LessThanOrEqual(l, r) => Some(("<=", l, r))
-        case GreaterThan(l, r) => Some((">", l, r))
-        case GreaterThanOrEqual(l, r) => Some((">=", l, r))
-        case _ => None
-      }
-      parts.flatMap { case (op, l, r) =>
-        (stat(l), value(r)) match {
-          case (Some((c, bare)), Some(lv)) => Some((c, bare, op, lv))
-          case _ => (stat(r), value(l)) match {
-            case (Some((c, bare)), Some(lv)) => Some((c, bare, flip(op), lv))
-            case _ => None
-          }
-        }
-      }
-    }
-    def keep(e: Expression): Column = e match {
-      case And(l, r) => keep(l) && keep(r)
-      case Or(l, r) => keep(l) || keep(r)
-      case In(a, vs) if vs.forall(value(_).isDefined) => stat(a) match {
-        case Some((c, bare)) if eqCol(c, bare) =>
-          vs.map(v => eqTest(c, bare, value(v).get)).reduce(_ || _)
-        case _ => lit(true)
-      }
-      case _ => atom(e) match {
-        case Some((c, bare, "=", lv)) if eqCol(c, bare) => eqTest(c, bare, lv)
-        case Some((c, _, op, lv)) if op != "=" && statsCols.contains(c) =>
-          val (mn, mx) = (col(s"min_$c"), col(s"max_$c"))
-          op match {
-            case "<" => mn.isNull || mn < lv
-            case "<=" => mn.isNull || mn <= lv
-            case ">" => mx.isNull || mx > lv
-            case _ => mx.isNull || mx >= lv
-          }
-        case _ => lit(true) // NOT, functions, other columns: keep
-      }
-    }
-    def exact(c: String): Column =
-      (if (mcols.contains(s"nulls_$c")) col(s"nulls_$c") === 0L
-       else lit(false)) &&
-        (if (mcols.contains(s"trunc_$c")) !(col(s"trunc_$c") <=> lit(true))
-         else lit(true))
-    def proved(e: Expression): Column = e match {
-      case And(l, r) => proved(l) && proved(r)
-      case Or(l, r) => proved(l) || proved(r)
-      case _ => atom(e) match {
-        case Some((c, _, op, lv)) if mcols.contains(s"min_$c") =>
-          val (mn, mx) = (col(s"min_$c"), col(s"max_$c"))
-          exact(c) && (op match {
-            case "=" => mn === lv && mx === lv
-            case "<" => mx < lv
-            case "<=" => mx <= lv
-            case ">" => mn > lv
-            case _ => mn >= lv
-          })
-        case _ => lit(false)
-      }
-    }
-    val resolved = ColumnBridge
-      .analyzed(read(version).where(cond))
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"predicate did not analyze to a Filter: $cond"))
-    (keep(resolved), coalesce(proved(resolved), lit(false)))
-  }
+  /** `cond` resolved against `version`'s [[readSchema]] by analysis
+    * alone ([[ColumnBridge.resolveFilter]]): no relation over the
+    * version's files is built, so no file is listed. Analysis casts
+    * literals to the column type ([[ZoneMaps]] walks that tree). */
+  private[graft] def resolve(cond: Column, version: Long)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.graft.ColumnBridge
+      .resolveFilter(spark, readSchema(version), cond)
+
+  /** [[ZoneMaps]] of a resolved predicate against `version`'s manifest
+    * (`mcols`: its columns, needed for PROVED only); `blooms = false`
+    * tests the envelopes alone. */
+  private[graft] def manifestTests(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      version: Long, mcols: Set[String] = Set.empty,
+      blooms: Boolean = true): (Column, Column) =
+    ZoneMaps(cond, logToPhys(version), statsCols.toSet,
+      if (blooms) bloomCols.toSet else Set.empty, mcols)
 
   /** The table with schemas MERGED across commits (schema evolution:
     * files written before a column existed surface it as null —
@@ -1302,7 +1163,7 @@ final class GraftTable private (
   /** The shared COW survivor manifest for [[deleteWhere]] /
     * [[replaceWhere]]: files whose stats envelope can't intersect
     * `cond` carry forward by reference WITHOUT BEING READ (the audit
-    * is stats-pruned through [[statsKeep]] — at 100 TB a windowed
+    * is stats-pruned through [[ZoneMaps]] — at 100 TB a windowed
     * delete reads only the window's files, not the table); files whose
     * envelope proves every row a hit drop WITHOUT BEING READ either
     * ([[cowCandidates]]); the other candidate files get one hit-count
@@ -1351,12 +1212,13 @@ final class GraftTable private (
 
   /** (live files, files stats prove all-hit, files to audit) for a COW
     * mutation of `parent` by `cond` — one pass over the manifest. A
-    * proved file holds only cond-TRUE rows ([[zoneMaps]]), so it drops
+    * proved file holds only cond-TRUE rows ([[ZoneMaps]]), so it drops
     * with no read; a deletion vector only removes rows from it. */
   private[graft] def cowCandidates(parent: Long,
       cond: Column): (Long, Seq[String], Seq[String]) = {
     val all = manifest(parent)
-    val (keepP, provedP) = zoneMaps(cond, parent, all.columns.toSet)
+    val (keepP, provedP) =
+      manifestTests(resolve(cond, parent), parent, all.columns.toSet)
     val files = all.select(col("path"), keepP, provedP).collect()
     // a NULL keep (a NULL literal: never TRUE) drops, as `where` does
     val kept = files.filter(r => !r.isNullAt(1) && r.getBoolean(1))
@@ -1410,7 +1272,8 @@ final class GraftTable private (
       lastAuditTotal = allPaths.length.toLong
       if (allPaths.isEmpty) { lastAuditScanned = 0L; emptyDv }
       else {
-        val candidates = all.where(statsKeep(cond, parent))
+        val candidates =
+          all.where(manifestTests(resolve(cond, parent), parent)._1)
           .select("path").as[String].collect()
         lastAuditScanned = candidates.length.toLong
         if (candidates.isEmpty) emptyDv
@@ -2200,7 +2063,7 @@ final class GraftTable private (
     val parent0 = currentVersion
     if (parent0 == 0) return 0L
     def cands(v: Long): Array[String] =
-      manifest(v).where(statsKeep(cond, v) &&
+      manifest(v).where(manifestTests(resolve(cond, v), v)._1 &&
         col("row_count") < maxRows)
         .select("path").collect().map(_.getString(0))
     // a single un-clustered candidate folds into itself: skip

@@ -309,7 +309,7 @@ class GraftDataWriter(root: String, commitDir: String,
     case (x: Byte, y: Byte) => x < y
     // Double/Float via j.l.*.compare, NOT primitive '<': primitive
     // comparisons with NaN are always false, so NaN would never enter
-    // the envelope and statsKeep would prune files that contain it.
+    // the envelope and the zone maps would prune files that contain it.
     // java.lang ordering ranks NaN greatest — same as Spark SQL's —
     // so a NaN-bearing file records max=NaN and survives 'd = NaN'
     // and upper-range predicates. (-0.0 < 0.0 under this order is a

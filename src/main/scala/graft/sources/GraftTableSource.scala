@@ -26,9 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The connector owns three engine-level behaviors:
   *  - **Manifest-pruned planning**: pushed filters are translated
-  *    against the manifest's per-file [min,max] stats (the same
+  *    against the manifest's per-file [min,max] stats by the same
   *    conservative envelope test as [[graft.format.GraftTable
-  *    .prunedWhere]], restated over `sources.Filter`), so
+  *    .prunedWhere]] ([[graft.format.ZoneMaps]]), so
   *    `planInputPartitions` lists ONLY stats-intersecting files — a
   *    key-range scan on a clustered 100 TB table plans the window's
   *    files, not the table's. Every filter is also returned for
@@ -198,17 +198,43 @@ object GraftTableSource {
     * exist only where the names differ, so `getOrElse` is identity
     * everywhere else. */
   private[sources] def logToPhys(root: String, version: Long)
-      : Map[String, String] = {
-    if (version <= 0) return Map.empty
+      : Map[String, String] =
+    if (version <= 0) Map.empty
     // metadata-only handle: the evolved flag and recorded schema live
     // in the (memoized) snapshot record — never pay forPath's
     // manifest schema probe on this per-scan path
-    val t = graft.format.GraftTable.readOnly(SparkSession.active, root)
-    if (!t.isEvolved(version)) Map.empty
-    else t.recordedSchema(version).map(_.fields.iterator
-        .map(f => f.name -> graft.format.GraftTable.physName(f))
-        .filter(p => p._1 != p._2).toMap)
-      .getOrElse(Map.empty)
+    else graft.format.GraftTable.readOnly(SparkSession.active, root)
+      .logToPhys(version)
+
+  /** A pushed V1 filter as a Column predicate — the connector's one
+    * conversion, shared by SQL DELETE / overwrite (`deleteWhere`,
+    * `replaceWhere` through the table API) and the scan's file
+    * planning. None for a filter it cannot express. */
+  private[sources] def filterCond(f: sources.Filter)
+      : Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.not
+    f match {
+      case sources.EqualTo(a, v) => Some(col(a) === lit(v))
+      case sources.EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
+      case sources.GreaterThan(a, v) => Some(col(a) > lit(v))
+      case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
+      case sources.LessThan(a, v) => Some(col(a) < lit(v))
+      case sources.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
+      case sources.In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
+      case sources.IsNull(a) => Some(col(a).isNull)
+      case sources.IsNotNull(a) => Some(col(a).isNotNull)
+      case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
+      case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
+      case sources.StringContains(a, v) => Some(col(a).contains(v))
+      case sources.And(l, r) =>
+        for (lc <- filterCond(l); rc <- filterCond(r)) yield lc && rc
+      case sources.Or(l, r) =>
+        for (lc <- filterCond(l); rc <- filterCond(r)) yield lc || rc
+      case sources.Not(x) => filterCond(x).map(not)
+      case _: sources.AlwaysTrue => Some(lit(true))
+      case _: sources.AlwaysFalse => Some(lit(false))
+      case _ => None
+    }
   }
 
   /** Files ADDED between two snapshots (fromV exclusive, toV
@@ -453,39 +479,11 @@ class GraftTableV2(root: String, version: Long, schema0: StructType,
     * make `canDeleteWhere` false; Spark then falls back to the
     * row-level-operation COW rewrite (same result, rewrite cost),
     * never a wrong answer. */
-  private def deleteCond(f: sources.Filter)
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col => c, lit, not}
-    f match {
-      case sources.EqualTo(a, v) => Some(c(a) === lit(v))
-      case sources.EqualNullSafe(a, v) => Some(c(a) <=> lit(v))
-      case sources.GreaterThan(a, v) => Some(c(a) > lit(v))
-      case sources.GreaterThanOrEqual(a, v) => Some(c(a) >= lit(v))
-      case sources.LessThan(a, v) => Some(c(a) < lit(v))
-      case sources.LessThanOrEqual(a, v) => Some(c(a) <= lit(v))
-      case sources.In(a, vs) => Some(c(a).isin(vs.toIndexedSeq: _*))
-      case sources.IsNull(a) => Some(c(a).isNull)
-      case sources.IsNotNull(a) => Some(c(a).isNotNull)
-      case sources.StringStartsWith(a, v) => Some(c(a).startsWith(v))
-      case sources.StringEndsWith(a, v) => Some(c(a).endsWith(v))
-      case sources.StringContains(a, v) => Some(c(a).contains(v))
-      case sources.And(l, r) =>
-        for (lc <- deleteCond(l); rc <- deleteCond(r)) yield lc && rc
-      case sources.Or(l, r) =>
-        for (lc <- deleteCond(l); rc <- deleteCond(r)) yield lc || rc
-      case sources.Not(x) => deleteCond(x).map(not)
-      case _: sources.AlwaysTrue => Some(lit(true))
-      case _: sources.AlwaysFalse => Some(lit(false))
-      case _ => None
-    }
-  }
-
   override def canDeleteWhere(filters: Array[sources.Filter]): Boolean =
-    version > 0 && filters.forall(deleteCond(_).isDefined)
+    version > 0 && filters.forall(GraftTableSource.filterCond(_).isDefined)
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val cond = filters.flatMap(deleteCond(_))
+    val cond = filters.flatMap(GraftTableSource.filterCond(_))
       .reduceOption(_ && _).getOrElse(lit(true))
     val t = graft.format.GraftTable.forPath(SparkSession.active, root)
     // `TBLPROPERTIES('delete.mode'='mor')` routes through deletion
@@ -574,14 +572,14 @@ class GraftTableV2(root: String, version: Long, schema0: StructType,
       private var overwriteCond: Option[org.apache.spark.sql.Column] = None
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def canOverwrite(filters: Array[sources.Filter]): Boolean =
-        filters.forall(deleteCond(_).isDefined)
+        filters.forall(GraftTableSource.filterCond(_).isDefined)
       override def overwrite(filters: Array[sources.Filter])
           : WriteBuilder = {
         if (filters.isEmpty ||
             filters.forall(_.isInstanceOf[sources.AlwaysTrue]))
           doTruncate = true
-        else overwriteCond =
-          Some(filters.flatMap(deleteCond(_)).reduce(_ && _))
+        else overwriteCond = Some(
+          filters.flatMap(GraftTableSource.filterCond(_)).reduce(_ && _))
         this
       }
       override def build(): Write = new V1Write {
@@ -1045,123 +1043,57 @@ class GraftTableScan(root: String, version: Long, required: StructType,
     runtimeFilters = fs
   }
 
+  private lazy val table =
+    graft.format.GraftTable.forPath(SparkSession.active, root)
+
   private lazy val statsCols: Seq[String] =
-    if (version == 0) Nil
-    else graft.format.GraftTable.forPath(SparkSession.active, root).statsCols
+    if (version == 0) Nil else table.statsCols
 
-  private lazy val bloomColsOf: Set[String] =
-    if (version == 0) Set.empty
-    else graft.format.GraftTable.forPath(SparkSession.active, root)
-      .bloomCols.toSet
-
-  /** Translate a pushed filter into a manifest-stats KEEP test —
-    * interval intersection on stats columns, bloom-index membership
-    * for equality probes on indexed columns, `true` (keep) for
-    * anything else. Same contract as GraftTable.prunedWhere: pruning
-    * never changes semantics, only skips provably-empty files. */
-  /** Pushed filters name LOGICAL columns; manifest stats/bloom
-    * columns live under PHYSICAL names (identical unless the table
+  /** Scans name LOGICAL columns; manifest stats/bloom columns and
+    * file columns live under PHYSICAL names (identical unless the table
     * was rename-evolved). */
   private lazy val l2pScan: Map[String, String] =
     GraftTableSource.logToPhys(root, version)
-  private def physNm(c: String): String = l2pScan.getOrElse(c, c)
 
-  private def keep(statsCols: Set[String], bloomCols: Set[String])
-      (f: sources.Filter): org.apache.spark.sql.Column = {
-    // equality probe: envelope test (stats col) AND bloom membership
-    // (indexed col) — at 100 TB a point lookup on a NON-cluster
-    // column prunes through the bloom where min/max can't
-    // (`c` is already translated to its physical name)
-    // NULL-SAFE: a null envelope (manifest dir written before the
-    // stats column was declared, null-filled by the union) keeps the
-    // file, same contract as a null bloom
-    def eqTest(c: String, v: Any): org.apache.spark.sql.Column = {
-      val env =
-        if (statsCols(c)) col(s"min_$c").isNull ||
-          (col(s"min_$c") <= lit(v) && col(s"max_$c") >= lit(v))
-        else lit(true)
-      val blm =
-        if (bloomCols(c))
-          graft.functions.BloomFilterIndex
-            .mightContain(col(s"bloom_$c"), lit(v))
-        else lit(true)
-      env && blm
-    }
-    f match {
-    // `_file` filters (runtime group filtering hands back the
-    // matched-group file set) prune against the manifest path itself
-    case sources.In("_file", vs) =>
-      col("path").isin(vs.toIndexedSeq: _*)
-    case sources.EqualTo("_file", v) => col("path") === lit(v)
-    case sources.EqualTo(c0, v)
-        if statsCols(physNm(c0)) || bloomCols(physNm(c0)) =>
-      eqTest(physNm(c0), v)
-    case sources.GreaterThan(c0, v) if statsCols(physNm(c0)) =>
-      col(s"max_${physNm(c0)}").isNull || col(s"max_${physNm(c0)}") > lit(v)
-    case sources.GreaterThanOrEqual(c0, v) if statsCols(physNm(c0)) =>
-      col(s"max_${physNm(c0)}").isNull || col(s"max_${physNm(c0)}") >= lit(v)
-    case sources.LessThan(c0, v) if statsCols(physNm(c0)) =>
-      col(s"min_${physNm(c0)}").isNull || col(s"min_${physNm(c0)}") < lit(v)
-    case sources.LessThanOrEqual(c0, v) if statsCols(physNm(c0)) =>
-      col(s"min_${physNm(c0)}").isNull || col(s"min_${physNm(c0)}") <= lit(v)
-    case sources.In(c0, vs)
-        if (statsCols(physNm(c0)) || bloomCols(physNm(c0))) && vs.nonEmpty =>
-      val c = physNm(c0)
-      // nulls never satisfy IN (three-valued =), so they carry no
-      // pruning information
-      val nn = vs.filter(_ != null)
-      if (nn.isEmpty) lit(false) // nothing can match → skip the file
-      else if (nn.length <= 64)
-        // per-value envelope+bloom test, BALANCED or-fold — a
-        // left-deep reduce overflows the Column-converter stack on
-        // the thousands-of-values IN a runtime (DPP) filter delivers
-        balancedOr(nn.toIndexedSeq.map(v => eqTest(c, v)))
-      else if (statsCols(c)) {
-        // large IN set: one conservative range test over the set's
-        // own envelope (Iceberg's trick) — O(1) plan size, still a
-        // superset guarantee
-        minMaxOf(nn) match {
-          case Some((lo, hi)) => col(s"min_$c").isNull ||
-            (col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi))
-          case None => lit(true)
-        }
-      } else lit(true) // huge IN on a bloom-only column: decline
-    case sources.And(l, r) =>
-      keep(statsCols, bloomCols)(l) && keep(statsCols, bloomCols)(r)
-    case sources.Or(l, r) =>
-      keep(statsCols, bloomCols)(l) || keep(statsCols, bloomCols)(r)
-    case _ => lit(true) // Not / IsNull / functions: conservative keep
-    }
+  /** Filters converted by the connector's one conversion
+    * ([[GraftTableSource.filterCond]]) and resolved against the
+    * version's recorded schema. A filter that does not convert, or
+    * names a column the schema lacks (`_file`, `_pos`, the change
+    * feed's `_change_type`), is left out, so it keeps every file. */
+  private def dataCond(fs: Array[sources.Filter])
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    def key(c: String) = c.toLowerCase(java.util.Locale.ROOT)
+    val known = table.readSchema(version).fieldNames.map(key).toSet
+    fs.filter(_.references.forall(c => known(key(c))))
+      .flatMap(GraftTableSource.filterCond)
+      .reduceOption(_ && _).map(table.resolve(_, version))
   }
 
-  private def balancedOr(cs: IndexedSeq[org.apache.spark.sql.Column])
-      : org.apache.spark.sql.Column =
-    if (cs.length == 1) cs.head
-    else {
-      val (l, r) = cs.splitAt(cs.length / 2)
-      balancedOr(l) || balancedOr(r)
-    }
+  // the pushed filters resolve once per scan; runtime filters arrive
+  // between planning passes and resolve on each
+  private lazy val pushedCond = dataCond(filters)
 
-  /** (min, max) of a filter's value set under natural ordering — None
-    * when the values aren't comparable (then pruning just declines). */
-  private def minMaxOf(vs: Array[Any]): Option[(Any, Any)] =
-    try {
-      var lo = vs.head; var hi = vs.head
-      vs.foreach { v =>
-        val c = v.asInstanceOf[Comparable[Any]]
-        if (c.compareTo(lo) < 0) lo = v
-        if (c.compareTo(hi) > 0) hi = v
-      }
-      Some((lo, hi))
-    } catch { case _: Exception => None }
+  /** Filters as one manifest KEEP predicate: `_file` filters (runtime
+    * group filtering hands back the matched groups' file set) test the
+    * manifest path itself, the rest ([[dataCond]] as `cond`) the
+    * [[graft.format.ZoneMaps]] translation — `blooms = false` tests the
+    * envelopes alone. */
+  private def keepOf(fs: Array[sources.Filter],
+      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
+      blooms: Boolean): org.apache.spark.sql.Column =
+    (fs.toSeq.collect {
+      case sources.In("_file", vs) => col("path").isin(vs.toIndexedSeq: _*)
+      case sources.EqualTo("_file", v) => col("path") === lit(v)
+    } ++ cond.map(table.manifestTests(_, version, blooms = blooms)._1))
+      .reduceOption(_ && _).getOrElse(lit(true))
 
-  /** Recomputed per planning pass (NOT cached): runtime filters can
+  /** (root-relative path, size_bytes or −1 when the entry predates
+    * size recording) per planned file — the −1s keep legacy files
+    * un-packable (each gets its own partition, the old behavior).
+    * Recomputed per planning pass (NOT cached): runtime filters can
     * arrive between an initial plan and an AQE re-plan, and each pass
     * must see the tightest file set. The manifest scan is
     * metadata-sized. */
-  /** (root-relative path, size_bytes or −1 when the entry predates
-    * size recording) per planned file — the −1s keep legacy files
-    * un-packable (each gets its own partition, the old behavior). */
   private def plannedFiles: Array[(String, Long)] = {
     if (version == 0) {
       // CREATE TABLE before first INSERT: zero files, zero rows —
@@ -1172,16 +1104,15 @@ class GraftTableScan(root: String, version: Long, required: StructType,
       GraftTableSource.lastLiveFiles = 0L
       return Array.empty
     }
-    val t = graft.format.GraftTable.forPath(SparkSession.active, root)
     // live count off the SNAPSHOT RECORD (per-dir entry counts ride
     // it) — zero jobs; previously a count() job per planning pass
-    val live = t.fileCount(version)
+    val live = table.fileCount(version)
     // NOT cached: the filter job reads each referenced column once —
     // caching would materialize the manifest's bloom arrays (MBs per
     // thousand files) into the block manager on every planning pass
-    val m = t.manifest(version)
-    val pred = (filters ++ runtimeFilters).map(keep(t.statsCols.toSet, t.bloomCols.toSet))
-      .reduceOption(_ && _).getOrElse(lit(true))
+    val m = table.manifest(version)
+    val pred = keepOf(filters, pushedCond, blooms = true) &&
+      keepOf(runtimeFilters, dataCond(runtimeFilters), blooms = true)
     val sizeCol =
       if (m.columns.contains("size_bytes"))
         org.apache.spark.sql.functions
@@ -1236,22 +1167,20 @@ class GraftTableScan(root: String, version: Long, required: StructType,
       Map[String, Seq[Any]])] = {
     if (!spjEnabled) None
     else {
-      val t = graft.format.GraftTable.forPath(SparkSession.active, root)
       // stats cols are physical; the projection and the reported
       // partitioning use logical names
       val p2l = l2pScan.map(_.swap)
       def logNm(p: String): String = p2l.getOrElse(p, p)
-      val cands = t.statsCols.filter(p =>
+      val cands = statsCols.filter(p =>
         required.fieldNames.contains(logNm(p)))
       if (cands.isEmpty) None
       else {
         // envelope-only: the bloom test would re-read every file's
         // bloom array for a purity probe the envelopes answer alone
-        val pred = filters.map(keep(t.statsCols.toSet, Set.empty))
-          .reduceOption(_ && _).getOrElse(lit(true))
+        val pred = keepOf(filters, pushedCond, blooms = false)
         val cols = col("path") +: cands.flatMap(c =>
           Seq(col(s"min_$c"), col(s"max_$c")))
-        val mDf = t.manifest(version).where(pred).select(cols: _*)
+        val mDf = table.manifest(version).where(pred).select(cols: _*)
         val types = cands.indices
           .map(i => mDf.schema.fields(1 + 2 * i).dataType)
         val rows = mDf.collect()
@@ -1303,16 +1232,13 @@ class GraftTableScan(root: String, version: Long, required: StructType,
     * on row-vs-columnar, so the per-file fallback alternative would
     * have forced the whole scan to rows). */
   private lazy val scanHasDv: Boolean =
-    version > 0 && graft.format.GraftTable
-      .forPath(SparkSession.active, root).hasDeletionVectors(version)
+    version > 0 && table.hasDeletionVectors(version)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val files = plannedFiles
     val dvMap: Map[String, Array[Long]] =
       if (!scanHasDv) Map.empty
-      else graft.format.GraftTable
-        .forPath(SparkSession.active, root)
-        .deletionVectors(version).collect()
+      else table.deletionVectors(version).collect()
         .groupBy(_.getString(0))
         .map { case (p, rs) => p -> rs.map(_.getLong(1)).sorted }
     // partition keys for SPJ grouping: the file's (pure) stats values,
@@ -1385,13 +1311,11 @@ class GraftTableScan(root: String, version: Long, required: StructType,
     private val (rows, bytes): (Long, Option[Long]) =
       if (version == 0) (0L, Some(0L))
       else {
-        val t = graft.format.GraftTable.forPath(SparkSession.active, root)
         // envelope-only: stats are a conservative superset by contract,
         // and skipping the bloom test here means the CBO estimate never
         // pays a second full read of the manifest's bloom arrays
-        val pred = filters.map(keep(t.statsCols.toSet, Set.empty))
-          .reduceOption(_ && _).getOrElse(lit(true))
-        val keptM = t.manifest(version).where(pred)
+        val keptM = table.manifest(version)
+          .where(keepOf(filters, pushedCond, blooms = false))
         // size_bytes rides the same single agg job: post-prune
         // physical bytes, reported only when EVERY kept entry records
         // a size (a null would understate the scan and could flip a
@@ -1423,8 +1347,8 @@ class GraftTableScan(root: String, version: Long, required: StructType,
           else None
         // subtract the deletion-vector entries that fall in kept files
         val dels =
-          if (!t.hasDeletionVectors(version)) 0L
-          else t.deletionVectors(version)
+          if (!scanHasDv) 0L
+          else table.deletionVectors(version)
             .join(keptM.select("path"), Seq("path"), "left_semi")
             .count()
         (phys - dels, sz)

@@ -19,6 +19,23 @@ object ColumnBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** `cond` resolved against `schema` by analysis alone: the condition
+    * of an analyzed `Filter` over a zero-row `LocalRelation` of the
+    * schema, so no relation is built and no file is listed. */
+  def resolveFilter(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType, cond: Column)
+      : Expression = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = s.sessionState.executePlan(Filter(s.expression(cond),
+      LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .toAttributes(schema))))
+    qe.assertAnalyzed()
+    qe.analyzed.collectFirst { case f: Filter => f.condition }
+      .getOrElse(throw new IllegalArgumentException(
+        s"predicate did not analyze to a Filter: $cond"))
+  }
+
   /** Wrap a logical plan as a DataFrame (`Dataset.ofRows` is
     * `private[sql]`) — needed to hand custom logical nodes to the
     * planner. */

@@ -13,12 +13,11 @@ import graft.format.GraftTable
   * vars) and pin exact equivalence with the driver paths — same
   * planned files, same pruning, same vacuum survivors — so the scale
   * code is exercised by every CI run, not just at 10⁶ files. */
-class BatchedPlanningSpec extends AnyFunSuite {
+class BatchedPlanningSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_batchplan_").toString + "/t"
+  private def tmp(): String = tempDir("graft_batchplan_") + "/t"
 
   private def forceScale[T](f: => T): T = {
     val (pl, dv) =

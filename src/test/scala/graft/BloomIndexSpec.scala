@@ -12,12 +12,11 @@ import graft.sources.GraftTableSource
   * (2) real skipping on a clustered-by-other-key layout, (3) null
   * blooms (files from writers that can't compute them) degrade to
   * keep, never mis-prune, (4) the catalog property surface. */
-class BloomIndexSpec extends AnyFunSuite {
+class BloomIndexSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_bloom_").toString + "/t"
+  private def tmp(): String = tempDir("graft_bloom_") + "/t"
 
   test("point lookup on a bloom-indexed NON-cluster column prunes " +
       "files and stays exact (format prunedWhere path)") {
@@ -46,8 +45,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("the connector prunes SQL point lookups through the bloom " +
       "and IN-lists test per value") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_bloom_wh_").toString
+    val wh = tempDir("graft_bloom_wh_")
     spark.conf.set("spark.sql.catalog.blm",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.blm.warehouse", wh)
@@ -116,8 +114,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("the SQL row-level write paths MAINTAIN the index: files " +
       "written by MERGE (MOR delta) and UPDATE (COW rewrite) carry " +
       "real blooms, and probes of merged-in values prune") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_bloom_rlw_").toString
+    val wh = tempDir("graft_bloom_rlw_")
     spark.conf.set("spark.sql.catalog.brw",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.brw.warehouse", wh)

@@ -10,12 +10,11 @@ import graft.format.GraftTable
   * untouched band must carry by reference with zero IO, the rewrite
   * must drop DV'd rows, and the commit must be `data_change=0` so CDC
   * windows skip it. */
-class CompactWhereSpec extends AnyFunSuite {
+class CompactWhereSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_cw_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_cw_spec_") + "/t"
 
   test("compactWhere folds only the predicate's slice: the other " +
       "band's files carry by reference, DV'd rows drop, and the " +

@@ -10,14 +10,13 @@ import graft.sources.GraftTableSource
   * planning under pushed filters, time travel via option, column
   * pruning reaching the scan, and schema evolution through per-file
   * footers. (Result correctness vs DuckDB is hash-gated by q219.) */
-class GtableSourceSpec extends AnyFunSuite {
+class GtableSourceSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
 
   private val fmt = classOf[GraftTableSource].getName
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("gtable_src_spec_").toString + "/t"
+  private def tmp(): String = tempDir("gtable_src_spec_") + "/t"
 
   private def orders = Tables.load(spark, sfDir, "orders")
 
@@ -235,8 +234,7 @@ class GtableSourceSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, root,
       (1L to 100L).toDF("k"), Seq("k"), numFiles = 2)
     t.append((101L to 150L).toDF("k"), numFiles = 2)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gtable_stream_ckpt_").toString
+    val ckpt = tempDir("gtable_stream_ckpt_")
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): Unit = {
       val q = spark.readStream.format(fmt).load(root)

@@ -14,12 +14,11 @@ import graft.format.GraftTable
   * every write path (API append/merge, SQL INSERT), and time travel.
   * A 100 TB table cannot rewrite for a rename — these specs pin that
   * none of these ops touches a data file. */
-class SchemaEvolutionSpec extends AnyFunSuite {
+class SchemaEvolutionSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_evo_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_evo_spec_") + "/t"
 
   private def dataFiles(root: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -151,8 +150,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   test("connector: SQL ALTER TABLE RENAME/DROP/TYPE evolve a catalog " +
       "table; SELECT reads old files correctly (vectorized path) and " +
       "INSERT writes the physical column") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_evo_wh_").toString
+    val wh = tempDir("graft_evo_wh_")
     spark.conf.set("spark.sql.catalog.evo",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.evo.warehouse", wh)

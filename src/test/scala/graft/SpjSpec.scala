@@ -13,12 +13,11 @@ import graft.format.GraftTable
   * same-key file partitions and aligns both sides by value. Purity is
   * re-checked per scan, so drift degrades to a normal shuffle plan,
   * never a wrong answer. */
-class SpjSpec extends AnyFunSuite {
+class SpjSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_spj_").toString + "/t"
+  private def tmp(): String = tempDir("graft_spj_") + "/t"
 
   /** A table whose files are value-pure on `c` by construction: one
     * single-file append per distinct value. (In a real pipeline the
