@@ -2,7 +2,6 @@ package graft.format
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** A minimal Delta/Iceberg-style TABLE FORMAT over plain parquet —
   * the unified manifest+snapshot layer VERDICT r7 named as the one
@@ -44,9 +43,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale notes: every driver-side structure here is FILE-LIST-sized —
   * the same state Spark's own FileIndex holds for any parquet read —
   * and manifests are parquet, so a billion-file manifest is itself
-  * distributed-scannable. Stats collection is one aggregate over the
-  * just-written files (group by `input_file_name`), map-side
-  * combinable. History parsing reads version-count-sized text files.
+  * distributed-scannable. Stats ride the write: each file's writer
+  * tracks its row count, envelopes and blooms and reports them in its
+  * commit message. History parsing reads version-count-sized text
+  * files.
   *
   * The reference has no table format (raw S3 parquet + Glue catalog,
   * SURVEY §1.2); extension tier.
@@ -303,8 +303,8 @@ final class GraftTable private (
   }
 
   /** `file_path` URI → root-relative `data/c…/part-….parquet` as a
-    * codegen'd builtin — the same normalization [[writeData]] applies
-    * to manifest paths, so DV paths and manifest paths always join. */
+    * codegen'd builtin — the form of every manifest path, so DV paths
+    * and manifest paths always join. */
   private def relPathExpr(c: Column): Column =
     regexp_extract(c, "(data/c[^/]+/[^/]+)$", 1)
 
@@ -544,12 +544,15 @@ final class GraftTable private (
   // ---- reads ---------------------------------------------------------
 
   /** The table at `version` (defaults to current) — time travel is
-    * just resolving an older manifest. */
+    * just resolving an older manifest. A version with no live file
+    * reads as zero rows under its recorded schema. */
   def read(version: Long = currentVersion): DataFrame = {
     ReadCounter.bump(root)
     val paths = filePaths(version)
-    if (paths.isEmpty) spark.emptyDataFrame
-    else reconcile(applyDv(readRaw(paths, version), version), version)
+    if (paths.nonEmpty)
+      reconcile(applyDv(readRaw(paths, version), version), version)
+    else if (recordedSchema(version).isDefined) noRows(version)
+    else spark.emptyDataFrame
   }
 
   /** Zone-map pruned read of `lo <= statsCol <= hi` ([[prunedWhere]]):
@@ -602,12 +605,15 @@ final class GraftTable private (
     val keep = manifestTests(resolve(cond, v), v)._1
     val (live, total) = keptPaths(coalesce(keep, lit(true)), v)
     val df =
-      if (live.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        readSchema(v))
+      if (live.isEmpty) noRows(v)
       else reconcile(applyDv(readRaw(live, v), v), v)
     (df.where(cond), live.length.toLong, total)
   }
+
+  /** A zero-row frame under `version`'s [[readSchema]]. */
+  private def noRows(version: Long): DataFrame = spark.createDataFrame(
+    java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+    readSchema(version))
 
   /** The columns every read of `version` surfaces: its recorded schema,
     * every field nullable ([[readRaw]]). Only records that predate
@@ -1414,10 +1420,8 @@ final class GraftTable private (
   }
 
   /** Rows listed by manifest entries — driver arithmetic when they are
-    * a LocalRelation ([[writeData]]'s one-pass and small-commit
-    * results); one aggregate job otherwise (the two-pass write of a
-    * bloom-indexed or scheme'd table past [[GraftTable
-    * .SmallCommitFiles]]). */
+    * a LocalRelation (what [[writeData]] returns); one aggregate job
+    * otherwise (entries read off a manifest). */
   private def entryRows(entries: DataFrame): Long =
     entries.queryExecution.logical match {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -1511,11 +1515,10 @@ final class GraftTable private (
     // driver-local micro-append. Row algebra is identical to the
     // generic path below (same candidate pruning, same left-semi /
     // left-anti null semantics, same commit shape); big update frames,
-    // evolved schemas, DV'd parents, float/decimal keys (whose java
-    // equality differs from SQL join equality on -0.0/NaN),
-    // bloom-indexed and scheme'd roots all keep the generic path —
-    // re-checked per commit attempt, so a racing writer that evolves
-    // the table mid-retry demotes the rebase to the generic path.
+    // evolved schemas, DV'd parents and float/decimal keys (whose java
+    // equality differs from SQL join equality on -0.0/NaN) keep the
+    // generic path — re-checked per commit attempt, so a racing writer
+    // that evolves the table mid-retry demotes the rebase to it.
     // name matching mirrors the session's analysis mode (ADVICE r15):
     // with spark.sql.caseSensitive=true the generic path's
     // updates.select(col(k)) would FAIL on an update column whose case
@@ -1530,7 +1533,6 @@ final class GraftTable private (
       updates.queryExecution.optimizedPlan match {
         case lr: LocalRelation
             if lr.data.length <= GraftTable.MicroMergeRows &&
-              !root.contains("://") && bloomCols.isEmpty &&
               keyCols.forall(k =>
                 lr.output.count(a => nameEq(a.name, k)) == 1) =>
           Some((lr.output, lr.data))
@@ -2105,9 +2107,12 @@ final class GraftTable private (
   }
 
   /** Write `df` into a fresh immutable commit dir and return its
-    * manifest entries — ONE aggregate job collects per-file row counts
-    * and typed min/max for every stats column. `numFiles = 0` keeps
-    * the caller's partitioning — THE knob for zone-map locality:
+    * manifest entries. Every file is written by a
+    * [[graft.sources.GraftDataWriter]], which tracks the file's row
+    * count, min/max envelopes and blooms DURING the write and hands
+    * them back in its commit message, so the commit never re-reads
+    * what it just wrote. `numFiles = 0` keeps the caller's
+    * partitioning — THE knob for zone-map locality:
     * `repartitionByRange(n, key)` upstream gives files disjoint
     * [min,max] envelopes on the prune key, which is what makes
     * [[prunedRead]] skip (a hash repartition spreads every key range
@@ -2118,221 +2123,52 @@ final class GraftTable private (
     // logical→physical rename on evolved tables (identity otherwise):
     // files always carry physical names, reads always map back
     val phys = if (translate) toPhysical(df) else df
-    // staged is DEFERRED (lazy): the micro-append path never builds
-    // the repartitioned frame, so a one-row commit pays ONE Catalyst
-    // analysis (phys), not two
-    lazy val staged = if (numFiles > 0) phys.repartition(numFiles) else phys
-    // ONE-PASS WRITE: all-scalar schemas ride the connector's
-    // map-side-stats writer (graft.sources.GraftDataWriter) — per-file
-    // row counts and min/max envelopes are tracked DURING the write
-    // and come back in commit messages, so the commit never re-reads
-    // what it just wrote (the two-pass fallback below re-scans every
-    // written byte for one stats aggregate — 2× write-path IO at
-    // 100 TB). Bloom-indexed tables keep the fallback: bloom width is
-    // auto-sized from actual rows-per-file, which a streaming writer
-    // cannot know up front. Scheme'd roots (s3a:/hdfs:) also fall
-    // back — the Group writer resolves paths through a bare local
-    // Hadoop conf, like the rest of the connector write path.
-    val schema = phys.schema // == staged.schema (repartition preserves)
-    val onePass = bloomCols.isEmpty && !root.contains("://") &&
-      statsCols.forall(c => schema.fieldNames.contains(c) &&
-        graft.sources.GraftParquetIO.supportedScalar(schema(c).dataType))
-    if (onePass) {
-      // DRIVER-LOCAL MICRO-APPEND: rows that already live on the
-      // driver (a LocalRelation after optimization — literal batches,
-      // collected ledgers) skip Spark entirely: one GraftDataWriter
-      // writes one file and the commit costs ZERO jobs. The profiler
-      // pinned ~85 ms/commit of pure job overhead (plan + 2-stage
-      // shuffle of one row) on the previous path; a one-row append is
-      // driver IO and should cost like it.
-      phys.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical
-            .LocalRelation if numFiles == 1 && lr.data.length <= 16384 =>
-          val mSchema = org.apache.spark.sql.types.StructType(lr.output
-            .map(a => org.apache.spark.sql.types.StructField(
-              a.name, a.dataType, a.nullable)))
-          val w = new graft.sources.GraftDataWriter(
-            root, commitDir, mSchema, statsCols, 0, 0L)
-          val msg = CommitProfile.time("data_local") {
-            try { lr.data.foreach(w.write); w.commit() }
-            catch { case e: Throwable => w.abort(); throw e }
-          }
-          return graft.sources.GraftParquetIO.manifestEntries(
-            spark, root, Array(msg), mSchema, statsCols)
-        case _ => ()
-      }
-      val (rootL, cd, schemaJson, sc) =
-        (root, commitDir, schema.json, statsCols)
-      val msgs = CommitProfile.time("data_job")(
-        staged.queryExecution.toRdd.mapPartitions { iter =>
+    val schema = phys.schema
+    // stats and bloom columns the frame does not carry (schema
+    // evolution) record nothing: the manifest reads their envelopes as
+    // unknown and their blooms as "might contain anything"
+    val stats = statsCols.filter(schema.fieldNames.contains)
+    val blooms = bloomCols.filter(schema.fieldNames.contains)
+    val bits = if (blooms.isEmpty) 0 else bloomBits
+    val conf = graft.sources.GraftParquetIO.rootConf(root)
+    // DRIVER-LOCAL MICRO-APPEND: rows that already live on the
+    // driver (a LocalRelation after optimization — literal batches,
+    // collected ledgers) skip Spark entirely: one GraftDataWriter
+    // writes one file and the commit costs ZERO jobs. The profiler
+    // pinned ~85 ms/commit of pure job overhead (plan + 2-stage
+    // shuffle of one row) on the previous path; a one-row append is
+    // driver IO and should cost like it.
+    phys.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical
+          .LocalRelation if numFiles == 1 && lr.data.length <= 16384 =>
+        val mSchema = org.apache.spark.sql.types.StructType(lr.output
+          .map(a => org.apache.spark.sql.types.StructField(
+            a.name, a.dataType, a.nullable)))
+        val w = new graft.sources.GraftDataWriter(
+          root, commitDir, mSchema, stats, 0, 0L, blooms, bits, conf)
+        val msg = CommitProfile.time("data_local") {
+          try { lr.data.foreach(w.write); w.commit() }
+          catch { case e: Throwable => w.abort(); throw e }
+        }
+        return graft.sources.GraftParquetIO.manifestEntries(
+          spark, root, Array(msg), mSchema, stats, blooms)
+      case _ => ()
+    }
+    val staged = if (numFiles > 0) phys.repartition(numFiles) else phys
+    val factory = new graft.sources.GraftDataWriterFactory(root,
+      commitDir, schema.json, stats, blooms, bits, conf)
+    val msgs = CommitProfile.time("data_job")(
+      staged.queryExecution.toRdd.mapPartitions { iter =>
         if (iter.isEmpty) Iterator.empty
         else {
           val tc = org.apache.spark.TaskContext.get()
-          val w = new graft.sources.GraftDataWriter(rootL, cd,
-            org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-              .asInstanceOf[org.apache.spark.sql.types.StructType],
-            sc, tc.partitionId(), tc.taskAttemptId())
+          val w = factory.createWriter(tc.partitionId(), tc.taskAttemptId())
           try { iter.foreach(w.write); Iterator.single(w.commit()) }
           catch { case e: Throwable => w.abort(); throw e }
         }
       }.collect())
-      return graft.sources.GraftParquetIO.manifestEntries(
-        spark, root, msgs.toArray, schema, statsCols)
-    }
-    staged.write.parquet(s"$root/$commitDir")
-    // the files' schema is exactly what we just wrote — declaring it
-    // skips footer-driven schema inference (one fewer job per commit)
-    val nFiles = math.max(1, logStore.list(s"$root/$commitDir")
-      .count(_.name.endsWith(".parquet")))
-    val written = spark.read
-      .schema(org.apache.spark.sql.types.StructType(
-        staged.schema.fields.map(_.copy(nullable = true))))
-      .parquet(s"$root/$commitDir")
-    // bloom indexes ride the same single aggregate as min/max; a
-    // bloom column the incoming frame doesn't carry (schema
-    // evolution) records null = "might contain anything"
-    val present = written.columns.toSet
-    // SIZING GUARDRAIL (VERDICT r10 #8): a fixed-width bloom saturates
-    // once a file holds more distinct values than ~bits/10 (every bit
-    // set → keeps everything, silently useless). Derive the width from
-    // this write's actual rows-per-file at ~10 bits/value (≈1% fpp at
-    // K=5), never below the declared width — and it is SAFE for files
-    // to differ in width, because the probe reads each file's m off
-    // `size(bloom)` (mightContain). One metadata-only count job.
-    val effBloomBits: Int =
-      if (bloomCols.isEmpty) bloomBits
-      else {
-        // row count off the parquet FOOTERS for small commits (driver
-        // metadata reads, no Spark job); a big rewrite amortizes the
-        // count job so it keeps the scan-side counter
-        val nRows =
-          if (nFiles <= GraftTable.SmallCommitFiles)
-            footerRowCount(s"$root/$commitDir")
-          else written.count()
-        val perFile = math.max(1L, nRows / nFiles)
-        val target = java.lang.Long.highestOneBit(
-          math.max(1L, 10L * perFile - 1L)) * 2L
-        math.max(bloomBits.toLong,
-          math.min(target, 1L << 23)).toInt // cap: 1 MiB/file/col
-      }
-    val aggs = (count(lit(1)).as("row_count") +:
-      statsCols.flatMap(c => Seq(
-        min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
-        // stats-present marker: null envelope + nulls==row_count
-        // reads as "all-null file", never "predates stats"
-        (count(lit(1)) - count(col(c))).as(s"nulls_$c")))) ++
-      bloomCols.map(c =>
-        (if (present(c))
-          graft.functions.BloomFilterIndex.buildAgg(col(c), effBloomBits)
-        else first(lit(null).cast("array<bigint>"))).as(s"bloom_$c"))
-    val entries0 = written.groupBy(input_file_name().as("path"))
-      .agg(aggs.head, aggs.tail: _*)
-      // URI → root-relative path, as a codegen'd builtin (no UDF)
-      .withColumn("path",
-        regexp_extract(col("path"), "(data/c[^/]+/[^/]+)$", 1))
-    // file sizes off the SAME commit-dir listing nFiles already paid
-    // for (driver, delta-sized): recorded as manifest `size_bytes`,
-    // which scan planning bin-packs partitions by and the CBO sums
-    // for post-prune sizeInBytes
-    val sizeRows = logStore.list(s"$root/$commitDir")
-      .filter(e => !e.isDir && e.name.endsWith(".parquet") &&
-        e.sizeBytes >= 0L)
-      .map(e => org.apache.spark.sql.Row(
-        s"$commitDir/${e.name}", e.sizeBytes))
-    val entries =
-      if (sizeRows.isEmpty) entries0
-      else entries0.join(
-        broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(sizeRows: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("size_bytes",
-              org.apache.spark.sql.types.LongType))))),
-        Seq("path"), "left")
-    // Bounded string/binary envelopes for the two-pass path — the
-    // same [[StatsTrunc]] contract the one-pass writer applies at
-    // commit: min → code-point prefix, max → prefix with last code
-    // point incremented, `trunc_<c>` marks the envelope inexact.
-    // Entry-count-sized work (one UDF pass over manifest rows, never
-    // data rows).
-    val truncCols = statsCols.filter(c =>
-      staged.schema.fieldNames.contains(c) &&
-        (staged.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType ||
-         staged.schema(c).dataType ==
-          org.apache.spark.sql.types.BinaryType))
-    val entriesT = truncCols.foldLeft(entries) { (d, c) =>
-      staged.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          // byte-level through a binary cast: a String-typed UDF
-          // would decode the UTF8String through java.lang.String,
-          // silently replacing invalid UTF-8 with U+FFFD BEFORE
-          // StatsTrunc runs — the stored envelope could then exclude
-          // the true extreme and pruning would skip live files
-          // (ADVICE r13). string↔binary casts and the manifest
-          // parquet round-trip are all byte-exact.
-          val fMin = udf((b: Array[Byte]) => if (b == null) null else
-            StatsTrunc.minUtf8(UTF8String.fromBytes(b))._1.getBytes)
-          val fMax = udf((b: Array[Byte]) => if (b == null) null else
-            StatsTrunc.maxUtf8(UTF8String.fromBytes(b))._1.getBytes)
-          val fFlag = udf((mn: Array[Byte], mx: Array[Byte]) =>
-            (mn != null &&
-              StatsTrunc.minUtf8(UTF8String.fromBytes(mn))._2) ||
-            (mx != null &&
-              StatsTrunc.maxUtf8(UTF8String.fromBytes(mx))._2))
-          val binT = org.apache.spark.sql.types.BinaryType
-          val strT = org.apache.spark.sql.types.StringType
-          d.withColumn(s"trunc_$c",
-              fFlag(col(s"min_$c").cast(binT),
-                col(s"max_$c").cast(binT)))
-            .withColumn(s"min_$c",
-              fMin(col(s"min_$c").cast(binT)).cast(strT))
-            .withColumn(s"max_$c",
-              fMax(col(s"max_$c").cast(binT)).cast(strT))
-        case _ =>
-          val fMin = udf((b: Array[Byte]) =>
-            if (b == null) null else StatsTrunc.minBin(b)._1)
-          val fMax = udf((b: Array[Byte]) =>
-            if (b == null) null else StatsTrunc.maxBin(b)._1)
-          val fFlag = udf((mn: Array[Byte], mx: Array[Byte]) =>
-            (mn != null && StatsTrunc.minBin(mn)._2) ||
-              (mx != null && StatsTrunc.maxBin(mx)._2))
-          d.withColumn(s"trunc_$c",
-              fFlag(col(s"min_$c"), col(s"max_$c")))
-            .withColumn(s"min_$c", fMin(col(s"min_$c")))
-            .withColumn(s"max_$c", fMax(col(s"max_$c")))
-      }
-    }
-    // SMALL-COMMIT FAST PATH: a few-file delta's entry rows fit on the
-    // driver (bounded below by file count × bloom width), so collect
-    // them into a LocalRelation — the manifest write becomes one local
-    // single-task job, its counts become driver math instead of a
-    // read-back job, and a commit-race retry re-stages for free
-    // instead of re-running the stats aggregate.
-    val bloomBytes =
-      nFiles.toLong * bloomCols.size * (effBloomBits.toLong / 8L)
-    if (nFiles <= GraftTable.SmallCommitFiles &&
-        bloomBytes <= 64L * 1024 * 1024) {
-      // collect INTERNAL rows: an external collect() decodes string
-      // stats through java.lang.String, silently replacing invalid
-      // UTF-8 with U+FFFD — the re-encoded envelope could then
-      // exclude the true extreme and pruning would skip live files
-      // (ADVICE r13)
-      GraftTable.localFrame(spark, entriesT)
-    } else entriesT
-  }
-
-  /** Sum of the parquet footers' row counts under `dir` — driver-side
-    * metadata reads (one small footer per file), no Spark job. */
-  private def footerRowCount(dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    logStore.list(dir).filter(_.name.endsWith(".parquet")).map { e =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/${e.name}"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    graft.sources.GraftParquetIO.manifestEntries(
+      spark, root, msgs, schema, stats, blooms)
   }
 
   /** What a commit CHANGES, not the manifest it results in — the
@@ -2367,7 +2203,7 @@ final class GraftTable private (
     // profiler attributed to re-analysis of a frame we just built)
     entries.queryExecution.logical match {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if !root.contains("://") && lr.data.length <= 1024 && {
+          if lr.data.length <= 1024 && {
             val names = lr.output.map(_.name)
             val want = ("path" +: "row_count" +: "size_bytes" +:
               (statsCols.flatMap(c =>
@@ -2381,8 +2217,8 @@ final class GraftTable private (
         val mSchema = org.apache.spark.sql.types.StructType(lr.output
           .map(a => org.apache.spark.sql.types.StructField(
             a.name, a.dataType, a.nullable)))
-        val w = new graft.sources.GraftDataWriter(
-          logDir(root), dir, mSchema, Nil, 0, 0L)
+        val w = new graft.sources.GraftDataWriter(logDir(root), dir,
+          mSchema, Nil, 0, 0L, conf = graft.sources.GraftParquetIO.rootConf(root))
         try { lr.data.foreach(w.write); w.commit() }
         catch { case e: Throwable => w.abort(); throw e }
         // remember the rows: a future FOLD over this (immutable) dir
@@ -2426,28 +2262,24 @@ final class GraftTable private (
         !((c == "size_bytes" || c.startsWith("trunc_")) && !present(c)))
     val finalDf = withBlooms.select(cols.map(col): _*)
     finalDf.queryExecution.optimizedPlan match {
-      // writeData's small-commit fast path hands us a LocalRelation
-      // (projections over it collapse via ConvertToLocalRelation):
-      // write it as one local single-task file and take the exact
-      // counts off the driver rows — no read-back aggregate job
+      // writeData's entries are a LocalRelation (projections over it
+      // collapse via ConvertToLocalRelation): stream the delta-sized
+      // manifest rows through Spark's parquet WriteSupport ON THE
+      // DRIVER (bloom array columns included) — the manifest write
+      // costs zero Spark jobs — and take the exact counts off the
+      // driver rows, no read-back aggregate job
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         val mSchema = org.apache.spark.sql.types.StructType(lr.output
           .map(a => org.apache.spark.sql.types.StructField(
             a.name, a.dataType, a.nullable)))
-        if (!root.contains("://")) {
-          // stream the delta-sized manifest rows through Spark's
-          // parquet WriteSupport ON THE DRIVER (bloom array columns
-          // included) — the manifest write costs zero Spark jobs (an
-          // append's only job is then the data write itself)
-          val w = new graft.sources.GraftDataWriter(
-            logDir(root), dir, mSchema, Nil, 0, 0L)
-          try { lr.data.foreach(w.write); w.commit() }
-          catch { case e: Throwable => w.abort(); throw e }
-          // cache the rows like the micro-commit path above: fold
-          // output dirs must stay cache-resident or one fold evicts
-          // the whole table from manifest()'s zero-job fast path
-          GraftTable.cacheManifestRows(root, dir, mSchema, lr.data)
-        } else finalDf.coalesce(1).write.parquet(s"${logDir(root)}/$dir")
+        val w = new graft.sources.GraftDataWriter(logDir(root), dir,
+          mSchema, Nil, 0, 0L, conf = graft.sources.GraftParquetIO.rootConf(root))
+        try { lr.data.foreach(w.write); w.commit() }
+        catch { case e: Throwable => w.abort(); throw e }
+        // cache the rows like the micro-commit path above: fold
+        // output dirs must stay cache-resident or one fold evicts
+        // the whole table from manifest()'s zero-job fast path
+        GraftTable.cacheManifestRows(root, dir, mSchema, lr.data)
         val rcIdx = lr.output.indexWhere(_.name == "row_count")
         val sbIdx = lr.output.indexWhere(_.name == "size_bytes")
         val tIdx = lr.output.zipWithIndex.collect {
@@ -3046,14 +2878,6 @@ object GraftTable {
     * (a v1 reader would fold a truncated max as an exact extreme —
     * stamped only on snapshots that actually carry one). */
   val ReaderVersion = 2
-
-  /** Commits adding at most this many data files take the driver-local
-    * manifest path (entry rows collected into a LocalRelation): the
-    * stats aggregate is the commit's last distributed job, the
-    * manifest write is a single local task, and its counts are driver
-    * arithmetic. Bounded: 64 entries × ≤1 MiB bloom each stays far
-    * under driver headroom; bigger rewrites keep the scan-side path. */
-  val SmallCommitFiles = 64
 
   /** Micro-merge fast path bounds (mergeImpl): the update frame must
     * already be a driver-local LocalRelation of at most

@@ -104,15 +104,4 @@ object StatsTrunc {
       (p, true)
     }
   }
-
-  /** Java-String convenience for the two-pass (DataFrame) write path. */
-  def minStr(s: String): (String, Boolean) = {
-    val (v, t) = minUtf8(UTF8String.fromString(s))
-    (v.toString, t)
-  }
-
-  def maxStr(s: String): (String, Boolean) = {
-    val (v, t) = maxUtf8(UTF8String.fromString(s))
-    (v.toString, t)
-  }
 }

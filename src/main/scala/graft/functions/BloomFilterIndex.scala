@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Per-file BLOOM FILTER INDEX for the GraftTable manifest — point
@@ -25,8 +24,8 @@ import org.apache.spark.sql.functions._
   * wrong prune. False positives only cost a file read; false negatives
   * are impossible.
   *
-  * Sizing: `bits` should be ~10× the expected distinct values per
-  * file (fpp ≈ 1% at K=5). The manifest stores `bits/64` longs per
+  * Sizing: each file's width follows its own row count ([[bitsFor]]);
+  * the declared width is a floor. The manifest stores `bits/64` longs per
   * file per column; blooms ride the manifest parquet, which is itself
   * distributed-scannable, and planning collects only surviving paths.
   */
@@ -51,32 +50,22 @@ object BloomFilterIndex {
     }
   }
 
-  /** Write-side aggregate: fold one file's `xxhash64(col)` values into
-    * the bit array. An `Aggregator` rather than an expression tree:
-    * a 2048-word elementwise-OR has no tractable native form (the
-    * VERDICT-sanctioned UDAF case), and the aggregate is map-side
-    * combinable like any other. */
-  class Build(words: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](words)
-    override def reduce(b: Array[Long], h: Long): Array[Long] = {
-      setBits(b, h); b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) |= b(i); i += 1 }
-      a
-    }
-    override def finish(r: Array[Long]): Array[Long] = r
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
+  /** Widest bloom a file gets: 1 MiB per file per column. */
+  val MaxBits: Int = 1 << 23
 
-  /** Aggregate expression building the bloom of column `c` (to be
-    * used inside the per-file stats groupBy). */
-  def buildAgg(c: Column, bits: Int): Column =
-    udaf(new Build(bits / 64)).apply(xxhash64(c))
+  /** Width of the bloom of a file holding `rows` values: ~10 bits per
+    * value (fpp ≈ 1% at K=5), rounded up to a power of two, at most
+    * [[MaxBits]] and never below the `declared` width (nor one word).
+    * A fixed width saturates once a file holds more than ~bits/10
+    * distinct values (every bit set keeps the file for every probe).
+    * Files of one table may differ in width: the probe reads each
+    * file's m off `size(bloom)` ([[mightContain]]). */
+  def bitsFor(rows: Long, declared: Int): Int = {
+    val target =
+      java.lang.Long.highestOneBit(math.max(1L, 10L * rows - 1L)) * 2L
+    math.max(64L,
+      math.max(declared.toLong, math.min(target, MaxBits.toLong))).toInt
+  }
 
   /** Read-side manifest test: can the file behind `bloom` contain
     * `value`? ALL-NATIVE Column arithmetic (xxhash64 + pmod + getbit —

@@ -3,19 +3,19 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-/** The EXECUTOR-SIDE write path for the gtable connector: a real DSv2
-  * `BatchWrite` whose `DataWriter`s run on executors, write parquet
-  * directly (parquet-hadoop Group API, the write twin of
-  * [[GraftTableReaderFactory]]), and carry per-file ROW COUNTS and
-  * typed MIN/MAX envelopes back to the driver inside their commit
-  * messages — so the manifest entries for a distributed write cost
-  * ZERO extra passes over the data (the V1 path re-reads written
-  * files for one stats aggregate; here stats ride the write itself).
+/** The one data writer of the table format: every commit's files —
+  * `GraftTable`'s, the connector's row-level (`ReplaceDataExec`) and
+  * delta writes, and the streaming sink's — are written by
+  * [[GraftDataWriter]]s, which carry per-file ROW COUNTS, typed MIN/MAX
+  * envelopes and blooms back to the driver inside their commit
+  * messages, so a commit's manifest entries cost ZERO extra passes
+  * over the data.
   *
   * Used by the row-level operation path (SQL MERGE/UPDATE/DELETE →
   * `ReplaceDataExec`, which requires a genuine `BatchWrite` — Spark
@@ -39,11 +39,6 @@ case class GraftWriteCommit(relPath: String, rowCount: Long,
 
 object GraftParquetIO {
 
-  /** The (bloom columns present in this write's schema, recorded bloom
-    * width) of an existing table — what a distributed writer needs to
-    * keep maintaining the table's index. (Nil, 0) when the table has
-    * no commits or no index; the width probe is one small manifest
-    * job, paid once per write. */
   /** Logical→PHYSICAL field renaming for executor writers on an
     * evolved table: data files must always carry physical names so
     * every file in the table agrees, whatever evolution happened in
@@ -70,6 +65,11 @@ object GraftParquetIO {
     }
   }
 
+  /** The (bloom columns present in this write's schema, recorded bloom
+    * width) of an existing table — what a distributed writer needs to
+    * keep maintaining the table's index. (Nil, 0) when the table has
+    * no commits or no index; the width probe is one small manifest
+    * job, paid once per write. */
   def bloomConfig(root: String, writeSchema: StructType)
       : (Seq[String], Int) =
     if (graft.format.GraftTable.versionAt(root) == 0) (Nil, 0)
@@ -79,21 +79,41 @@ object GraftParquetIO {
       if (cols.isEmpty) (Nil, 0) else (cols, t.bloomBits)
     }
 
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+  /** The active session's Hadoop conf for a root with a scheme
+    * (`file://`, `s3a://`), shipped to writers so its credentials and
+    * file-system bindings resolve the root's files; None for a plain
+    * local path, which needs none. */
+  def rootConf(root: String): Option[SerializableConfiguration] =
+    if (!root.contains("://")) None
+    else Some(new SerializableConfiguration(
+      SparkSession.active.sessionState.newHadoopConf()))
 
-  /** Spark scalar schema → parquet message type, with the logical
-    * annotations Spark's own parquet writer would emit (so files this
-    * path writes are indistinguishable to any reader — including
-    * Spark's vectorized scan and the DuckDB oracle). */
-  /** A parquet-hadoop writer that consumes Spark [[InternalRow]]s
-    * through Spark's OWN public `ParquetWriteSupport` — the same
-    * record-consumer Spark's native FileFormatWriter drives, so the
-    * map-side-stats write path runs at engine-native throughput and
-    * supports the full Spark type system. Rebase modes are pinned to
-    * CORRECTED (proleptic Gregorian, Spark 3+ default) and timestamps
-    * to INT64 micros, matching what `df.write.parquet` produces under
-    * default session conf. */
+  private[sources] def fsPath(path: String,
+      conf: SerializableConfiguration) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    (p.getFileSystem(conf.value), p)
+  }
+
+  /** Creates `dir` and its parents. */
+  def mkdirs(dir: String, conf: Option[SerializableConfiguration]): Unit =
+    conf match {
+      case None =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        ()
+      case Some(c) => val (fs, p) = fsPath(dir, c); fs.mkdirs(p); ()
+    }
+
+  /** Deletes the file or dir at `path` (a dir with the files it holds). */
+  def delete(path: String, conf: Option[SerializableConfiguration]): Unit =
+    conf match {
+      case None =>
+        val f = new java.io.File(path)
+        Option(f.listFiles()).foreach(_.foreach(_.delete()))
+        f.delete()
+        ()
+      case Some(c) => val (fs, p) = fsPath(path, c); fs.delete(p, true); ()
+    }
+
   // `new Configuration()` parses the Hadoop default XML resources —
   // 10-20 ms, and the profiler showed it dominating micro-commit
   // manifest writes. The copy constructor clones a loaded template
@@ -105,10 +125,21 @@ object GraftParquetIO {
   def freshConf: org.apache.hadoop.conf.Configuration =
     new org.apache.hadoop.conf.Configuration(confTemplate)
 
-  def internalRowWriter(path: String, schema: StructType)
+  /** A parquet-hadoop writer that consumes Spark [[InternalRow]]s
+    * through Spark's OWN public `ParquetWriteSupport` — the same
+    * record-consumer Spark's native FileFormatWriter drives, so the
+    * map-side-stats write path runs at engine-native throughput and
+    * supports the full Spark type system. Rebase modes are pinned to
+    * CORRECTED (proleptic Gregorian, Spark 3+ default) and timestamps
+    * to INT64 micros, matching what `df.write.parquet` produces under
+    * default session conf. `sessionConf` ([[rootConf]]) resolves a
+    * path with a scheme; a plain local path goes through the template. */
+  def internalRowWriter(path: String, schema: StructType,
+      sessionConf: Option[SerializableConfiguration] = None)
       : org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-    val conf = new org.apache.hadoop.conf.Configuration(confTemplate)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      sessionConf.fold(confTemplate)(_.value))
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set("spark.sql.parquet.writeLegacyFormat", "false")
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -141,72 +172,26 @@ object GraftParquetIO {
       .build()
   }
 
-  /** Types the one-pass stats tracker compares — the gate for
-    * [[graft.format.GraftTable]]'s one-pass write path applies this to
-    * STATS columns (the writer itself, [[internalRowWriter]], handles
-    * every Spark type). */
-  def supportedScalar(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-        FloatType | BooleanType | StringType | BinaryType | DateType |
-        TimestampType | TimestampNTZType => true
-    case _ => false
-  }
-
-  def messageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case LongType => Types.optional(INT64).named(f.name)
-        case IntegerType => Types.optional(INT32).named(f.name)
-        case ShortType => Types.optional(INT32)
-          .as(LogicalTypeAnnotation.intType(16, true)).named(f.name)
-        case ByteType => Types.optional(INT32)
-          .as(LogicalTypeAnnotation.intType(8, true)).named(f.name)
-        case DoubleType => Types.optional(DOUBLE).named(f.name)
-        case FloatType => Types.optional(FLOAT).named(f.name)
-        case BooleanType => Types.optional(BOOLEAN).named(f.name)
-        case StringType => Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case BinaryType => Types.optional(BINARY).named(f.name)
-        case DateType => Types.optional(INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(f.name)
-        case TimestampType => Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name)
-        case TimestampNTZType => Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name)
-        case other => sys.error(
-          s"gtable v2 writer: unsupported type $other for ${f.name} " +
-            "(scalar relational tables only)")
-      }
-      b.addField(t)
-    }
-    b.named("spark_schema")
-  }
-
   /** Writers' commit messages → manifest-entry DataFrame (path,
-    * row_count, typed min/max per stats column). Zero-row files are
-    * deleted and never reach the manifest. Driver work is
-    * message-count-sized. */
+    * row_count, typed min/max per stats column, one bloom per bloom
+    * column). Zero-row files are deleted and never reach the manifest.
+    * Driver work is message-count-sized. */
   def manifestEntries(spark: SparkSession, root: String,
       messages: Array[WriterCommitMessage], writeSchema: StructType,
       statsCols: Seq[String], bloomCols: Seq[String] = Nil)
       : org.apache.spark.sql.DataFrame = {
     val all = messages.collect { case m: GraftWriteCommit => m }
     val (live, empty) = all.partition(_.rowCount > 0)
-    empty.foreach(m => new java.io.File(s"$root/${m.relPath}").delete())
+    if (empty.nonEmpty) {
+      val conf = rootConf(root)
+      empty.foreach(m => delete(s"$root/${m.relPath}", conf))
+    }
 
-    def external(v: Any, dt: DataType): Any = (v, dt) match {
-      case (null, _) => null
-      case (d: Int, DateType) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d.toLong))
-      case (t: Long, TimestampType) =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(t)
-      case (t: Long, TimestampNTZType) =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .microsToLocalDateTime(t)
-      case (x, _) => x
+    // strings arrive decoded (the writer's lossless-UTF-8 check);
+    // every other envelope value is Catalyst-internal
+    def external(v: Any, dt: DataType): Any = v match {
+      case null | _: String => v
+      case _ => CatalystTypeConverters.convertToScala(v, dt)
     }
 
     val entrySchema = StructType(
@@ -244,23 +229,29 @@ object GraftParquetIO {
 
 class GraftDataWriterFactory(root: String, commitDir: String,
     schemaJson: String, statsCols: Seq[String],
-    bloomCols: Seq[String] = Nil, bloomBits: Int = 0)
+    bloomCols: Seq[String], bloomBits: Int,
+    conf: Option[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new GraftDataWriter(root, commitDir,
       DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      statsCols, partitionId, taskId, bloomCols, bloomBits)
+      statsCols, partitionId, taskId, bloomCols, bloomBits, conf)
 }
 
 /** One parquet file per (partition, task attempt); attempt-unique
   * names make speculative/retried tasks safe — only files named in a
-  * COMMITTED message reach the manifest. */
+  * COMMITTED message reach the manifest. Every column of `statsCols`
+  * and `bloomCols` must be in `schema`; `bloomBits` is the declared
+  * bloom width, a floor ([[graft.functions.BloomFilterIndex.bitsFor]]);
+  * `conf` ([[GraftParquetIO.rootConf]]) resolves a root with a scheme. */
 class GraftDataWriter(root: String, commitDir: String,
     schema: StructType, statsCols: Seq[String],
     partitionId: Int, taskId: Long,
-    bloomCols: Seq[String] = Nil, bloomBits: Int = 0)
+    bloomCols: Seq[String] = Nil, bloomBits: Int = 0,
+    conf: Option[SerializableConfiguration] = None)
     extends DataWriter[InternalRow] {
+  import graft.functions.BloomFilterIndex
 
   private val fileName =
     f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID.toString.take(8)}.parquet"
@@ -272,14 +263,20 @@ class GraftDataWriter(root: String, commitDir: String,
   // FileFormatWriter, and with the full Spark type system (arrays,
   // maps, structs, decimals), not just scalars.
   private val writer =
-    GraftParquetIO.internalRowWriter(s"$root/$relPath", schema)
+    GraftParquetIO.internalRowWriter(s"$root/$relPath", schema, conf)
 
   private var rows = 0L
-  // stats envelope per stats column, tracked over INTERNAL values
-  // (UTF8String for strings → binary collation order, matching the
-  // manifest stats Spark's min/max would compute)
+  // stats envelope per stats column, tracked over INTERNAL values by
+  // the column type's interpreted ordering — Spark SQL's own (binary
+  // collation for strings, unsigned bytes for binary, NaN greatest),
+  // the one the zone maps test against
   private val statIdx: Array[Int] =
     statsCols.map(c => schema.fieldIndex(c)).toArray
+  private val statGet = statIdx.map(i =>
+    InternalRow.getAccessor(schema(i).dataType, nullable = false))
+  private val statOrd = statIdx.map(i =>
+    org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(schema(i).dataType))
   private val mins = Array.fill[Any](statIdx.length)(null)
   private val maxs = Array.fill[Any](statIdx.length)(null)
   // per-file null count per stats column — the STATS-PRESENT marker:
@@ -289,46 +286,30 @@ class GraftDataWriter(root: String, commitDir: String,
   private val nullsArr = Array.fill[Long](statIdx.length)(0L)
   // per-file bloom maintenance rides the write too: the hash is the
   // SAME Catalyst XxHash64 the read side's probe literal folds through
-  // (type-identical internal values → identical bits), so files
-  // written by the SQL row-level / streaming paths keep the table's
-  // index instead of degrading it to null
-  private val bloomIdx: Array[Int] = bloomCols
-    .filter(schema.fieldNames.contains).map(schema.fieldIndex).toArray
-  private val bloomHash = bloomIdx.map(i =>
+  // (type-identical internal values → identical bits). The width
+  // follows the file's own row count (BloomFilterIndex.bitsFor), so it
+  // is known when the file closes: until then each column buffers its
+  // hashes, 8 B a row, and once the width reaches its cap (10·rows
+  // past MaxBits, or a declared width at or above it) the bits are set
+  // in place and the buffer is dropped.
+  private val bloomHash = bloomCols.map { c =>
+    val i = schema.fieldIndex(c)
     org.apache.spark.sql.catalyst.expressions.XxHash64(
       Seq(org.apache.spark.sql.catalyst.expressions.BoundReference(
-        i, schema(i).dataType, schema(i).nullable)), 42L))
-  private val blooms: Array[Array[Long]] =
-    if (bloomBits <= 0) Array.empty
-    else bloomIdx.map(_ => new Array[Long](bloomBits / 64))
+        i, schema(i).dataType, schema(i).nullable)), 42L)
+  }.toArray
+  private val bloomCap = math.max(bloomBits, BloomFilterIndex.MaxBits)
+  private var hashes = Array.fill(bloomHash.length)(new Array[Long](64))
+  private var blooms: Array[Array[Long]] = null
 
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long) => x < y
-    case (x: Int, y: Int) => x < y
-    case (x: Short, y: Short) => x < y
-    case (x: Byte, y: Byte) => x < y
-    // Double/Float via j.l.*.compare, NOT primitive '<': primitive
-    // comparisons with NaN are always false, so NaN would never enter
-    // the envelope and the zone maps would prune files that contain it.
-    // java.lang ordering ranks NaN greatest — same as Spark SQL's —
-    // so a NaN-bearing file records max=NaN and survives 'd = NaN'
-    // and upper-range predicates. (-0.0 < 0.0 under this order is a
-    // harmless widening of the envelope.)
-    case (x: Double, y: Double) => java.lang.Double.compare(x, y) < 0
-    case (x: Float, y: Float) => java.lang.Float.compare(x, y) < 0
-    case (x: Boolean, y: Boolean) => !x && y
-    case (x: UTF8String, y: UTF8String) => x.compareTo(y) < 0
-    // unsigned lexicographic, shorter-prefix-first — Spark's
-    // BinaryType ordering (PhysicalBinaryType)
-    case (x: Array[Byte], y: Array[Byte]) =>
-      var i = 0
-      val n = math.min(x.length, y.length)
-      var r = 0
-      while (r == 0 && i < n) {
-        r = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff); i += 1
-      }
-      (if (r == 0) x.length - y.length else r) < 0
-    case (x, y) => sys.error(s"gtable stats: incomparable $x / $y")
+  private def settleBlooms(bits: Int): Unit = {
+    blooms = hashes.map { hs =>
+      val b = new Array[Long](bits / 64)
+      var i = 0L
+      while (i < rows) { BloomFilterIndex.setBits(b, hs(i.toInt)); i += 1 }
+      b
+    }
+    hashes = null
   }
 
   /** Metadata-aware variant (Spark's DataAndMetadataWritingSparkTask
@@ -343,39 +324,40 @@ class GraftDataWriter(root: String, commitDir: String,
       s"gtable writer: row arity ${row.numFields} != schema " +
         s"${schema.length} — unprojected rewrite row reached the writer")
     writer.write(row)
-    rows += 1
     var s = 0
     while (s < statIdx.length) {
       val ci = statIdx(s)
       if (row.isNullAt(ci)) nullsArr(s) += 1
-      if (!row.isNullAt(ci)) {
-        val v: Any = schema(ci).dataType match {
-          case LongType | TimestampType | TimestampNTZType => row.getLong(ci)
-          case IntegerType | DateType => row.getInt(ci)
-          case ShortType => row.getShort(ci)
-          case ByteType => row.getByte(ci)
-          case DoubleType => row.getDouble(ci)
-          case FloatType => row.getFloat(ci)
-          case BooleanType => row.getBoolean(ci)
-          case StringType => row.getUTF8String(ci).clone()
-          case BinaryType => row.getBinary(ci).clone()
-          case other => sys.error(s"gtable stats: unsupported $other")
-        }
-        if (mins(s) == null || lt(v, mins(s))) mins(s) = v
-        if (maxs(s) == null || lt(maxs(s), v)) maxs(s) = v
+      else {
+        val v = statGet(s)(row, ci)
+        if (mins(s) == null || statOrd(s).lt(v, mins(s)))
+          mins(s) = InternalRow.copyValue(v)
+        if (maxs(s) == null || statOrd(s).gt(v, maxs(s)))
+          maxs(s) = InternalRow.copyValue(v)
       }
       s += 1
     }
-    var bI = 0
-    while (bI < blooms.length) {
-      graft.functions.BloomFilterIndex.setBits(blooms(bI),
-        bloomHash(bI).eval(row).asInstanceOf[Long])
-      bI += 1
+    var b = 0
+    while (b < bloomHash.length) {
+      val h = bloomHash(b).eval(row).asInstanceOf[Long]
+      if (blooms != null) BloomFilterIndex.setBits(blooms(b), h)
+      else {
+        if (rows == hashes(b).length)
+          hashes(b) = java.util.Arrays.copyOf(hashes(b), 2 * hashes(b).length)
+        hashes(b)(rows.toInt) = h
+      }
+      b += 1
     }
+    rows += 1
+    if (blooms == null && bloomHash.nonEmpty &&
+        BloomFilterIndex.bitsFor(rows, bloomBits) == bloomCap)
+      settleBlooms(bloomCap)
   }
 
   override def commit(): WriterCommitMessage = {
     writer.close()
+    if (blooms == null)
+      settleBlooms(BloomFilterIndex.bitsFor(rows, bloomBits))
     // bounded string/binary envelopes (round 13 — see
     // [[graft.format.StatsTrunc]]): applied once at commit so the
     // per-row tracker stays comparison-only; the flag marks the
@@ -423,15 +405,16 @@ class GraftDataWriter(root: String, commitDir: String,
     }
     // the file's on-disk size rides the commit message → manifest
     // `size_bytes`, which planning bin-packs scan partitions by and
-    // the CBO sums for post-prune sizeInBytes. Local roots stat via
-    // java.io (free); scheme'd roots through the Hadoop FS.
-    val sizeBytes: Long = {
-      val f = new java.io.File(s"$root/$relPath")
-      if (f.isFile) f.length()
-      else try {
-        val p = new org.apache.hadoop.fs.Path(s"$root/$relPath")
-        p.getFileSystem(GraftParquetIO.freshConf).getFileStatus(p).getLen
-      } catch { case _: Exception => -1L }
+    // the CBO sums for post-prune sizeInBytes
+    val path = s"$root/$relPath"
+    val sizeBytes: Long = conf match {
+      case None =>
+        val f = new java.io.File(path)
+        if (f.isFile) f.length() else -1L
+      case Some(c) =>
+        try { val (fs, p) = GraftParquetIO.fsPath(path, c)
+          fs.getFileStatus(p).getLen }
+        catch { case _: java.io.IOException => -1L }
     }
     GraftWriteCommit(relPath, rows, ext(mins), ext(maxs), blooms,
       nullsArr, sizeBytes, truncs)
@@ -439,8 +422,7 @@ class GraftDataWriter(root: String, commitDir: String,
 
   override def abort(): Unit = {
     try writer.close() catch { case _: Exception => () }
-    new java.io.File(s"$root/$relPath").delete()
-    ()
+    GraftParquetIO.delete(s"$root/$relPath", conf)
   }
 
   override def close(): Unit = ()
@@ -464,13 +446,13 @@ class GraftReplaceFilesBatchWrite(root: String, writeSchema: StructType,
     GraftParquetIO.physSchema(root, writeSchema)
   private lazy val (bloomCols, bloomBits) =
     GraftParquetIO.bloomConfig(root, physWrite)
+  private lazy val conf = GraftParquetIO.rootConf(root)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$root/$commitDir"))
+    GraftParquetIO.mkdirs(s"$root/$commitDir", conf)
     new GraftDataWriterFactory(root, commitDir, physWrite.json,
-      statsCols, bloomCols, bloomBits)
+      statsCols, bloomCols, bloomBits, conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -483,14 +465,8 @@ class GraftReplaceFilesBatchWrite(root: String, writeSchema: StructType,
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case m: GraftWriteCommit => m }
-      .foreach(m => new java.io.File(s"$root/${m.relPath}").delete())
-    val d = new java.io.File(s"$root/$commitDir")
-    Option(d.listFiles()).foreach(_.foreach(_.delete()))
-    d.delete()
-    ()
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftParquetIO.delete(s"$root/$commitDir", conf)
 }
 
 /** `df.writeStream.format("gtable").start(root)` — the STREAMING half
@@ -514,22 +490,17 @@ class GraftStreamingWrite(root: String, writeSchema: StructType,
     GraftParquetIO.physSchema(root, writeSchema)
   private lazy val bloomConf =
     GraftParquetIO.bloomConfig(root, physWrite)
+  private lazy val conf = GraftParquetIO.rootConf(root)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$root/$commitDir"))
-    val schemaJson = physWrite.json
-    val stats = statsCols
-    val (bCols, bBits) = bloomConf
-    val r = root
-    val cd = commitDir
+    GraftParquetIO.mkdirs(s"$root/$commitDir", conf)
+    val batch = new GraftDataWriterFactory(root, commitDir,
+      physWrite.json, statsCols, bloomConf._1, bloomConf._2, conf)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        new GraftDataWriter(r, cd,
-          DataType.fromJson(schemaJson).asInstanceOf[StructType],
-          stats, partitionId, taskId, bCols, bBits)
+        batch.createWriter(partitionId, taskId)
     }
   }
 
@@ -545,9 +516,7 @@ class GraftStreamingWrite(root: String, writeSchema: StructType,
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
+      messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: GraftWriteCommit => m }
-      .foreach(m => new java.io.File(s"$root/${m.relPath}").delete())
-    ()
-  }
+      .foreach(m => GraftParquetIO.delete(s"$root/${m.relPath}", conf))
 }

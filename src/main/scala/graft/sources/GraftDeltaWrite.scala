@@ -86,15 +86,15 @@ class GraftDeltaBatchWrite(root: String, info: LogicalWriteInfo,
     GraftParquetIO.physSchema(root, dataSchema)
   private lazy val bloomConf =
     GraftParquetIO.bloomConfig(root, physData)
+  private lazy val conf = GraftParquetIO.rootConf(root)
   private val rowIdSchema: StructType = info.rowIdSchema()
     .orElse(new StructType())
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
       : DeltaWriterFactory = {
     if (dataSchema.nonEmpty)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$root/$commitDir"))
-    val r = root; val cd = commitDir
+      GraftParquetIO.mkdirs(s"$root/$commitDir", conf)
+    val r = root; val cd = commitDir; val c = conf
     val dJson = physData.json; val idJson = rowIdSchema.json
     val stats = statsCols
     val (bCols, bBits) =
@@ -105,7 +105,7 @@ class GraftDeltaBatchWrite(root: String, info: LogicalWriteInfo,
         new GraftDeltaWriter(r, cd,
           DataType.fromJson(dJson).asInstanceOf[StructType],
           DataType.fromJson(idJson).asInstanceOf[StructType],
-          stats, partitionId, taskId, bCols, bBits)
+          stats, partitionId, taskId, bCols, bBits, c)
     }
   }
 
@@ -129,14 +129,8 @@ class GraftDeltaBatchWrite(root: String, info: LogicalWriteInfo,
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case GraftDeltaCommit(_, Some(f)) => f }
-      .foreach(m => new java.io.File(s"$root/${m.relPath}").delete())
-    val d = new java.io.File(s"$root/$commitDir")
-    Option(d.listFiles()).foreach(_.foreach(_.delete()))
-    d.delete()
-    ()
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftParquetIO.delete(s"$root/$commitDir", conf)
 }
 
 /** Executor half: inserts ride the same stats-carrying parquet writer
@@ -145,7 +139,8 @@ class GraftDeltaBatchWrite(root: String, info: LogicalWriteInfo,
 class GraftDeltaWriter(root: String, commitDir: String,
     dataSchema: StructType, rowIdSchema: StructType,
     statsCols: Seq[String], partitionId: Int, taskId: Long,
-    bloomCols: Seq[String] = Nil, bloomBits: Int = 0)
+    bloomCols: Seq[String], bloomBits: Int,
+    conf: Option[org.apache.spark.util.SerializableConfiguration])
     extends DeltaWriter[InternalRow] {
 
   private val fileIdx = rowIdSchema.fieldNames.indexOf("_file")
@@ -160,7 +155,7 @@ class GraftDeltaWriter(root: String, commitDir: String,
   private def writer: GraftDataWriter = {
     if (inner == null)
       inner = new GraftDataWriter(root, commitDir, dataSchema,
-        statsCols, partitionId, taskId, bloomCols, bloomBits)
+        statsCols, partitionId, taskId, bloomCols, bloomBits, conf)
     inner
   }
 

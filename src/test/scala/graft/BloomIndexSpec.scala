@@ -213,4 +213,62 @@ class BloomIndexSpec extends AnyFunSuite with TempDirs {
       s"auto-widened blooms at ~1% fpp must prune most missing " +
         s"probes; only $pruned/20 pruned (saturation?)")
   }
+
+  test("every writer sizes a file's bloom from its own rows: a SQL " +
+      "UPDATE rewrite and a streaming append get the width append " +
+      "gives, and missing values prune") {
+    val wh = tempDir("graft_bloom_width_")
+    spark.conf.set("spark.sql.catalog.bwd",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.bwd.warehouse", wh)
+    // 200k rows in one file; u scrambles k over [0, 200000)
+    val big = spark.range(1000000L, 1200000L, 1, 1).select(
+      col("id").as("k"), (col("id") * 40503L % 200000L).as("u"))
+    val src = tempDir("graft_bloom_width_src_")
+    big.write.mode("overwrite").parquet(src)
+    def created(name: String): GraftTable = {
+      spark.sql(s"""CREATE TABLE bwd.$name
+                    TBLPROPERTIES('statsCols'='k', 'bloom.cols'='u',
+                                  'bloom.bits'='16384')
+                    AS SELECT id AS k, id AS u FROM RANGE(0, 10, 1, 1)""")
+      GraftTable.forPath(spark, s"$wh/$name")
+    }
+    // width (bits) of the one 200k-row file, and how many of 10
+    // missing values plan a file
+    def bigWidth(t: GraftTable): Long = t.manifest()
+      .where(col("row_count") === 200000L)
+      .select(size(col("bloom_u"))).as[Int].collect().toSeq match {
+        case Seq(w) => w * 64L
+        case ws => fail(s"expected one 200k-row file, got $ws")
+      }
+    def planning(t: GraftTable): Int = (200001L to 200010L).count { v =>
+      val (r, planned, _) = t.prunedWhere(col("u") === v)
+      assert(r.count() == 0)
+      planned > 0
+    }
+
+    val t = created("upd")
+    t.append(big, numFiles = 1)
+    val appended = bigWidth(t)
+    // nextPow2(10 · 200,000) bits, past the declared 2^14
+    assert(appended == (1L << 21))
+    spark.sql("UPDATE bwd.upd SET k = k + 1 WHERE k >= 1000000")
+    val updated = GraftTable.forPath(spark, s"$wh/upd")
+    assert(updated.read().where(col("k") === 1200000L).count() == 1)
+    assert(bigWidth(updated) == appended,
+      s"UPDATE rewrote the file with a ${bigWidth(updated)}-bit bloom")
+    assert(planning(updated) <= 1)
+
+    val streamed = created("str")
+    spark.readStream.schema("k LONG, u LONG").parquet(src)
+      .writeStream.format("gtable")
+      .option("statsCols", "k")
+      .option("checkpointLocation", tempDir("graft_bloom_width_ckpt_"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(s"$wh/str").awaitTermination()
+    val st = GraftTable.forPath(spark, s"$wh/str")
+    assert(bigWidth(st) == appended,
+      s"the stream wrote a ${bigWidth(st)}-bit bloom")
+    assert(planning(st) <= 1)
+  }
 }

@@ -14,12 +14,11 @@ import graft.format.{GraftTable, HadoopLogStore, LogStore, PosixLogStore}
   * table lifecycle running through the Hadoop store, and the commit
   * race resolving to one winner through its rename-without-overwrite
   * create. */
-class LogStoreSpec extends AnyFunSuite {
+class LogStoreSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_logstore_").toString
+  private def tmp(): String = tempDir("graft_logstore_")
 
   private def hadoopStore = new HadoopLogStore(() =>
     spark.sparkContext.hadoopConfiguration)

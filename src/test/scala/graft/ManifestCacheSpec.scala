@@ -15,12 +15,11 @@ import graft.format.{CommitProfile, GraftTable}
   * its data jobs only: reads take the recorded schema (no footer
   * inference job) and the survivors' and replacement's entries are
   * written as one driver-local manifest. */
-class ManifestCacheSpec extends AnyFunSuite {
+class ManifestCacheSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_manifest_cache_").toString + "/t"
+  private def tmp(): String = tempDir("graft_manifest_cache_") + "/t"
 
   private def manifestRows(t: GraftTable): Set[Seq[Any]] =
     t.manifest().select(col("path"), col("row_count"),

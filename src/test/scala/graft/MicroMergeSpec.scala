@@ -13,12 +13,11 @@ import graft.format.GraftTable
   * equality diverges from SQL join equality on -0.0/NaN) must fall
   * back to the generic path and still merge correctly.
   */
-class MicroMergeSpec extends AnyFunSuite {
+class MicroMergeSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_micromerge_").toString + "/t"
+  private def tmp(): String = tempDir("graft_micromerge_") + "/t"
 
   /** Jobs launched while `f` runs (listener-based; test-only). */
   private def countJobs(f: => Unit): Int = {

@@ -4,14 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.format.GraftTable
 
-/** ONE-PASS commit path (round 12): all-scalar, bloom-less writes ride
-  * the connector's map-side-stats writer, so a commit's only Spark job
-  * is the data write itself — stats come back in commit messages and
+/** ONE-PASS commit path: every write rides the connector's
+  * map-side-stats writer, so a commit's only Spark job is the data
+  * write itself — stats and blooms come back in commit messages and
   * the delta-sized manifest is written driver-side. Pins (a) the job
-  * count, (b) stats equivalence with a ground-truth aggregate across
-  * the supported scalar types incl. nulls, and (c) that bloom-indexed
-  * and array-carrying tables still take the read-back fallback and
-  * stay correct. */
+  * count, with and without blooms, (b) stats equivalence with a
+  * ground-truth aggregate across scalar and decimal types incl.
+  * nulls, (c) bloom-indexed and array-carrying tables, and (d) a root
+  * with a scheme writing what a plain path writes. */
 class OnePassWriteSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
@@ -27,21 +27,35 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
     spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
   }
 
-  test("an append on a scalar bloom-less table runs as ONE Spark job " +
-      "(write+stats fused, manifest written driver-side)") {
-    val root = tmp()
-    val t = GraftTable.create(spark, root,
-      (1L to 100L).toDF("k"), Seq("k"), numFiles = 2)
+  /** Jobs a 10-row append runs on a 100-row table indexing
+    * `bloomCols`; the table holds 110 rows after it. */
+  private def smallAppendJobs(bloomCols: Seq[String]): Int = {
+    val t = GraftTable.create(spark, tmp(),
+      (1L to 100L).toDF("k"), Seq("k"), numFiles = 2,
+      bloomCols = bloomCols)
     val jobs = jobsDuring {
       t.append((101L to 110L).toDF("k"), numFiles = 1)
     }
+    assert(t.read().count() == 110)
+    jobs
+  }
+
+  test("an append on a scalar bloom-less table runs as ONE Spark job " +
+      "(write+stats fused, manifest written driver-side)") {
+    val jobs = smallAppendJobs(Nil)
     // the data write is ONE action; AQE materializes its repartition
     // shuffle stage as a separate tracked job, so the budget is 2.
     // The pre-round-12 path ran 5+ (write, schema inference, stats
     // re-read aggregate, manifest write, manifest count read-back).
     assert(jobs <= 2,
       s"a small append must cost only the data-write action, ran $jobs")
-    assert(t.read().count() == 110)
+  }
+
+  test("an append on a bloom-indexed table keeps the same job budget " +
+      "(blooms are built by the writer)") {
+    val jobs = smallAppendJobs(Seq("k"))
+    assert(jobs <= 2,
+      s"a small append must cost only the data-write action, ran $jobs")
   }
 
   test("one-pass manifest stats equal a ground-truth aggregate over " +
@@ -54,9 +68,10 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
              CONCAT('s', LPAD(CAST(id AS STRING), 3, '0')) AS s,
              DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS dt,
              TIMESTAMP'2024-06-01 12:00:00' + make_interval(0,0,0,0,0,0, id) AS ts,
-             CAST(NULL AS LONG)                          AS all_null
+             CAST(NULL AS LONG)                          AS all_null,
+             CAST(id * 1.25 - 100 AS DECIMAL(18,4))      AS dec
       FROM RANGE(1, 201)""")
-    val stats = Seq("k", "i", "d", "s", "dt", "ts", "all_null")
+    val stats = Seq("k", "i", "d", "s", "dt", "ts", "all_null", "dec")
     val t = GraftTable.create(spark, root, df, stats, numFiles = 3)
     val m = t.manifest()
     // per-file envelopes must bracket exactly the global min/max when
@@ -65,11 +80,13 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
       sum("row_count"), min("min_k"), max("max_k"), min("min_i"),
       max("max_i"), min("min_d"), max("max_d"), min("min_s"),
       max("max_s"), min("min_dt"), max("max_dt"), min("min_ts"),
-      max("max_ts"), min("min_all_null"), max("max_all_null")).head()
+      max("max_ts"), min("min_all_null"), max("max_all_null"),
+      min("min_dec"), max("max_dec")).head()
     val want = df.agg(
       count(lit(1)), min("k"), max("k"), min("i"), max("i"), min("d"),
       max("d"), min("s"), max("s"), min("dt"), max("dt"), min("ts"),
-      max("ts"), min("all_null"), max("all_null")).head()
+      max("ts"), min("all_null"), max("all_null"), min("dec"),
+      max("dec")).head()
     assert(got == want,
       s"one-pass envelopes drifted from ground truth:\n$got\n$want")
     assert(m.count() == 3)
@@ -145,8 +162,8 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
     val root = tmp()
     val t = GraftTable.create(spark, root,
       (1L to 100L).toDF("k"), Seq("k"), numFiles = 2)
-    // a many-small-file append (> SmallCommitFiles worth of partitions;
-    // empty ones write nothing) still manifests driver-side
+    // a many-small-file append (70 partitions; empty ones write
+    // nothing) still manifests driver-side
     t.append((101L to 200L).toDF("k"), numFiles = 70)
     t.deleteWhere(col("k") % 10 === 0) // COW rewrite of one-pass files
     t.compact(numFiles = 2)
@@ -154,5 +171,39 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
     assert(t.manifest().agg(sum("row_count")).as[Long].head() == 180L)
     assert(t.read().agg(min("k"), max("k")).head() ==
       org.apache.spark.sql.Row(1L, 199L))
+  }
+
+  test("a file:// root writes what a plain path writes: create, " +
+      "append, replaceWhere and a SQL UPDATE give equal manifests") {
+    // one file per slice
+    def rows(lo: Long, hi: Long, slices: Int = 1) =
+      spark.range(lo, hi, 1, slices).select(
+      col("id").as("k"),
+      concat(lit("name-"), lpad(col("id").cast("string"), 5, "0"))
+        .as("s"),
+      (col("id") * 7919L % 3600L).as("u"))
+    def writes(cat: String, wh: String): Seq[org.apache.spark.sql.Row] = {
+      spark.conf.set(s"spark.sql.catalog.$cat",
+        classOf[graft.sources.GraftCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val root = s"$wh/t"
+      val t = GraftTable.create(spark, root, rows(0, 3000, 3),
+        Seq("k", "s"), numFiles = 0, bloomCols = Seq("u"),
+        bloomBits = 1 << 10)
+      t.append(rows(3000, 3500), numFiles = 1)
+      t.replaceWhere(col("k") >= 3400, rows(3400, 3600), numFiles = 1)
+      spark.sql(s"UPDATE $cat.t SET s = concat(s, '-x') WHERE k < 500")
+      val m = GraftTable.forPath(spark, root)
+      assert(m.read().count() == 3600)
+      assert(m.read().where(col("s").endsWith("-x")).count() == 500)
+      m.manifest().select("row_count", "size_bytes", "min_k", "max_k",
+          "nulls_k", "min_s", "max_s", "nulls_s", "trunc_s", "bloom_u")
+        .orderBy("min_k").collect().toSeq
+    }
+    val plain = writes("plainfs", tempDir("graft_onepass_plain_"))
+    val schemed =
+      writes("schemefs", "file://" + tempDir("graft_onepass_scheme_"))
+    assert(plain.map(_.getLong(0)).sum == 3600)
+    assert(schemed == plain)
   }
 }

@@ -13,12 +13,11 @@ import graft.sources.GraftTableSource
   * the target); clustered writes must make plain INSERTs produce
   * disjoint per-file stats envelopes so zone-map pruning works with
   * no per-job ceremony. */
-class RestoreClusteredSpec extends AnyFunSuite {
+class RestoreClusteredSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_restore_").toString + "/t"
+  private def tmp(): String = tempDir("graft_restore_") + "/t"
 
   private def dataFiles(root: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -73,8 +72,7 @@ class RestoreClusteredSpec extends AnyFunSuite {
 
   test("write.cluster-by: CTAS and INSERT INTO range-cluster + sort, " +
       "per-commit file envelopes are disjoint, windowed scans prune") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_cluster_wh_").toString
+    val wh = tempDir("graft_cluster_wh_")
     spark.conf.set("spark.sql.catalog.rcs",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.rcs.warehouse", wh)

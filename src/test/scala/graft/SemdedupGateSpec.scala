@@ -11,13 +11,12 @@ import graft.operators.SemdedupGate
   * re-posts are really caught as fuzzy dups, verdict/canonical
   * invariants, batch×index-sized access, crash-window exactly-once,
   * and full-feed replay as a no-op. */
-class SemdedupGateSpec extends AnyFunSuite {
+class SemdedupGateSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_semdedup_").toString
+  private def tmp(): String = tempDir("graft_semdedup_")
 
   private def runPipeline(): (String, String, String, String) = {
     val base = tmp()

@@ -10,18 +10,16 @@ import graft.format.GraftTable
   * immutability, every read surface (API, SQL VERSION AS OF 'name',
   * path option), and the vacuum protection that makes the pin a
   * promise rather than a race against retention. */
-class TagSpec extends AnyFunSuite {
+class TagSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_tag_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_tag_spec_") + "/t"
 
   test("a tag pins a version across mutations: API read, SQL VERSION " +
       "AS OF 'name', and the path option all resolve it; tags are " +
       "immutable until deleted") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_tag_wh_").toString
+    val wh = tempDir("graft_tag_wh_")
     spark.conf.set("spark.sql.catalog.tagc",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.tagc.warehouse", wh)
@@ -90,8 +88,7 @@ class TagSpec extends AnyFunSuite {
 
   test("tags carry provenance — message and creation time ride the " +
       "tag file and surface through CALL system.tags") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_tag_wh2_").toString
+    val wh = tempDir("graft_tag_wh2_")
     spark.conf.set("spark.sql.catalog.tagp",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.tagp.warehouse", wh)
@@ -155,8 +152,7 @@ class TagSpec extends AnyFunSuite {
       "(VERDICT r12 #5): the feed is reachable without physical " +
       "paths, and bounds resolve timestampAsOf-style") {
     GraftExtensions.register(spark)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_tvfname_").toString
+    val wh = tempDir("graft_tvfname_")
     spark.conf.set("spark.sql.catalog.tvfn",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.tvfn.warehouse", wh)

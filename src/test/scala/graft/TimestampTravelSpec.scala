@@ -12,12 +12,11 @@ import graft.sources.GraftTableSource
   * LIST pages 1000 keys/call, making the old listing a thousand
   * requests per resolution. Pre-r14 records and vacuum holes fall
   * back to the exact listing walk. */
-class TimestampTravelSpec extends AnyFunSuite {
+class TimestampTravelSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_tstravel_").toString + "/t"
+  private def tmp(): String = tempDir("graft_tstravel_") + "/t"
 
   /** Delegating store counting every remote-shaped call. */
   private class CountingStore extends LogStore {

@@ -12,12 +12,11 @@ import graft.format.{GraftTable, LogStore, PosixLogStore}
   * walks forward to the real top, and a missing / corrupt / expired
   * hint falls back to the full listing. Correctness never depends on
   * the hint. */
-class VersionHintSpec extends AnyFunSuite {
+class VersionHintSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_hint_spec_").toString + "/t"
+  private def tmp(): String = tempDir("graft_hint_spec_") + "/t"
 
   private def hintPath(root: String) = s"$root/_log/_latest.hint"
 

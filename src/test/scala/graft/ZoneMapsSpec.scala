@@ -100,6 +100,9 @@ class ZoneMapsSpec extends AnyFunSuite with TempDirs {
     val t = keyed(tempDir("graft_zonemaps_"), files = 2)
     t.deleteWhere(col("k") > 0)
     assert(t.fileCount() == 0)
+    val read = t.read()
+    assert(read.columns.toSeq == Seq("k", "s"))
+    assert(read.where(col("k") === 10).count() == 0)
     val (rows, opened, total) = t.prunedWhere(col("k") === 10)
     assert(opened == 0 && total == 0)
     assert(rows.columns.toSeq == Seq("k", "s") && rows.count() == 0)
