@@ -178,10 +178,10 @@ class OnePassWriteSpec extends AnyFunSuite with TempDirs {
     // one file per slice
     def rows(lo: Long, hi: Long, slices: Int = 1) =
       spark.range(lo, hi, 1, slices).select(
-      col("id").as("k"),
-      concat(lit("name-"), lpad(col("id").cast("string"), 5, "0"))
-        .as("s"),
-      (col("id") * 7919L % 3600L).as("u"))
+        col("id").as("k"),
+        concat(lit("name-"), lpad(col("id").cast("string"), 5, "0"))
+          .as("s"),
+        (col("id") * 7919L % 3600L).as("u"))
     def writes(cat: String, wh: String): Seq[org.apache.spark.sql.Row] = {
       spark.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.GraftCatalog].getName)
